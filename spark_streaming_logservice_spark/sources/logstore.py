@@ -484,12 +484,15 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
     Overwrite is rejected like the reference's CreatableRelationProvider
     (SQL/LoghubSourceProvider.scala:147-176 allows Append/ErrorIfExists only).
 
-    Arrow path (r2): tasks receive ``pyarrow.RecordBatch``es — flattening to
-    wire strings runs as Arrow casts, and the contents map assembles from
-    numpy offset arithmetic; rows never materialize as Spark Row objects.
-    The one scalar loop kept on purpose is float/decimal formatting: the wire
-    format is Python/Java ``repr`` (``"3.0"``), where Arrow's cast prints
-    ``"3"`` — format parity beats the last drop of vectorization there.
+    Arrow path: tasks receive ``pyarrow.RecordBatch``es and no row becomes a
+    Python object. Flattening to wire strings runs as Arrow casts. Routing
+    hashes each distinct ``hashKeyColumn`` value once per batch and gathers
+    the shard ids back to rows (``pc.unique`` + ``pc.index_in``). One stable
+    argsort groups rows by shard, and the contents map is an Arrow ``take``
+    over the field-major concatenation of the wire columns, filtered by
+    validity. The one scalar loop kept on purpose is float/decimal
+    formatting: the wire format is Python/Java ``repr`` (``"3.0"``), where
+    Arrow's cast prints ``"3"`` — format parity beats vectorization there.
 
     Two-phase write: tasks stage parquet under ``_staging/<write_id>/``;
     driver-side commit() atomically renames exactly the staged files named in
@@ -530,7 +533,7 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
                 "be flattened to key/value)"
             )
         if isinstance(dt, T.StringType):
-            return col
+            return pc.cast(col, pa.string())  # large/view string → wire type
         if isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
             # repr-format parity with the row path (see class docstring)
             return pa.array(
@@ -574,7 +577,8 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
         salt = int.from_bytes(salt_src[:2], "big") & 0x7FF
         low21 = ((pid & 0x3FF) << 11) | salt
         fields = self.schema.fields
-        names = np.array([f.name for f in fields], dtype=object)
+        names = pa.array([f.name for f in fields], pa.string())
+        empty = pa.array([], pa.string())
         staged: list[str] = []
         total = 0
         for batch in iterator:
@@ -599,81 +603,73 @@ class LogstoreBatchWriter(DataSourceArrowWriter):
                 )
             else:
                 times = np.full(n, int(_time.time()), dtype="int64")
-            # shard routing
+            # shard routing: one md5 per distinct key, gathered back to rows;
+            # a null key routes as str(None) == "None"
             if self.hash_col is not None:
-                keys = pc.cast(batch.column(self.hash_col), pa.string()).to_pylist()
-                shards = np.fromiter(
-                    (stable_shard(str(k), self.n_shards) for k in keys),
+                keys = pc.cast(batch.column(self.hash_col), pa.string())
+                distinct = pc.unique(keys)
+                key_shard = np.array(
+                    [stable_shard(str(k), self.n_shards) for k in distinct.to_pylist()],
                     dtype="int64",
-                    count=n,
                 )
+                shards = key_shard[
+                    pc.index_in(keys, value_set=distinct).to_numpy(zero_copy_only=False)
+                ]
             else:
                 shards = np.full(n, pid % self.n_shards, dtype="int64")
             seqs = (
                 (_seq_range(n) + np.arange(n, dtype="int64")) << 21
             ) | low21
-            # contents map assembly: row-major flatten of the (n, k) value
-            # grid, masked by validity — vectorized offsets, no per-row dicts
+            # contents map: rows grouped by shard (stable, so row order holds
+            # within a shard); entry (row i, field j) sits at j*n + i of the
+            # field-major concatenation of the wire columns, kept when valid
+            order = np.argsort(shards, kind="stable")
             valid = np.stack(
                 [pc.is_valid(c).to_numpy(zero_copy_only=False) for c in cols], axis=1
-            )
-            vals = np.stack(
-                [c.to_numpy(zero_copy_only=False) for c in cols], axis=1
-            )
-            flat_mask = valid.reshape(-1)
-            flat_keys = np.tile(names, n)[flat_mask]
-            flat_vals = vals.reshape(-1)[flat_mask]
-            counts = valid.sum(axis=1)
+            )[order]
             offsets = np.zeros(n + 1, dtype="int32")
-            np.cumsum(counts, out=offsets[1:])
-            for shard in np.unique(shards):
-                m = shards == shard
-                idx = np.nonzero(m)[0]
-                # rebuild per-shard map offsets from the global ones
-                sh_counts = counts[idx]
-                sh_off = np.zeros(len(idx) + 1, dtype="int32")
-                np.cumsum(sh_counts, out=sh_off[1:])
-                take = np.concatenate(
-                    [np.arange(offsets[i], offsets[i + 1]) for i in idx]
-                ) if len(idx) else np.array([], dtype="int64")
-                contents = pa.MapArray.from_arrays(
-                    pa.array(sh_off, pa.int32()),
-                    pa.array(flat_keys[take], pa.string()),
-                    pa.array(flat_vals[take], pa.string()),
-                )
-                empty_tags = pa.MapArray.from_arrays(
-                    pa.array(np.zeros(len(idx) + 1, dtype="int32"), pa.int32()),
-                    pa.array([], pa.string()),
-                    pa.array([], pa.string()),
-                )
-                tbl = pa.table(
-                    {
-                        "seq": pa.array(seqs[idx], pa.int64()),
-                        "time": pa.array(times[idx], pa.int64()),
-                        "topic": pa.array([self.topic] * len(idx), pa.string()),
-                        "source": pa.array([self.source] * len(idx), pa.string()),
-                        "contents": contents,
-                        "tags": empty_tags,
-                    },
-                    schema=be.STORE_ARROW_SCHEMA,
-                )
-                staged.append(
-                    be.stage_table(self.path, self.write_id, int(shard), tbl)
-                )
+            np.cumsum(valid.sum(axis=1), out=offsets[1:])
+            contents = pa.MapArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                names.take(np.nonzero(valid)[1]),
+                pa.concat_arrays(cols).take((np.arange(len(fields)) * n + order[:, None])[valid]),
+            )
+            tbl = pa.table(
+                {
+                    "seq": pa.array(seqs[order], pa.int64()),
+                    "time": pa.array(times[order], pa.int64()),
+                    "topic": pa.array([self.topic] * n, pa.string()),
+                    "source": pa.array([self.source] * n, pa.string()),
+                    "contents": contents,
+                    "tags": pa.MapArray.from_arrays(
+                        pa.array(np.zeros(n + 1, dtype="int32"), pa.int32()), empty, empty
+                    ),
+                },
+                schema=be.STORE_ARROW_SCHEMA,
+            )
+            by_shard = shards[order]
+            starts = np.flatnonzero(np.diff(by_shard, prepend=-1))
+            for start, stop in zip(starts, np.append(starts[1:], n)):
+                part = tbl.slice(start, stop - start)
+                staged.append(be.stage_table(self.path, self.write_id, int(by_shard[start]), part))
             total += n
         return _WriteResult(rows=total, staged=staged)
 
-    def _publish(self, messages) -> None:
-        be.publish_staged(
-            self.path, [p for m in messages if m is not None for p in m.staged]
-        )
-        be.discard_staged(self.path, self.write_id)
-
     def commit(self, messages) -> None:
-        self._publish(messages)
+        be.publish_staged(self.path, _staged_paths(messages))
+        be.discard_staged(self.path, self.write_id)
 
     def abort(self, messages) -> None:
         be.discard_staged(self.path, self.write_id)
+
+
+def _staged_paths(messages) -> list[str]:
+    return [p for m in messages if m is not None for p in m.staged]
+
+
+def _write_ids(staged: list[str]) -> set[str]:
+    """Write ids named by staged paths (``<write_id>/<file>``)."""
+    return {p.split("/", 1)[0] for p in staged}
 
 
 class LogstoreStreamWriter(LogstoreBatchWriter, DataSourceStreamArrowWriter):
@@ -681,8 +677,10 @@ class LogstoreStreamWriter(LogstoreBatchWriter, DataSourceStreamArrowWriter):
     (SINK/LoghubSink.scala:24-39), hardened per SURVEY §7.4.5: the
     last-committed batchId persists in ``_commits/`` so re-delivery after
     restart is detected across driver processes, not just per sink instance.
-    Because tasks only stage (never publish), a redelivered batch is dropped
-    wholesale in commit() — zero duplicate rows, and task retries within a
+    Spark builds a fresh writer for every commit/abort, so ``self.write_id``
+    there is not the tasks' id: staging is swept by the write ids that the
+    commit messages' staged paths name. Because tasks only stage (never
+    publish), a redelivered batch is dropped wholesale in commit() — zero duplicate rows, and task retries within a
     batch are absorbed by publish-only-what-committed."""
 
     def __init__(self, schema: StructType, options, overwrite: bool) -> None:
@@ -733,11 +731,10 @@ class LogstoreStreamWriter(LogstoreBatchWriter, DataSourceStreamArrowWriter):
                 manifest = _json.load(f)
             staged = manifest.get("staged", [])
             be.replay_staged(self.path, staged)
-            for wid in {p.split("/", 1)[0] for p in staged}:
+            for wid in _write_ids(staged + _staged_paths(messages)):
                 be.discard_staged(self.path, wid)
-            be.discard_staged(self.path, self.write_id)
             return
-        staged = [p for m in messages if m is not None for p in m.staged]
+        staged = _staged_paths(messages)
         os.makedirs(self.commits_dir, exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as f:
@@ -753,10 +750,11 @@ class LogstoreStreamWriter(LogstoreBatchWriter, DataSourceStreamArrowWriter):
         # rows, and the batch must fail (and retry) loudly, not silently
         # commit a partial publish. Only the replay path skips moved files.
         be.publish_staged(self.path, staged)
-        be.discard_staged(self.path, self.write_id)
+        for wid in _write_ids(staged):
+            be.discard_staged(self.path, wid)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        # Staging must survive ONLY when this write's files are promised by
+        # Staging must survive ONLY when this attempt's files are promised by
         # the batch's manifest (marker written, publish failed — they are
         # the rows' only copy, and redelivery replays them). Any other
         # failed attempt — including a failed redelivery of an already-
@@ -764,20 +762,19 @@ class LogstoreStreamWriter(LogstoreBatchWriter, DataSourceStreamArrowWriter):
         # sweeps its staging, or it would leak forever.
         import json as _json
 
+        wids = _write_ids(_staged_paths(messages))
         marker = self._marker_path(batchId)
         keep = False
         if os.path.exists(marker):
             try:
                 with open(marker) as f:
                     manifest = _json.load(f)
-                keep = any(
-                    p.split("/", 1)[0] == self.write_id
-                    for p in manifest.get("staged", [])
-                )
+                keep = bool(wids & _write_ids(manifest.get("staged", [])))
             except (OSError, ValueError):
                 keep = True  # unreadable manifest: keep staging, stay safe
         if not keep:
-            be.discard_staged(self.path, self.write_id)
+            for wid in wids:
+                be.discard_staged(self.path, wid)
 
 
 class LogstoreDataSource(DataSource):

@@ -19,7 +19,9 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 import uuid
+from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.dataset as pa_ds
@@ -75,13 +77,50 @@ def shard_bounds(path: str, shard: int) -> tuple[int, int]:
     return (min(g[0] for g in groups), max(g[1] for g in groups) + 1)
 
 
+class _LruCache:
+    """Entry-count-bounded LRU map for the driver-side planner caches below.
+    ``get``/``put``/``pop`` each hold one lock: a hit's recency update and an
+    insert's eviction are read-modify-writes of one shared OrderedDict."""
+
+    def __init__(self, max_entries: int) -> None:
+        self.max_entries = max_entries
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def __contains__(self, key) -> bool:
+        return key in self._entries
+
+    def get(self, key):
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is not None:
+                self._entries.move_to_end(key)
+            return hit
+
+    def put(self, key, value) -> None:
+        with self._lock:
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.max_entries:
+                self._entries.popitem(last=False)
+
+    def pop(self, key) -> None:
+        with self._lock:
+            self._entries.pop(key, None)
+
+
 # Footer-stats cache: (path, shard) → (signature, stats). latestOffset
 # consults stats 3-4 times per lagging shard per trigger; the signature is
 # (dir mtime_ns, parquet file count) — the count guards against two
 # publishes landing within one filesystem timestamp granule (the store is
 # append-only, so a same-tick change always changes the count). Unchanged
-# shards cost one stat + one listdir instead of a full footer sweep.
-_STATS_CACHE: dict[tuple[str, int], tuple[tuple, list]] = {}
+# shards cost one stat + one listdir instead of a full footer sweep. An
+# entry is a list of per-row-group tuples; the LRU bound caps how many
+# (store, shard) pairs one planner process remembers.
+_STATS_CACHE = _LruCache(1024)
 
 
 def _row_group_stats2(path: str, shard: int) -> list[tuple[int, int, int, int, int]]:
@@ -115,7 +154,7 @@ def _row_group_stats2(path: str, shard: int) -> list[tuple[int, int, int, int, i
             else:
                 t_lo, t_hi = t_st.min, t_st.max
             out.append((s_st.min, s_st.max, t_lo, t_hi, g.num_rows))
-    _STATS_CACHE[key] = (sig, out)
+    _STATS_CACHE.put(key, (sig, out))
     return out
 
 
@@ -128,8 +167,9 @@ def _row_group_stats2(path: str, shard: int) -> list[tuple[int, int, int, int, i
 # 100 TB shard must NOT pin O(lag) driver memory, so above the cap the
 # footer-bounded scans below remain the path (identical results — the
 # index variants reproduce the exact same row windows, including the
-# footer-stats ceiling of the bounded histogram).
-_SEQ_TIME_CACHE: dict[tuple[str, int], tuple[tuple, object, object]] = {}
+# footer-stats ceiling of the bounded histogram). An entry holds up to
+# _SEQ_TIME_CACHE_MAX_ROWS × 16 bytes, so the entry count is bounded too.
+_SEQ_TIME_CACHE = _LruCache(256)
 _SEQ_TIME_CACHE_MAX_ROWS = 4_000_000
 
 
@@ -137,17 +177,19 @@ def _seq_time_index(path: str, shard: int):
     """(seqs, times) sorted by seq for the whole shard, or None when the
     shard exceeds ``_SEQ_TIME_CACHE_MAX_ROWS`` (callers fall back to the
     footer-bounded scans). Signature-keyed like ``_row_group_stats2``."""
+    key = (os.path.abspath(path), shard)
     groups = _row_group_stats2(path, shard)
     if not groups or sum(g[4] for g in groups) > _SEQ_TIME_CACHE_MAX_ROWS:
+        _SEQ_TIME_CACHE.pop(key)  # a shard that outgrew the cap frees its arrays
         return None
     d = shard_dir(path, shard)
     try:
         mtime = os.stat(d).st_mtime_ns
         names = [f for f in os.listdir(d) if f.endswith(".parquet")]
     except FileNotFoundError:
+        _SEQ_TIME_CACHE.pop(key)
         return None
     sig = (mtime, len(names))
-    key = (os.path.abspath(path), shard)
     hit = _SEQ_TIME_CACHE.get(key)
     if hit is not None and hit[0] == sig:
         return hit[1], hit[2]
@@ -161,7 +203,7 @@ def _seq_time_index(path: str, shard: int):
     times = tbl.column("time").to_numpy(zero_copy_only=False)
     order = np.argsort(seqs, kind="stable")
     seqs, times = seqs[order], times[order]
-    _SEQ_TIME_CACHE[key] = (sig, seqs, times)
+    _SEQ_TIME_CACHE.put(key, (sig, seqs, times))
     return seqs, times
 
 
