@@ -143,6 +143,17 @@ def _norm(path: str) -> str:
     return posixpath.normpath(path.replace("\\", "/")).rstrip("/")
 
 
+def _under_file(tree: dict, rel: str) -> bool:
+    """Some proper ancestor of ``rel`` is a FILE entry: POSIX resolves no
+    path through a file, so every op on ``rel`` raises NotADirectoryError."""
+    parts = rel.split("/") if rel else []
+    for i in range(1, len(parts)):
+        anc = tree.get("/".join(parts[:i]))
+        if anc is not None and anc.get("type") == "file":
+            return True
+    return False
+
+
 class NaiveObjectStoreBackend:
     """The contract-VIOLATING straight port (see module docstring). Duck-
     typed to storefs.Backend; ``crash_after_copies`` injects a crash after
@@ -379,11 +390,8 @@ class ManifestObjectStoreBackend:
         def mk(tree: dict) -> None:
             # an ancestor component that is a FILE makes the whole path
             # unmakeable — POSIX os.makedirs raises NotADirectoryError
-            parts = rel.split("/")
-            for i in range(1, len(parts)):
-                anc = tree.get("/".join(parts[:i]))
-                if anc is not None and anc.get("type") == "file":
-                    raise NotADirectoryError(path)
+            if _under_file(tree, rel):
+                raise NotADirectoryError(path)
             cur = tree.get(rel)
             if cur is not None and cur.get("type") == "file":
                 # POSIX os.makedirs raises FileExistsError over an
@@ -429,6 +437,8 @@ class ManifestObjectStoreBackend:
         rel = self._rel(path)
 
         def rm(tree: dict) -> None:
+            if _under_file(tree, rel):
+                raise NotADirectoryError(path)
             if self._is_dir_entry(tree, rel):
                 # os.remove over a directory raises IsADirectoryError
                 raise IsADirectoryError(path)
@@ -441,6 +451,8 @@ class ManifestObjectStoreBackend:
     def read_text(self, path: str) -> str:
         rel = self._rel(path)
         tree, _ = self._load()
+        if _under_file(tree["tree"], rel):
+            raise NotADirectoryError(path)
         entry = tree["tree"].get(rel)
         if entry is None or entry.get("type") != "file":
             raise FileNotFoundError(path)
@@ -451,6 +463,8 @@ class ManifestObjectStoreBackend:
         blob = self._put_blob(data.encode("utf-8"))
 
         def wr(tree: dict) -> None:
+            if _under_file(tree, rel):
+                raise NotADirectoryError(path)
             if self._is_dir_entry(tree, rel):
                 # open(dir, 'w') raises IsADirectoryError on POSIX
                 raise IsADirectoryError(path)
@@ -795,11 +809,8 @@ class HybridManifestBackend:
         rel = self._rel(path)
         tree, _ = self._load()
         tree = tree["tree"]
-        parts = rel.split("/") if rel else []
-        for i in range(1, len(parts)):
-            anc = tree.get("/".join(parts[:i]))
-            if anc is not None and anc.get("type") == "file":
-                raise NotADirectoryError(path)
+        if _under_file(tree, rel):
+            raise NotADirectoryError(path)
         entry = tree.get(rel)
         if entry is not None and entry.get("type") == "file":
             raise FileExistsError(path)
@@ -845,6 +856,10 @@ class HybridManifestBackend:
         rel = self._rel(path)
         tree, _ = self._load()
         tree = tree["tree"]
+        if _under_file(tree, rel):
+            # the ancestor file lives only in the manifest, so the
+            # physical os.remove below would say ENOENT, not ENOTDIR
+            raise NotADirectoryError(path)
         entry = tree.get(rel)
         if entry is not None and entry.get("type") == "file":
             def rm(t: dict) -> None:
@@ -863,6 +878,8 @@ class HybridManifestBackend:
         self._heal()
         rel = self._rel(path)
         tree, _ = self._load()
+        if _under_file(tree["tree"], rel):
+            raise NotADirectoryError(path)
         entry = tree["tree"].get(rel)
         if entry is not None and entry.get("type") == "file":
             return self.sim.get(entry["blob"]).decode("utf-8")
@@ -879,6 +896,8 @@ class HybridManifestBackend:
         blob = self._put_blob(data.encode("utf-8"))
 
         def wr(tree: dict) -> None:
+            if _under_file(tree, rel):
+                raise NotADirectoryError(path)
             entry = tree.get(rel)
             if (entry is not None and entry.get("type") == "dir") or any(
                 k.startswith(rel + "/") for k in tree

@@ -385,6 +385,21 @@ def test_makedirs_under_file_ancestor_raises_notadirectory(env):
         env.backend.makedirs(env.path("anc", "child"), exist_ok=True)
 
 
+def test_file_ops_under_file_ancestor_raise_notadirectory(env):
+    # a file published over a directory name: POSIX resolves nothing
+    # through it, so remove/read/write beneath it are ENOTDIR, not ENOENT
+    env.backend.write_text(env.path("src"), "x")
+    env.backend.publish_rename(env.path("src"), env.path("pub"))
+    under = env.path("pub", "b.txt")
+    with pytest.raises(NotADirectoryError):
+        env.backend.remove(under)
+    with pytest.raises(NotADirectoryError):
+        env.backend.read_text(under)
+    with pytest.raises(NotADirectoryError):
+        env.backend.write_text(under, "y")
+    assert env.backend.read_text(env.path("pub")) == "x"
+
+
 def test_write_and_replace_over_dir_raise_isadirectory(env):
     d = env.path("adir")
     env.backend.makedirs(d)
@@ -429,7 +444,7 @@ def test_remove_dir_and_rmtree_file_raise_posix_types(env):
 # property silently not existing
 _hyp = pytest.importorskip("hypothesis")
 if True:
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     # "d2" appears in BOTH sets on purpose (ADVICE r13): file/dir name
@@ -517,6 +532,9 @@ if True:
 
     @settings(max_examples=120, deadline=None)
     @given(ops=_OPS)
+    @example(ops=[
+        ("write", "d2", "x"), ("publish", "d2", "d0"), ("remove", "d0/b.txt"),
+    ])
     def test_posix_and_manifest_backends_observationally_equivalent(ops):
         import shutil
         import tempfile
