@@ -329,15 +329,16 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
         "sec": round(dt, 3),
         "rows_per_sec": round(n_events / dt, 1),
         # per-phase wall-clock across all batches: probe = dirty-shard
-        # min/max bounds job over the raw batch, write = the one merged-
-        # output Spark job (base ∪ delta re-aggregate), publish = marker +
-        # renames. Measured in isolation (r8, fresh JVM, core section only)
-        # so the figure and this breakdown are trustworthy vs the r7 run,
+        # distinct over the cached minute partials (the batch's one scan),
+        # write = the one merged-output Spark job (base ∪ delta
+        # re-aggregate, from the cache), publish = marker + renames.
+        # Measured in isolation (r8, fresh JVM, core section only) so the
+        # figure and this breakdown are trustworthy vs the r7 run,
         # which timed this after a 110-operator sweep in the same JVM.
         "phase_sec": breakdown,
         "note": (
-            "sharded-store publish: each batch pays one extra bounds job "
-            "(raw-batch min/max) + per-shard renames vs the monolithic "
+            "sharded-store publish: each batch pays a distinct over its "
+            "cached minute partials + per-shard renames vs the monolithic "
             "swap — O(touched shards) per batch instead of O(history); "
             "see phase_sec for where the time actually goes"
         ),

@@ -511,6 +511,12 @@ def s10_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = pq_search(e, queries, top_k=RERANK_CANDIDATES, dim=dim).select(
         "q_id", "n_id"
     )
+    # cand feeds both the corpus-side key lookup and the rerank join below;
+    # as a lazy plan each use would re-run the whole pq_search pipeline, and
+    # the join would rely on two evaluations of its rounded-double top-K
+    # agreeing. Its q x C rows are collected once and served from a local
+    # relation to both uses.
+    cand = spark.createDataFrame(cand.collect(), cand.schema)
     # r15 (guide §2.4 — don't compute what the join throws away): join the
     # O(q × C) candidate ids BEFORE normalizing; Catalyst cannot push a
     # join below the normalize projection, so the r14 order rehydrated and

@@ -7,7 +7,9 @@ levels derive from the merged base — the TimescaleDB continuous-aggregate
 pattern on Structured Streaming.
 
 Scale/correctness posture:
-- The per-batch aggregate is the only corpus-sized work; the merge
+- The per-batch aggregate is the only corpus-sized work, and it reads the
+  micro-batch once: the merge caches the minute partials, takes the exact
+  dirty months from them and writes from the cache. The merge
   re-aggregates base ∪ delta, both rollup-sized (O(minutes-of-history)).
 - The store is CALENDAR-SHARDED (``table/parts/<yyyy-MM>/data``): a merge
   reads and republishes only the partitions the batch's minutes fall in,
@@ -55,8 +57,10 @@ _PART = "__part"
 
 # Optional span-timing hook (bench instrumentation): set to a dict and
 # _merge_sharded accumulates wall-clock seconds per phase into it —
-# ``probe`` (dirty-shard detection), ``write`` (the one merged-output
-# Spark job), ``publish`` (marker + renames). Never set in production use.
+# ``probe`` (dirty-shard detection: the distinct over the cached delta,
+# which is also the batch's one scan of its source), ``write`` (the one
+# merged-output Spark job, served from that cache), ``publish`` (marker +
+# renames). Never set in production use.
 TIMINGS: dict | None = None
 
 
@@ -99,7 +103,6 @@ def merge_additive(
     batch_id: int | None = None,
     aggs: dict[str, str] | None = None,
     partition_expr: Column | None = None,
-    partition_bounds=None,
     combiner=None,
 ) -> None:
     """Generic decomposable-partial merge: base ∪ delta → re-aggregate →
@@ -122,14 +125,9 @@ def merge_additive(
     the same two-phase rename; each shard carries its own
     ``_batch_meta.json``, so a crash mid-publish replays as per-shard
     no-ops for the shards that committed and fresh merges for the rest —
-    per-shard convergence instead of all-or-nothing.
-
-    ``partition_bounds`` (sharded layout only): a zero-arg callable
-    returning a SUPERSET of the delta's shard values — e.g. the calendar
-    months between the raw batch's min/max timestamp, one cheap min/max
-    aggregate instead of a distinct+cache job over the delta. Candidates
-    with no delta rows produce no staging output and are skipped at
-    publish, so over-approximation costs nothing but a filter.
+    per-shard convergence instead of all-or-nothing. The delta is persisted
+    for the merge: the distinct that names the dirty shards and the write
+    both read that cache, so the source behind the delta is scanned once.
 
     Crash recovery (see module docstring): an interrupted swap is healed by
     restoring ``.old`` when the data dir is missing, and with ``batch_id``
@@ -139,7 +137,7 @@ def merge_additive(
     if partition_expr is not None:
         _merge_sharded(
             table_dir, delta, key_cols, sum_cols, schema, batch_id, aggs,
-            partition_expr, partition_bounds, combiner,
+            partition_expr, combiner,
         )
         return
     data, done = _recover_swap(table_dir, batch_id)
@@ -278,7 +276,6 @@ def _merge_sharded(
     batch_id: int | None,
     aggs: dict[str, str] | None,
     partition_expr: Column,
-    partition_bounds=None,
     combiner=None,
 ) -> None:
     spark = delta.sparkSession
@@ -299,18 +296,13 @@ def _merge_sharded(
     import time as _t
 
     tagged = delta.withColumn(_PART, partition_expr.cast("string"))
-    cached = partition_bounds is None
-    if cached:
-        tagged.persist()
+    tagged.persist()
     try:
         t0 = _t.perf_counter()
-        if partition_bounds is not None:
-            dirty = sorted(set(partition_bounds()))
-        else:
-            dirty = sorted(
-                r[0] for r in tagged.select(_PART).distinct().collect()
-            )
-        dirty = [_check_part_value(pv) for pv in dirty]
+        dirty = sorted(
+            _check_part_value(r[0])
+            for r in tagged.select(_PART).distinct().collect()
+        )
         _span("probe", t0)
         if not dirty:
             return
@@ -376,7 +368,7 @@ def _merge_sharded(
         # shards where `merged` truly has zero rows get an explicit empty
         # version published through the same two-phase swap.
         missing = [pv for pv in todo if not storefs.exists(srcs[pv])]
-        if missing and partition_bounds is None:
+        if missing:
             nonempty = {
                 r[0]
                 for r in merged.where(F.col(_PART).isin(missing))
@@ -399,8 +391,6 @@ def _merge_sharded(
         # publish shard-by-shard: two-phase rename, commit point per shard
         for pv in todo:
             src = srcs[pv]
-            if not storefs.exists(src):
-                continue  # over-approx candidate with no delta rows
             if batch_id is not None:
                 storefs.write_text(
                     os.path.join(src, "_batch_meta.json"),
@@ -417,8 +407,7 @@ def _merge_sharded(
         storefs.rmtree(staging, ignore_errors=True)
         _span("publish", t0)
     finally:
-        if cached:
-            tagged.unpersist()
+        tagged.unpersist()
 
 
 def _recover_swap(table_dir: str, batch_id: int | None) -> tuple[str, bool]:
@@ -468,7 +457,6 @@ def merge_partials(
     delta: DataFrame,
     batch_id: int | None = None,
     shard_fmt: str = "yyyy-MM",
-    partition_bounds=None,
 ) -> None:
     """Rollup-specific face of :func:`merge_additive` (minute buckets),
     time-sharded: a batch touches only the calendar partitions its minutes
@@ -490,42 +478,20 @@ def merge_partials(
         schema=_SCHEMA,
         batch_id=batch_id,
         partition_expr=F.date_format("bucket", shard_fmt),
-        partition_bounds=partition_bounds,
     )
-
-
-def _month_span(lo, hi) -> list[str]:
-    """Calendar months (yyyy-MM) covering [lo, hi] inclusive."""
-    if lo is None or hi is None:
-        return []
-    out, y, m = [], lo.year, lo.month
-    while (y, m) <= (hi.year, hi.month):
-        out.append(f"{y:04d}-{m:02d}")
-        m += 1
-        if m == 13:
-            y, m = y + 1, 1
-    return out
 
 
 def incremental_rollup_writer(table_dir: str, time_col: str = "ts"):
     """foreachBatch function maintaining the minute-grain base table under
-    ``table_dir`` with batchId-idempotent replay. Dirty-shard detection is
-    a min/max over the RAW batch timestamps (map-side partials, no
-    shuffle) — cheaper than a distinct over the aggregated delta, and a
-    safe over-approximation of the touched months."""
+    ``table_dir`` with batchId-idempotent replay. The batch is read once:
+    its minute partials are cached by the merge, which takes the exact
+    dirty months from them and writes from the same cache."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        def bounds() -> list[str]:
-            row = batch_df.agg(
-                F.min(time_col).alias("a"), F.max(time_col).alias("b")
-            ).first()
-            return _month_span(row["a"], row["b"])
-
         merge_partials(
             table_dir,
             minute_partials(batch_df, time_col=time_col),
             batch_id=batch_id,
-            partition_bounds=bounds,
         )
 
     return idempotent_foreach_batch(write, os.path.join(table_dir, "_markers"))

@@ -8,6 +8,8 @@ gets predicate pushdown / column pruning for free.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,8 +72,13 @@ def dataset_content_key(path: str) -> tuple:
 # results or data is memoized — and the dataset_content_key invalidates
 # the entry the moment a part file is rewritten. Keyed on the session's
 # applicationId + wrapper id so a stopped/restarted session can never
-# serve a stale handle (a new session gets a new applicationId).
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+# serve a stale handle (a new session gets a new applicationId). Bounded:
+# past _TABLE_CACHE_MAX entries the other sessions' entries (never hit
+# again) go first, then the live session's least recently used ones — a
+# corpus regenerated in place leaves one dead entry per rewrite.
+_TABLE_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
+_TABLE_CACHE_MAX = 256
+_TABLE_CACHE_LOCK = threading.Lock()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -87,7 +94,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     except Exception:
         key = None
-    if key is not None and key in _TABLE_CACHE:
+    with _TABLE_CACHE_LOCK:
+        hit = None if key is None else _TABLE_CACHE.get(key)
+        if hit is not None:
+            _TABLE_CACHE.move_to_end(key)
+    if hit is not None:
         if name == "events":
             # The cached handle's correctness depends on these two session
             # confs (nanos typing + UTC arithmetic, see _load_events); a
@@ -95,20 +106,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # every hit, not just on the miss path (ADVICE r14).
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-        return _TABLE_CACHE[key]
+        return hit
     if name == "events":
         df = _load_events(spark, sf_dir)
     else:
         df = spark.read.parquet(path)
     if key is not None:
-        if len(_TABLE_CACHE) > 256:  # unbounded-growth guard (many sessions)
-            # evict only entries belonging to OTHER sessions — flushing the
-            # live session's handles would re-pay schema inference for the
-            # very tables being queried (ADVICE r14)
-            stale = [k for k in _TABLE_CACHE if k[0] != key[0]]
-            for k in stale:
-                del _TABLE_CACHE[k]
-        _TABLE_CACHE[key] = df
+        with _TABLE_CACHE_LOCK:
+            _TABLE_CACHE[key] = df
+            _TABLE_CACHE.move_to_end(key)
+            if len(_TABLE_CACHE) > _TABLE_CACHE_MAX:
+                for k in [k for k in _TABLE_CACHE if k[0] != key[0]]:
+                    del _TABLE_CACHE[k]
+            while len(_TABLE_CACHE) > _TABLE_CACHE_MAX:
+                _TABLE_CACHE.popitem(last=False)
     return df
 
 

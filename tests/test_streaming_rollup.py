@@ -408,3 +408,99 @@ def test_bucket_filter_ignored_on_legacy_single_dir_store(spark, tmp_path):
         F.sum("n_events")
     ).collect()[0][0]
     assert got == 3  # all 3 events visible — nothing hidden by the filter
+
+
+def _minute_counts(spark, table) -> dict:
+    return {
+        r["bucket"]: (r["n_events"], r["n_errors"])
+        for r in R.read_store(spark, table, R._SCHEMA).collect()
+    }
+
+
+def _reference_counts(df) -> dict:
+    return {
+        r["bucket"]: (r["n_events"], r["n_errors"])
+        for r in R.minute_partials(df).collect()
+    }
+
+
+def test_writer_batch_spanning_months_writes_only_their_shards(spark, tmp_path):
+    """A January + March batch, then late rows for both months: only the
+    2024-01 and 2024-03 shards exist (no February shard for the months in
+    between), and the minute counts equal the reference over every row."""
+    table = str(tmp_path / "rollup")
+    writer = R.incremental_rollup_writer(table)
+    first = [("2024-01-05 10:00:10", "click"), ("2024-01-31 23:59:59", "error"),
+             ("2024-03-01 00:00:00", "click"), ("2024-03-09 11:00:10", "error")]
+    late = [("2024-01-05 10:00:50", "error"), ("2024-03-09 11:00:01", "click"),
+            ("2024-01-02 08:00:00", "click")]
+    writer(_batch(spark, first), 0)
+    writer(_batch(spark, late), 1)
+    assert sorted(os.listdir(os.path.join(table, "parts"))) == ["2024-01", "2024-03"]
+    assert _minute_counts(spark, table) == _reference_counts(_batch(spark, first + late))
+
+
+def test_writer_empty_batch_writes_no_shard_and_records_marker(spark, tmp_path):
+    table = str(tmp_path / "rollup")
+    writer = R.incremental_rollup_writer(table)
+    writer(_batch(spark, []), 0)
+    assert os.listdir(os.path.join(table, "parts")) == []
+    assert os.path.exists(os.path.join(table, "_markers", "batch-0"))
+    assert _minute_counts(spark, table) == {}
+
+
+def test_rollup_reads_each_logstore_batch_once(spark, tmp_path):
+    """The writer scans its micro-batch once: every trigger's numInputRows
+    equals the rows of its offset range (a second scan of the batch, e.g. a
+    separate dirty-shard probe, would count them twice)."""
+    import json
+
+    from spark_streaming_logservice_spark import fixtures
+    from spark_streaming_logservice_spark.sources.logstore import register
+
+    register(spark)
+    store = str(tmp_path / "p" / "store")
+    kinds = ["click", "error", "click", "view", "error"]
+    fixtures.make_store(store, {0: kinds * 8, 1: kinds[:3] * 10})
+    table = str(tmp_path / "rollup")
+    writer = R.incremental_rollup_writer(table)
+
+    def run():
+        q = (
+            spark.readStream.format("logstore")
+            .schema("msg STRING, __time__ TIMESTAMP_NTZ")
+            .option("path", store)
+            .option("startingOffsets", "earliest")
+            .load()
+            .select(F.col("__time__").alias("ts"), F.col("msg").alias("event_type"))
+            .writeStream.foreachBatch(writer)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        progress = [json.loads(p.json) for p in q.recentProgress]
+        return [p for p in progress if p["numInputRows"]]
+
+    def offsets(raw):  # null before the first batch
+        return {int(k): int(v) for k, v in (raw or {}).items()}
+
+    triggers = run()
+    fixtures.write_messages(store, kinds * 4, shard=1, base_time=1_700_000_600)
+    triggers += run()
+    assert len(triggers) >= 2
+    for p in triggers:
+        src = p["sources"][0]
+        start, end = offsets(src["startOffset"]), offsets(src["endOffset"])
+        in_range = sum(end[s] - start.get(s, 0) for s in end)
+        assert p["numInputRows"] == in_range, (p["numInputRows"], in_range)
+    assert sum(p["numInputRows"] for p in triggers) == 40 + 30 + 20
+
+    rows = (
+        spark.read.format("logstore")
+        .schema("msg STRING, __time__ TIMESTAMP_NTZ")
+        .option("path", store)
+        .load()
+        .select(F.col("__time__").alias("ts"), F.col("msg").alias("event_type"))
+    )
+    assert _minute_counts(spark, table) == _reference_counts(rows)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import OrderedDict
 
 import pytest
 
@@ -82,6 +83,32 @@ def test_overflow_evicts_only_other_sessions(spark, tmp_path):
     finally:
         for k in fake:
             tables._TABLE_CACHE.pop(k, None)
+
+
+def test_live_session_entries_are_lru_bounded(spark, tmp_path, monkeypatch):
+    """Past the cap the live session's least recently used entry goes —
+    e.g. the dead entry a corpus rewritten in place leaves behind — and a
+    hit refreshes an entry's recency."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(tables, "_TABLE_CACHE", OrderedDict())
+    monkeypatch.setattr(tables, "_TABLE_CACHE_MAX", 2)
+    dirs = []
+    for i in range(3):
+        d = tmp_path / f"sf{i}"
+        d.mkdir()
+        pq.write_table(pa.table({"r_regionkey": list(range(i + 1))}),
+                       str(d / "region.parquet"))
+        dirs.append(str(d))
+    first = tables.load_table(spark, dirs[0], "region")
+    tables.load_table(spark, dirs[1], "region")
+    assert tables.load_table(spark, dirs[0], "region") is first  # now most recent
+    tables.load_table(spark, dirs[2], "region")  # evicts sf1
+    assert [os.path.dirname(k[3][0]) for k in tables._TABLE_CACHE] == [
+        os.path.realpath(dirs[0]), os.path.realpath(dirs[2])]
+    assert tables.load_table(spark, dirs[0], "region") is first
+    assert tables.load_table(spark, dirs[1], "region").count() == 2  # reloaded
 
 
 def test_events_confs_reasserted_on_cache_hit(spark):
