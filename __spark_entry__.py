@@ -94,80 +94,14 @@ def _latest_green_round() -> dict[str, int]:
     return latest
 
 
-# Queries built DURING the current round, after the round's 50-slot
-# verification budget was already committed (r14: q34/j06 — the r13 defer
-# expired on CORRECTNESS_r13 as designed — sort first as the only
-# never-greens, then the r8 stale cohort s22/s23/v10 and the r9 cohort,
-# VERDICT r13 item 1). Deferring them keeps the rotation intact this
-# round; the moment this round's CORRECTNESS artifact exists the defer
-# expires and they sort first (never-green) into the next round's sample.
-_DEFER_UNTIL_ROUND = 14
-_DEFERRED: frozenset[str] = frozenset(
-    {"s30_ndcg_mrr", "e33_session_funnel_attribution"}
-)
-_DRIVER_SAMPLE = 50  # the driver verifies this many leading queries
-
-# Queries whose EXECUTION PLAN was rewritten during the optimization
-# rounds AFTER their most recent driver-green row (r14: l07's
-# countDistinct→max, m01-m03's limit-above-codec, v04's pinned-rank
-# aggregate; r15: g01/g03's integer node encoding, g02/g04's
-# collect-based wedges, g08's pair generation, d23's hashed shingles,
-# s10's post-join normalize). Oracle parity was re-proven in-repo at
-# sf0.001/0.01/0.1, but the loop only closes with a driver hash-match
-# (VERDICT r14 item 7) — so until a CORRECTNESS row at or after
-# _PIN_REVERIFY_ROUND goes green, these sort to the FRONT of the sample,
-# ahead of the age rotation. Self-expiring: the moment the driver
-# re-greens one, its latest round reaches the threshold and it rejoins
-# the normal age order.
-_PIN_REVERIFY_ROUND = 15
-_PINNED_REVERIFY: frozenset[str] = frozenset(
-    {
-        "l07_sessionize",
-        "m01_multimodal_decode",
-        "m02_image_decode_roundtrip",
-        "m03_audio_decode_roundtrip",
-        "v04_vocab_coverage",
-        "g01_pagerank",
-        "g02_triangle_count",
-        "g03_khop_reachability",
-        "g04_clustering_coefficient",
-        "g08_ra_link_prediction",
-        "d23_containment",
-        "s10_pq_rerank",
-    }
-)
-
-
 def _driver_order(names) -> list[str]:
+    """Stable sort by driver-green age: never-green (age 0) first, then the
+    oldest green round; registration order preserved within each age."""
     try:
         latest = _latest_green_round()
     except Exception:
         latest = {}
-    defer_active = max(latest.values(), default=0) < _DEFER_UNTIL_ROUND
-    names = list(names)
-    deferred = [
-        n for n in names
-        if defer_active and n in _DEFERRED and n not in latest
-    ]
-    # stable sort: rewrite-pinned queries first (until the driver
-    # re-greens them — see _PINNED_REVERIFY), then never-green (age 0),
-    # then oldest green round; registration order preserved within each
-    # age class
-    def _age(n: str) -> int:
-        if n in _PINNED_REVERIFY and latest.get(n, 0) < _PIN_REVERIFY_ROUND:
-            return -1
-        return latest.get(n, 0)
-
-    order = sorted(
-        (n for n in names if n not in deferred),
-        key=_age,
-    )
-    # the explicit defer invariant: while active, deferred queries sit
-    # OUTSIDE the driver's verification sample AND after every non-deferred
-    # never-green query — splicing at a fixed 50 would insert them ahead
-    # of never-greens if the backlog ever exceeded the sample size
-    cut = max(_DRIVER_SAMPLE, sum(1 for n in order if n not in latest))
-    return order[:cut] + deferred + order[cut:]
+    return sorted(names, key=lambda n: latest.get(n, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -245,7 +245,30 @@ class _BatchProjector:
         )
 
 
-class LogstoreBatchReader(DataSourceReader):
+def _parallelism_in_shard(options) -> int:
+    par = int(options.get("parallelisminshard", "1"))
+    if not 1 <= par <= 5:
+        raise ValueError(
+            "Parallelism in each shard should not be less than 1 or larger than 5."
+        )
+    return par
+
+
+class _ShardRangeReader:
+    """``read`` of the batch and stream readers: one planned shard range,
+    projected batch by batch (``ShardRange(-1, 0, 0)`` is the empty plan)."""
+
+    def read(self, partition: ShardRange):
+        if partition.shard < 0:
+            return
+        proj = _BatchProjector(self.schema, self.project, self.store)
+        for batch in be.read_batches(
+            self.path, partition.shard, partition.start_seq, partition.end_seq
+        ):
+            yield proj(batch, partition.shard)
+
+
+class LogstoreBatchReader(_ShardRangeReader, DataSourceReader):
     """Bounded scan over [startingOffsets, endingOffsets] — the rebuild of
     LoghubRelation.buildScan (SQL/LoghubRelation.scala:27-100) plus the batch
     RDD's intra-shard parallelism (BATCH/LoghubBatchRDD.scala:40-108):
@@ -256,11 +279,7 @@ class LogstoreBatchReader(DataSourceReader):
     def __init__(self, schema: StructType, options) -> None:
         self.path, self.project, self.store = _names(options)
         self.schema = schema
-        self._par = int(options.get("parallelisminshard", "1"))
-        if not 1 <= self._par <= 5:
-            raise ValueError(
-                "Parallelism in each shard should not be less than 1 or larger than 5."
-            )
+        self._par = _parallelism_in_shard(options)
         # Validate options eagerly (bad offsets fail at load()), but resolve
         # sentinel cursors lazily in partitions(): a re-used DataFrame then
         # re-reads data appended between actions, matching the reference
@@ -286,17 +305,8 @@ class LogstoreBatchReader(DataSourceReader):
                         ranges.append(ShardRange(shard, cs, ce))
         return ranges or [ShardRange(-1, 0, 0)]
 
-    def read(self, partition: ShardRange):
-        if partition.shard < 0:
-            return
-        proj = _BatchProjector(self.schema, self.project, self.store)
-        for batch in be.read_batches(
-            self.path, partition.shard, partition.start_seq, partition.end_seq
-        ):
-            yield proj(batch, partition.shard)
 
-
-class LogstoreStreamReader(DataSourceStreamReader):
+class LogstoreStreamReader(_ShardRangeReader, DataSourceStreamReader):
     """Micro-batch source — the rebuild of LoghubSource
     (SQL/LoghubSource.scala:40-244): per-shard offsets, maxOffsetsPerTrigger
     rate limiting at whole-second-bucket granularity (O2), new shards bind at
@@ -308,11 +318,7 @@ class LogstoreStreamReader(DataSourceStreamReader):
         self.max_per_trigger = int(
             options.get("maxoffsetspertrigger", DEFAULT_MAX_OFFSETS_PER_TRIGGER)
         )
-        self._par = int(options.get("parallelisminshard", "1"))
-        if not 1 <= self._par <= 5:
-            raise ValueError(
-                "Parallelism in each shard should not be less than 1 or larger than 5."
-            )
+        self._par = _parallelism_in_shard(options)
         self._start_times = _starting_times(
             options, self.path, self.project, self.store, off.LATEST
         )
@@ -428,15 +434,6 @@ class LogstoreStreamReader(DataSourceStreamReader):
             if ce > cs
         ]
         return ranges or [ShardRange(-1, 0, 0)]
-
-    def read(self, partition: ShardRange):
-        if partition.shard < 0:
-            return
-        proj = _BatchProjector(self.schema, self.project, self.store)
-        for batch in be.read_batches(
-            self.path, partition.shard, partition.start_seq, partition.end_seq
-        ):
-            yield proj(batch, partition.shard)
 
     def commit(self, end: dict) -> None:
         # Spark's commit log is the source of truth; we only fold the

@@ -6,7 +6,8 @@ scan overhead grow with trigger count, not data size. Compaction rewrites a
 shard's fragments into few large files while preserving the seq-addressed
 contract exactly: same rows, same seqs, same shard bounds — only the file
 layout changes (readers re-plan automatically because the footer-stats
-cache is keyed on directory mtime + file count).
+cache is keyed per file on its stat identity — path, inode, mtime, size —
+so a rewritten ``compact-NNNNN.parquet`` is a new entry, not a stale hit).
 
 Crash safety mirrors the sink's two-phase protocol (logstore.py S5): new
 files stage under ``_staging/compact-<id>/``, a manifest under
@@ -129,7 +130,9 @@ def _finish_swap(path: str, manifest: dict) -> None:
                 f"compaction {manifest['id']}: staged file {name} lost "
                 "before publish; store left untouched"
             )
-    for name in manifest["old"]:
+    # a re-compaction reuses the fixed compact-NNNNN names: an old name that
+    # is also new was just replaced by its new content and must stay
+    for name in set(manifest["old"]) - set(manifest["new"]):
         old = os.path.join(sdir, name)
         if os.path.exists(old):
             os.remove(old)

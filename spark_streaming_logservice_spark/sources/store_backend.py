@@ -10,8 +10,12 @@ reference's cursor-addressed shards (SQL/LoghubShard.scala:19,
 SQL/LoghubSourceOffset.scala:30).
 
 Everything here is driver- or executor-side *Python* on pyarrow. That's the
-right layer for a source connector: partition planning reads only footer
-stats/columns, while data movement stays Arrow-batched. At 100 TB the same
+right layer for a source connector. There is one way to find rows: footer
+statistics, cached per file on its stat identity (published files are
+immutable, so a trigger parses only the footers of new files). There is one
+way to read them: only the row groups whose footer seq range overlaps the
+wanted range — cursor lookups read an O(window) (seq, time) slice, never the
+whole shard, and data movement stays Arrow-batched. At 100 TB the same
 layout maps 1:1 onto object-store prefixes per shard.
 """
 
@@ -23,8 +27,8 @@ import threading
 import uuid
 from collections import OrderedDict
 
+import numpy as np
 import pyarrow as pa
-import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 
 _SHARD_RE = re.compile(r"^shard=(\d+)$")
@@ -56,21 +60,12 @@ def list_shards(path: str) -> list[int]:
     return sorted(out)
 
 
-def _shard_dataset(path: str, shard: int) -> pa_ds.Dataset | None:
-    d = shard_dir(path, shard)
-    if not os.path.isdir(d):
-        return None
-    files = [os.path.join(d, f) for f in sorted(os.listdir(d)) if f.endswith(".parquet")]
-    if not files:
-        return None
-    return pa_ds.dataset(files, schema=STORE_ARROW_SCHEMA)
-
-
 def shard_bounds(path: str, shard: int) -> tuple[int, int]:
     """(min_seq, end_seq) where end_seq = max_seq + 1; (0, 0) when empty.
 
-    Derived from the signature-cached footer statistics — no data pages —
-    so planning cost is O(files) on change and O(1) otherwise."""
+    Derived from the per-file cached footer statistics — no data pages —
+    so planning cost is one listdir + one stat per file, plus one footer
+    parse per file not seen before."""
     groups = _row_group_stats2(path, shard)
     if not groups:
         return (0, 0)
@@ -78,7 +73,7 @@ def shard_bounds(path: str, shard: int) -> tuple[int, int]:
 
 
 class _LruCache:
-    """Entry-count-bounded LRU map for the driver-side planner caches below.
+    """Entry-count-bounded LRU map for the driver-side footer cache below.
     ``get``/``put``/``pop`` each hold one lock: a hit's recency update and an
     insert's eviction are read-modify-writes of one shared OrderedDict."""
 
@@ -112,99 +107,90 @@ class _LruCache:
             self._entries.pop(key, None)
 
 
-# Footer-stats cache: (path, shard) → (signature, stats). latestOffset
-# consults stats 3-4 times per lagging shard per trigger; the signature is
-# (dir mtime_ns, parquet file count) — the count guards against two
-# publishes landing within one filesystem timestamp granule (the store is
-# append-only, so a same-tick change always changes the count). Unchanged
-# shards cost one stat + one listdir instead of a full footer sweep. An
-# entry is a list of per-row-group tuples; the LRU bound caps how many
-# (store, shard) pairs one planner process remembers.
-_STATS_CACHE = _LruCache(1024)
+# Footer-stats cache: one entry per parquet file, keyed on the file's stat
+# identity (abspath, inode, mtime_ns, size). Shard files are immutable once
+# published, so a trigger parses only the footers of files it has not seen;
+# the name alone is not an identity, because compaction rewrites the fixed
+# names ``compact-NNNNN.parquet``. An entry is the file's tuple of row-group
+# tuples (no FileMetaData is kept); the LRU bound caps how many files one
+# planner process remembers.
+_FOOTER_CACHE = _LruCache(16384)
 
 
-def _row_group_stats2(path: str, shard: int) -> list[tuple[int, int, int, int, int]]:
-    """(seq_min, seq_max, time_min, time_max, rows) per row group — footer
-    only, signature-cached. Powers the O(1)-in-lag cursor lookups below."""
-    d = shard_dir(path, shard)
+def _file_row_groups(f: str) -> tuple:
+    """(seq_min, seq_max, time_min, time_max, rows, file, rg) per row group
+    of one parquet file — footer only, cached on the file's stat identity."""
     try:
-        mtime = os.stat(d).st_mtime_ns
-        names = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        st = os.stat(f)
     except FileNotFoundError:
-        return []
-    sig = (mtime, len(names))
-    key = (os.path.abspath(path), shard)
-    hit = _STATS_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
+        return ()
+    key = (f, st.st_ino, st.st_mtime_ns, st.st_size)
+    hit = _FOOTER_CACHE.get(key)
+    if hit is not None:
+        return hit
+    with pq.ParquetFile(f) as pf:
+        md = pf.metadata
     out = []
-    for f in names:
-        md = pq.ParquetFile(os.path.join(d, f)).metadata
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            s_st = g.column(0).statistics  # seq
-            t_st = g.column(1).statistics  # time
-            if s_st is None or not s_st.has_min_max:
-                continue  # seq stats are the addressing backbone; unusable
-            if t_st is None or not t_st.has_min_max:
-                # time stats missing (e.g. externally-written file): keep the
-                # group with conservative time bounds — time-based pruning
-                # just can't prune it, and shard_bounds/nth_seq stay exact
-                t_lo, t_hi = -(2**63), 2**63 - 1
-            else:
-                t_lo, t_hi = t_st.min, t_st.max
-            out.append((s_st.min, s_st.max, t_lo, t_hi, g.num_rows))
-    _STATS_CACHE.put(key, (sig, out))
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        s_st = g.column(0).statistics  # seq
+        t_st = g.column(1).statistics  # time
+        if s_st is None or not s_st.has_min_max:
+            continue  # seq stats are the addressing backbone; unusable
+        if t_st is None or not t_st.has_min_max:
+            # time stats missing (e.g. externally-written file): keep the
+            # group with conservative time bounds — time-based pruning
+            # just can't prune it, and shard_bounds/nth_seq stay exact
+            t_lo, t_hi = -(2**63), 2**63 - 1
+        else:
+            t_lo, t_hi = t_st.min, t_st.max
+        out.append((s_st.min, s_st.max, t_lo, t_hi, g.num_rows, f, rg))
+    out = tuple(out)
+    _FOOTER_CACHE.put(key, out)
     return out
 
 
-# Planner cursor-index cache (r15, guide §1.2/§6): latestOffset calls
-# time_for_seq + second_histogram + nth_seq per LAGGING shard per TRIGGER,
-# each an Arrow data-page scan — measured 40-80 ms of the ~550 ms
-# steady-state trigger. For a shard whose total row count is bounded, one
-# content-keyed sorted (seq, time) array answers all three as numpy
-# searchsorted lookups. The cap keeps this scale-safe: a year-lagging
-# 100 TB shard must NOT pin O(lag) driver memory, so above the cap the
-# footer-bounded scans below remain the path (identical results — the
-# index variants reproduce the exact same row windows, including the
-# footer-stats ceiling of the bounded histogram). An entry holds up to
-# _SEQ_TIME_CACHE_MAX_ROWS × 16 bytes, so the entry count is bounded too.
-_SEQ_TIME_CACHE = _LruCache(256)
-_SEQ_TIME_CACHE_MAX_ROWS = 4_000_000
-
-
-def _seq_time_index(path: str, shard: int):
-    """(seqs, times) sorted by seq for the whole shard, or None when the
-    shard exceeds ``_SEQ_TIME_CACHE_MAX_ROWS`` (callers fall back to the
-    footer-bounded scans). Signature-keyed like ``_row_group_stats2``."""
-    key = (os.path.abspath(path), shard)
-    groups = _row_group_stats2(path, shard)
-    if not groups or sum(g[4] for g in groups) > _SEQ_TIME_CACHE_MAX_ROWS:
-        _SEQ_TIME_CACHE.pop(key)  # a shard that outgrew the cap frees its arrays
-        return None
-    d = shard_dir(path, shard)
+def _row_group_stats2(path: str, shard: int) -> list[tuple]:
+    """(seq_min, seq_max, time_min, time_max, rows, file, rg) per row group
+    of a shard, sorted by seq range — footer only, cached per file. Powers
+    the cursor lookups below."""
+    d = os.path.abspath(shard_dir(path, shard))
     try:
-        mtime = os.stat(d).st_mtime_ns
-        names = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        names = os.listdir(d)
     except FileNotFoundError:
-        _SEQ_TIME_CACHE.pop(key)
-        return None
-    sig = (mtime, len(names))
-    hit = _SEQ_TIME_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1], hit[2]
-    ds = _shard_dataset(path, shard)
-    if ds is None:
-        return None
-    import numpy as np
+        return []
+    return sorted(
+        g for f in names if f.endswith(".parquet") for g in _file_row_groups(os.path.join(d, f))
+    )
 
-    tbl = ds.to_table(columns=["seq", "time"])
-    seqs = tbl.column("seq").to_numpy(zero_copy_only=False)
-    times = tbl.column("time").to_numpy(zero_copy_only=False)
-    order = np.argsort(seqs, kind="stable")
-    seqs, times = seqs[order], times[order]
-    _SEQ_TIME_CACHE.put(key, (sig, seqs, times))
-    return seqs, times
+
+def _overlapping(path: str, shard: int, lo: int, hi: int | None):
+    """(file, [row group, ...]) for the row groups whose footer seq range
+    overlaps ``[lo, hi)`` (``hi`` None: no upper bound), files in order of
+    their first overlapping group's seq_min."""
+    by_file: dict[str, list[int]] = {}
+    for g in _row_group_stats2(path, shard):
+        if g[1] >= lo and (hi is None or g[0] < hi):
+            by_file.setdefault(g[5], []).append(g[6])
+    return by_file.items()
+
+
+def _window(path: str, shard: int, lo: int, hi: int | None):
+    """(seqs, times) numpy arrays, sorted by seq, of the rows with
+    ``lo <= seq < hi`` (``hi`` None: no upper bound). Only the row groups
+    whose footer seq range overlaps the window are read, so memory is
+    O(window), never O(shard)."""
+    seqs, times = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for f, rgs in _overlapping(path, shard, lo, hi):
+        with pq.ParquetFile(f) as pf:
+            tbl = pf.read_row_groups(rgs, columns=["seq", "time"], use_threads=False)
+        seqs.append(tbl.column("seq").to_numpy())
+        times.append(tbl.column("time").to_numpy())
+    s, t = np.concatenate(seqs), np.concatenate(times)
+    keep = s >= lo if hi is None else (s >= lo) & (s < hi)
+    s, t = s[keep], t[keep]
+    order = np.argsort(s, kind="stable")
+    return s[order], t[order]
 
 
 def seq_for_time(
@@ -216,30 +202,24 @@ def seq_for_time(
     already-consumed rows (or backfills behind the cursor) can never pull
     the result backwards.
 
-    Footer stats bound the scan: the answer lives in a row group whose
+    Footer stats bound the read: the answer lives in a row group whose
     time_max >= cursor_time and seq_max >= min_seq, and is <= the smallest
     seq_max among them — only groups overlapping that seq range are read,
-    not the whole tail (this runs per trigger on lagging streams)."""
-    ds = _shard_dataset(path, shard)
-    if ds is None:
-        return 0
-    base = (pa_ds.field("time") >= cursor_time) & (pa_ds.field("seq") >= min_seq)
+    not the whole tail (this runs per trigger on lagging streams). When
+    that group straddles ``min_seq`` its matching rows may all lie before
+    the cursor; then the whole tail past ``min_seq`` is read."""
     groups = [
         g
         for g in _row_group_stats2(path, shard)
         if g[3] >= cursor_time and g[1] >= min_seq
     ]
-    if not groups:
-        return shard_bounds(path, shard)[1]
-    ceiling = min(g[1] for g in groups)
-    tbl = ds.to_table(columns=["seq"], filter=base & (pa_ds.field("seq") <= ceiling))
-    if tbl.num_rows == 0:  # stats-only corner: fall back to the exact scan
-        tbl = ds.to_table(columns=["seq"], filter=base)
-        if tbl.num_rows == 0:
-            return shard_bounds(path, shard)[1]
-    import pyarrow.compute as pc
-
-    return pc.min(tbl.column("seq")).as_py()
+    if groups:
+        for hi in (min(g[1] for g in groups) + 1, None):
+            seqs, times = _window(path, shard, min_seq, hi)
+            hit = seqs[times >= cursor_time]
+            if hit.size:
+                return int(hit[0])
+    return shard_bounds(path, shard)[1]
 
 
 def time_for_seq(path: str, shard: int, seq: int) -> int | None:
@@ -249,30 +229,11 @@ def time_for_seq(path: str, shard: int, seq: int) -> int | None:
     backfill must not make a lagging shard look caught-up (or vice versa).
     Footer-stats-bounded: the first record lives at seq <= the smallest
     covering seq_max, so only those row groups are read."""
-    idx = _seq_time_index(path, shard)
-    if idx is not None:
-        import numpy as np
-
-        seqs, times = idx
-        i = int(np.searchsorted(seqs, seq, side="left"))
-        return int(times[i]) if i < len(seqs) else None
-    ds = _shard_dataset(path, shard)
-    if ds is None:
-        return None
     groups = [g for g in _row_group_stats2(path, shard) if g[1] >= seq]
     if not groups:
         return None
-    ceiling = min(g[1] for g in groups)
-    tbl = ds.to_table(
-        columns=["seq", "time"],
-        filter=(pa_ds.field("seq") >= seq) & (pa_ds.field("seq") <= ceiling),
-    )
-    if tbl.num_rows == 0:
-        return None
-    import pyarrow.compute as pc
-
-    idx = pc.index(tbl.column("seq"), pc.min(tbl.column("seq"))).as_py()
-    return tbl.column("time")[idx].as_py()
+    _seqs, times = _window(path, shard, seq, min(g[1] for g in groups) + 1)
+    return int(times[0]) if times.size else None
 
 
 def nth_seq(path: str, shard: int, from_seq: int, n: int) -> int:
@@ -281,47 +242,18 @@ def nth_seq(path: str, shard: int, from_seq: int, n: int) -> int:
     rate walk: it advances by ROW COUNT in seq order, so progress is
     guaranteed whenever at least one unread row exists — even when event
     times interleave non-monotonically with seqs (where a time-cut boundary
-    can sit at the cursor forever). Footer-stats-bounded to O(n) rows."""
+    can sit at the cursor forever). Footer-stats-bounded to O(n) rows: the
+    ceiling covers at least 2n rows, so the window never holds fewer than
+    ``n`` while rows remain past it."""
     if n <= 0:
         return from_seq
-    idx = _seq_time_index(path, shard)
-    if idx is not None:
-        import numpy as np
-
-        seqs, _times = idx
-        i = int(np.searchsorted(seqs, from_seq, side="left"))
-        remaining = len(seqs) - i
-        if remaining == 0:
-            return from_seq
-        if remaining < n:
-            return shard_bounds(path, shard)[1]
-        return int(seqs[i + n - 1]) + 1
-    ds = _shard_dataset(path, shard)
-    if ds is None:
-        return from_seq
-    import numpy as np
-
-    filt = pa_ds.field("seq") >= from_seq
     ceiling = _seq_ceiling_for_count(path, shard, from_seq, n)
-    if ceiling is not None:
-        filt = filt & (pa_ds.field("seq") < ceiling)
-    seqs = ds.to_table(columns=["seq"], filter=filt).column("seq").to_numpy(
-        zero_copy_only=False
-    )
-    if ceiling is not None and len(seqs) < n:
-        # stats-only corner: the bounded window held fewer rows than promised
-        seqs = (
-            ds.to_table(columns=["seq"], filter=pa_ds.field("seq") >= from_seq)
-            .column("seq")
-            .to_numpy(zero_copy_only=False)
-        )
+    seqs, _times = _window(path, shard, from_seq, ceiling)
     if len(seqs) == 0:
         return from_seq
     if len(seqs) < n:
         return shard_bounds(path, shard)[1]
-    # nth order statistic in native code (planning hot path — a catch-up
-    # budget can make this millions of values)
-    return int(np.partition(seqs, n - 1)[n - 1]) + 1
+    return int(seqs[n - 1]) + 1
 
 
 def _seq_ceiling_for_count(
@@ -352,7 +284,7 @@ def second_histogram(
     seq >= from_seq — the rate-limit histogram (SQL/LoghubOffsetReader.scala:
     155-220 walks per-time-bucket record counts).
 
-    With ``max_records``, the scan is bounded to O(max_records) via a
+    With ``max_records``, the read is bounded to O(max_records) via a
     footer-stats seq ceiling instead of O(consumer lag): a stream that is a
     year behind still plans each trigger by reading only ~2× the budget's
     rows of the ``time`` column. When event times are monotone with seqs
@@ -364,47 +296,18 @@ def second_histogram(
     unbounded walk would — still safe: offsets advance by row count, never
     past real data, and undercounted rows are simply picked up by the next
     trigger."""
-    idx = _seq_time_index(path, shard)
-    if idx is not None:
-        import numpy as np
-
-        seqs, times = idx
-        lo = int(np.searchsorted(seqs, from_seq, side="left"))
-        hi = len(seqs)
-        if max_records is not None:
-            ceiling = _seq_ceiling_for_count(path, shard, from_seq, max_records)
-            if ceiling is not None:
-                # same footer-stats ceiling as the scan path → identical
-                # row window, identical buckets
-                hi = int(np.searchsorted(seqs, ceiling, side="left"))
-        if lo >= hi:
-            return []
-        vals, cnts = np.unique(times[lo:hi], return_counts=True)
-        return [(int(t), int(c)) for t, c in zip(vals, cnts)]
-    ds = _shard_dataset(path, shard)
-    if ds is None:
-        return []
-    filt = pa_ds.field("seq") >= from_seq
+    ceiling = None
     if max_records is not None:
         ceiling = _seq_ceiling_for_count(path, shard, from_seq, max_records)
-        if ceiling is not None:
-            filt = filt & (pa_ds.field("seq") < ceiling)
-    tbl = ds.to_table(columns=["time"], filter=filt)
-    if tbl.num_rows == 0:
-        return []
-    counts = pa.table({"time": tbl.column("time")}).group_by("time").aggregate(
-        [("time", "count")]
-    )
-    pairs = sorted(
-        zip(counts.column("time").to_pylist(), counts.column("time_count").to_pylist())
-    )
-    return [(int(t), int(c)) for t, c in pairs]
+    _seqs, times = _window(path, shard, from_seq, ceiling)
+    vals, cnts = np.unique(times, return_counts=True)
+    return [(int(t), int(c)) for t, c in zip(vals, cnts)]
 
 
 def row_group_stats(path: str, shard: int) -> list[tuple[int, int, int]]:
     """(min_seq, max_seq, num_rows) per parquet row group — footer-only
-    (seq projection of the cached two-column stats)."""
-    return sorted((s, e, n) for s, e, _t0, _t1, n in _row_group_stats2(path, shard))
+    (seq projection of the cached per-file stats, in seq order)."""
+    return [(g[0], g[1], g[4]) for g in _row_group_stats2(path, shard)]
 
 
 def slice_ranges(
@@ -443,34 +346,29 @@ def slice_ranges(
 def read_batches(path: str, shard: int, start_seq: int, end_seq: int):
     """Iterate [start_seq, end_seq) as ``pyarrow.RecordBatch``es in store
     schema — the zero-copy hot path for the DSv2 readers (rows never become
-    Python objects; projection happens with Arrow compute per batch)."""
-    ds = _shard_dataset(path, shard)
-    if ds is None:
-        return
-    filt = (pa_ds.field("seq") >= start_seq) & (pa_ds.field("seq") < end_seq)
-    for batch in ds.to_batches(filter=filt):
-        if batch.num_rows:
-            yield batch
+    Python objects; projection happens with Arrow compute per batch). Only
+    the row groups whose footer seq range overlaps the range are read, and
+    only a batch that crosses a range end is filtered."""
+    for f, rgs in _overlapping(path, shard, start_seq, end_seq):
+        with pq.ParquetFile(f) as pf:
+            for batch in pf.iter_batches(row_groups=rgs):
+                s = batch.column("seq").to_numpy()
+                if s.size and (s.min() < start_seq or s.max() >= end_seq):
+                    batch = batch.filter(pa.array((s >= start_seq) & (s < end_seq)))
+                if batch.num_rows:
+                    yield batch if batch.schema == STORE_ARROW_SCHEMA else batch.cast(
+                        STORE_ARROW_SCHEMA
+                    )
 
 
 def read_rows(path: str, shard: int, start_seq: int, end_seq: int):
-    """Iterate records of [start_seq, end_seq) as dicts, Arrow-batched
-    underneath, in seq order within each batch."""
-    ds = _shard_dataset(path, shard)
-    if ds is None:
-        return
-    filt = (pa_ds.field("seq") >= start_seq) & (pa_ds.field("seq") < end_seq)
-    for batch in ds.to_batches(filter=filt):
-        cols = batch.to_pydict()
-        for i in range(batch.num_rows):
-            yield {
-                "seq": cols["seq"][i],
-                "time": cols["time"][i],
-                "topic": cols["topic"][i],
-                "source": cols["source"][i],
-                "contents": dict(cols["contents"][i] or []),
-                "tags": dict(cols["tags"][i] or []),
-            }
+    """Iterate records of [start_seq, end_seq) as dicts — a row view of
+    ``read_batches``."""
+    for batch in read_batches(path, shard, start_seq, end_seq):
+        for row in batch.to_pylist():
+            row["contents"] = dict(row["contents"] or [])
+            row["tags"] = dict(row["tags"] or [])
+            yield row
 
 
 def _rows_table(rows: list[dict], base_seq: int = 0) -> tuple[pa.Table, int]:

@@ -31,40 +31,13 @@ def test_never_green_queries_lead_the_driver_sample():
     latest = E._latest_green_round()
     order = E._driver_order(registry.QUERIES)
     assert set(order) == set(registry.QUERIES), "order must be a permutation"
-    defer_active = max(latest.values(), default=0) < E._DEFER_UNTIL_ROUND
-    deferred = set(E._DEFERRED) if defer_active else set()
-    never = [n for n in registry.QUERIES if n not in latest and n not in deferred]
+    never = [n for n in registry.QUERIES if n not in latest]
     assert set(order[: len(never)]) == set(never), (
         "every never-driver-green query must appear before any green one"
     )
     # greens are ordered stalest-first after the never-green block
-    # (deferred never-greens are spliced in at the sample boundary and
-    # excluded from the monotonicity check)
-    tail_rounds = [
-        latest[n] for n in order[len(never):] if n not in deferred
-    ]
+    tail_rounds = [latest[n] for n in order[len(never):]]
     assert tail_rounds == sorted(tail_rounds)
-
-
-def test_deferred_queries_stay_out_of_the_round11_sample():
-    """While CORRECTNESS_r11 does not exist yet, the round's 50 slots are
-    committed to the stale-rotation backlog (VERDICT r10 item 1): queries
-    built mid-round defer to slot >= 50, and the moment the r11 artifact
-    lands they sort first like any never-green query."""
-    E = _entry()
-    from spark_streaming_logservice_spark import registry
-
-    registry.load_all()
-    latest = E._latest_green_round()
-    order = E._driver_order(registry.QUERIES)
-    if max(latest.values(), default=0) < E._DEFER_UNTIL_ROUND:
-        for name in E._DEFERRED:
-            if name in registry.QUERIES and name not in latest:
-                assert order.index(name) >= E._DRIVER_SAMPLE
-    else:
-        for name in E._DEFERRED:
-            if name in registry.QUERIES and name not in latest:
-                assert order.index(name) < E._DRIVER_SAMPLE
 
 
 def test_all_oracle_queries_exposed():

@@ -104,11 +104,6 @@ def test_driver_sample_prefix_is_stalest_first():
 
     latest = entry._latest_green_round()
     names = list(entry.queries())
-    # mid-round deferred queries sit OUTSIDE the sample by design while
-    # the defer is active (see entry._DEFERRED / test_driver_rotation)
-    defer_active = max(latest.values(), default=0) < entry._DEFER_UNTIL_ROUND
-    if defer_active:
-        names = [q for q in names if q not in entry._DEFERRED]
     prefix, rest = names[:50], names[50:]
     never = [q for q in names if latest.get(q, 0) == 0]
     if len(never) <= 50:
