@@ -2,13 +2,25 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "runs": N, "agg": "min",
+"materialize": "noop", "host": {...}}. The full record, with each query's
+``cpu_s``, goes to BENCH_DETAIL.json.
 
 Headline set: one representative per operator family (scan-agg, multi-join,
 window functions, sessionization, event-time windows, dedup, minhash, ANN,
-text stats, multimodal pandas stage). Heavy all-pairs document queries
-(d02/d04) are exercised for correctness in tests, not here — their cost is a
-property of the tiny synthetic vocabulary, not the engine.
+text stats, multimodal pandas stage, the logstore connector). The sweep
+section times every other registered query but the few in SWEEP_EXCLUDE,
+then the same set at a 10× replica.
+
+Every timed query is materialized in full with a ``noop`` write: a
+``.count()`` lets Catalyst prune work the real result needs.
+
+Comparison rule: compare only records whose ``host`` fingerprints match
+(nproc, mem_mb and library versions; ``loadavg_before`` and ``revision``
+say under what load and on what code the record was taken). When a wall
+time moved, read its ``cpu_s`` (driver + JVM + Python workers, of the kept
+run): CPU seconds that stayed put mean the host, not the code, moved the
+wall time.
 """
 
 from __future__ import annotations
@@ -19,6 +31,8 @@ import subprocess
 import sys
 import tempfile
 import time
+
+from perfbench import harness
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -37,244 +51,27 @@ HEADLINE = [
     "s03_cosine_neardup_pairs",
     "t01_text_stats",
     "m01_multimodal_decode",
-    # connector path (Arrow-vectorized logstore source, added r2): builds the
-    # fixture store on first run — that cost lands in warmup, not the timing
+    # connector path (Arrow-vectorized logstore source): builds the fixture
+    # store on first run — that cost lands in warmup, not the timing
     "sr01_logstore_typed_agg",
 ]
 
-
-# Round records adjudicated as HOST-CONTAMINATED (the r12 judge re-measured
-# the same code materially faster on the idle host: driver 16.139 s vs
-# judge 7.967 s, with the damage profile of background CPU load; the r13
-# driver run was taken at pre-boot loadavg 3.41 — load probe 1.35 —
-# vs the builder's committed idle record at loadavg 0.29, per the r13
-# VERDICT adjudication). A
-# contaminated record must never be the round-over-round comparison base —
-# it would flatter the next round by ~2×. For such a round, _prev_bench
-# only accepts an adjudicated BENCH_r{N}_builder.json replacement (the
-# builder's committed idle-host numbers for the same code) and otherwise
-# walks past it to the previous clean round.
-_CONTAMINATED_BENCH = {12, 13}
+# Registered queries the sweep leaves out, each with its reason.
+SWEEP_EXCLUDE = {
+    "d02_ngram_jaccard": "all-pairs over documents: its cost is the tiny "
+    "synthetic vocabulary's band collisions, not the engine",
+    "d04_minhash_lsh_pairs": "all-pairs over documents, as d02",
+}
 
 
-def _prev_bench(here: str | None = None) -> tuple[dict | None, str | None]:
-    """(record, basename) of the most recent *usable* round record next to
-    this script, for round-over-round deltas (VERDICT r1 item 9). Walks
-    rounds newest-first: a round whose stdout tail got truncated (r4) is
-    skipped rather than silently killing the comparison; a round in
-    _CONTAMINATED_BENCH is only usable via its *_builder.json replacement.
-    The basename is surfaced in the output so the record names its base.
-    ``here`` overrides the record directory (tests)."""
-    import glob
-    import re
-
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    rounds: dict[int, str] = {}
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            rounds[int(m.group(1))] = p
-    for rnd in sorted(rounds, reverse=True):
-        if rnd in _CONTAMINATED_BENCH:
-            # only the adjudicated replacement may stand in for a
-            # contaminated round; a clean round's driver record is always
-            # the base (a stray *_builder.json must never displace it)
-            candidates = sorted(
-                {
-                    os.path.join(here, f"BENCH_r{rnd:02d}_builder.json"),
-                    os.path.join(here, f"BENCH_r{rnd}_builder.json"),
-                }
-            )
-        else:
-            candidates = [rounds[rnd]]
-        for path in candidates:
-            try:
-                with open(path) as f:
-                    d = json.load(f)
-            except (OSError, ValueError):
-                continue
-            base = os.path.basename(path)
-            if isinstance(d, dict) and isinstance(d.get("queries"), dict):
-                return d, base
-            if isinstance(d, dict) and isinstance(d.get("parsed"), dict):
-                p = d["parsed"]
-                if isinstance(p.get("queries"), dict):
-                    return p, base
-            # driver artifact shape: our JSON line embedded in "tail"
-            if isinstance(d, dict) and isinstance(d.get("tail"), str):
-                for line in reversed(d["tail"].splitlines()):
-                    line = line.strip()
-                    if line.startswith("{") and '"headline_queries_total"' in line:
-                        try:
-                            return json.loads(line), base
-                        except ValueError:
-                            continue
-    return None, None
+def sweep_names(registry) -> list[str]:
+    """Every registered query outside HEADLINE and SWEEP_EXCLUDE."""
+    return sorted(set(registry.QUERIES) - set(HEADLINE) - set(SWEEP_EXCLUDE))
 
 
-def _streaming_bench(spark, tmp_root: str, max_per_trigger: int = 65_536) -> dict:
-    """Streaming-source throughput: drain a pre-built store through
-    ``readStream.format("logstore")`` at the reference's flow-control cap
-    (BASELINE.md: 65,536 records/trigger) into a no-op sink, and report
-    rows/sec over the non-empty triggers. Proves the trigger cap is
-    compute-bound, not planner-bound (planning is O(budget))."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from spark_streaming_logservice_spark.sources.logstore import LogstoreDataSource
-
-    spark.dataSource.register(LogstoreDataSource)
-    store = os.path.join(tmp_root, "stream-store")
-    n_rows, n_shards = 6 * max_per_trigger, 4
-    # explicit done-marker: the store is batch-written, so no _commits dir
-    # exists to infer from, and a re-run must not append a second copy
-    built = os.path.join(tmp_root, "_STORE_OK")
-    if not os.path.exists(built):
-        # 6 triggers' worth of rows, ~100 time buckets, built via the Arrow
-        # batch writer (same wire format the stream reader consumes).
-        (
-            spark.range(n_rows)
-            .select(
-                F.concat(F.lit("m"), F.col("id")).alias("msg"),
-                (F.lit(1_700_000_000) + (F.col("id") % 100)).alias("t"),
-            )
-            .repartition(n_shards)
-            .write.format("logstore")
-            .option("path", store)
-            .option("shards", str(n_shards))
-            .option("timecolumn", "t")
-            .mode("append")
-            .save()
-        )
-        with open(built, "w") as f:
-            f.write(str(n_rows))
-    # Three full drains from fresh checkpoints, keep the fastest (same keep-min
-    # rationale as the sink's 3 writes: a single ~3s drain moved ±30% on
-    # host contention alone — r7 recorded 35k rows/s on an untouched code
-    # path purely from run-environment noise).
-    best: dict = {"rows_per_sec": None, "triggers": 0, "rows": 0}
-    for _drain in range(3):
-        ck = os.path.join(tmp_root, f"stream-ck-{int(_t.time() * 1000)}")
-        q = (
-            spark.readStream.format("logstore")
-            .schema("msg STRING")
-            .option("path", store)
-            .option("startingOffsets", "earliest")
-            .option("maxOffsetsPerTrigger", str(max_per_trigger))
-            .load()
-            .writeStream.format("noop")
-            .option("checkpointLocation", ck)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        try:
-            deadline = _t.time() + 300
-            done = 0
-            while _t.time() < deadline:
-                done = sum(
-                    p["numInputRows"] for p in (q.recentProgress or []) if p
-                )
-                if done >= n_rows:
-                    break
-                _t.sleep(0.2)
-            progress = [
-                p
-                for p in (q.recentProgress or [])
-                if p and p["numInputRows"] > 0
-            ]
-        finally:
-            q.stop()
-        rows = sum(p["numInputRows"] for p in progress)
-        ms = sum(p["durationMs"]["triggerExecution"] for p in progress)
-        rps = round(rows / (ms / 1000.0), 1) if ms else None
-        if rps is not None and (
-            best["rows_per_sec"] is None or rps > best["rows_per_sec"]
-        ):
-            best = {
-                "rows_per_sec": rps,
-                "triggers": len(progress),
-                "rows": rows,
-            }
-    return {
-        "max_per_trigger": max_per_trigger,
-        "runs": 3,
-        "agg": "max",
-        **best,
-    }
-
-
-def _sink_bench(spark, tmp_root: str, n_rows: int = 262_144, n_shards: int = 4) -> dict:
-    """Write-path throughput: n_rows through the Arrow batch writer (KV
-    flattening + md5 shard routing + staged publish) into a FRESH store.
-    The input DataFrame is materialized to parquet first so the timed span
-    is the sink, not the row generator."""
-    import shutil
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from spark_streaming_logservice_spark.sources.logstore import LogstoreDataSource
-
-    spark.dataSource.register(LogstoreDataSource)
-    # params in the path: a stale fixture from a run with different
-    # n_rows/n_shards must never be timed against the current row count
-    src = os.path.join(tmp_root, f"sink-src-{n_rows}x{n_shards}.parquet")
-    if not os.path.exists(src):
-        (
-            spark.range(n_rows)
-            .select(
-                F.concat(F.lit("m"), F.col("id")).alias("msg"),
-                F.col("id").cast("string").alias("k"),
-                (F.lit(1_700_000_000) + (F.col("id") % 100)).alias("t"),
-            )
-            .repartition(n_shards)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-    df = spark.read.parquet(src)
-    df.count()  # warm the scan
-    # Warm the write path too: the first DSv2 write in a session pays ~4-5s
-    # of Python-worker spin-up + module import, which is session overhead,
-    # not sink throughput (measured: first write 12.7k rows/s, steady-state
-    # 251k rows/s on the same data).
-    warm = os.path.join(tmp_root, "sink-warm")
-    shutil.rmtree(warm, ignore_errors=True)
-    (
-        df.limit(1024)
-        .write.format("logstore")
-        .option("path", warm)
-        .option("shards", str(n_shards))
-        .option("timecolumn", "t")
-        .mode("append")
-        .save()
-    )
-    # Three timed writes into fresh stores, keep the fastest (same 3-run
-    # keep-min rationale as the queries: a single-shot write figure moved
-    # ±20% run-to-run on /tmp I-O jitter alone).
-    dt = None
-    for i in range(3):
-        store = os.path.join(tmp_root, f"sink-store-{i}")
-        shutil.rmtree(store, ignore_errors=True)
-        t0 = _t.perf_counter()
-        (
-            df.write.format("logstore")
-            .option("path", store)
-            .option("shards", str(n_shards))
-            .option("timecolumn", "t")
-            .mode("append")
-            .save()
-        )
-        d1 = _t.perf_counter() - t0
-        dt = d1 if dt is None else min(dt, d1)
-    return {
-        "rows": n_rows,
-        "sec": round(dt, 3),
-        "rows_per_sec": round(n_rows / dt, 1),
-        "runs": 3,
-        "agg": "min",
-    }
+def _materialize(df) -> None:
+    """Compute the full result and discard it."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) -> dict:
@@ -304,9 +101,9 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
     n_events = events.count()  # warm the scan; rows/s denominator
     from spark_streaming_logservice_spark.streaming import rollup as _R
 
-    # Two full passes into FRESH stores, keep the faster (same rationale as
-    # the sink/stream sections: a single 4-batch pass is dominated by /tmp
-    # rename+fsync jitter and moved ±40% across back-to-back runs).
+    # Two full passes into FRESH stores, keep the faster: a single 4-batch
+    # pass is dominated by /tmp rename+fsync jitter and moved ±40% across
+    # back-to-back runs.
     dt, breakdown = None, {}
     for p in range(2):
         table = os.path.join(tmp_root, f"rollup-table-{p}")
@@ -332,9 +129,6 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
         # distinct over the cached minute partials (the batch's one scan),
         # write = the one merged-output Spark job (base ∪ delta
         # re-aggregate, from the cache), publish = marker + renames.
-        # Measured in isolation (r8, fresh JVM, core section only) so the
-        # figure and this breakdown are trustworthy vs the r7 run,
-        # which timed this after a 110-operator sweep in the same JVM.
         "phase_sec": breakdown,
         "note": (
             "sharded-store publish: each batch pays a distinct over its "
@@ -345,8 +139,7 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
     }
 
     # documents is 5k rows at sf0.1 — 1.25k-row micro-batches measure
-    # Spark's fixed per-job scheduling latency, not the operator (the
-    # r1-r6 figure of ~2.4k rows/s was exactly that floor). Replicate to
+    # Spark's fixed per-job scheduling latency, not the operator. Replicate to
     # ~100k UNIQUE texts so dedup batches carry the same row volume as the
     # rollup batches above and the store grows to corpus size — the
     # apples-to-apples throughput of the digest store itself.
@@ -361,8 +154,8 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
     n_docs = n_base * k
     from spark_streaming_logservice_spark.streaming import dedup_store as _DS
 
-    # A/B the store digest (VERDICT r9 item 6): the digest never crosses
-    # engines, so the impl is a pure cost knob — measure md5 (historical)
+    # A/B the store digest: the digest never crosses engines, so the
+    # impl is a pure cost knob — measure md5 (historical)
     # vs the two-seed-xxhash64 128-bit default, best-of-2 fresh-store
     # passes each; the headline figure is the adopted default's.
     ab: dict[str, float] = {}
@@ -400,28 +193,23 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
         "agg": "min",
         "sec": round(dt, 3),
         "rows_per_sec": round(n_docs / dt, 1),
-        # per-phase wall-clock across all batches (VERDICT r8 item 4):
+        # per-phase wall-clock across all batches:
         # dedup = digest + within-batch collapse + store scan + anti-join
         # (the batch's one corpus-keyed shuffle and the store's sequential
         # scan), forward = downstream count over the cached novel set,
         # digests = the 16-byte-key parquet append.
         "phase_sec": dbreak,
         # md5 vs xxhash128 (two-seed xxhash64 pair), same 4-batch pass —
-        # the adopted default is whichever this A/B justifies (r10: the
+        # the adopted default is whichever this A/B justifies (the
         # xxhash128 store path, same 128-bit birthday bound as md5).
         "digest_ab_sec": ab,
         "digest_impl": "xxhash128",
         "note": (
-            "input replicated to ~100k unique rows (r7) so batches carry "
-            "the same volume as the rollup bench — the r1-r6 figure "
-            "(~2.4k rows/s on 1.25k-row batches) measured Spark's fixed "
-            "per-job latency, not the operator; the store itself is "
-            "append-only with a map-only broadcast-probe anti-join. The "
-            "gap vs the sink's rows/s is the dedup phase (see phase_sec): "
-            "an md5 over full text + a row_number collapse shuffle of the "
-            "whole batch — the irreducible price of exactly-once content "
-            "dedup, not store-maintenance overhead (digest append is "
-            "batch-sized, store scan map-only)"
+            "input replicated to ~100k unique rows so batches carry the "
+            "same volume as the rollup bench; the store is append-only "
+            "with a map-only broadcast-probe anti-join, so most of the "
+            "time is the dedup phase (see phase_sec): a digest over full "
+            "text + a row_number collapse shuffle of the whole batch"
         ),
     }
 
@@ -461,7 +249,7 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
         "rows_per_sec": round(n_seg * seg_rows / dt, 1),
     }
 
-    # Drift admission gate (r11): what the per-batch BEFORE-admission
+    # Drift admission gate: what the per-batch BEFORE-admission
     # scoring costs on top of the plain profile merge, and what the
     # driver-side bucket pruning saves the scoring scan. Same 4-batch
     # best-of-2 discipline as the sections above.
@@ -522,7 +310,7 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
         ),
     }
 
-    # Composed ingest pipeline (r11): gate → dedup → forward as ONE
+    # Composed ingest pipeline: gate → dedup → forward as ONE
     # foreachBatch (streaming/ingest_pipeline.py) — the per-batch price of
     # the full admission path (drift scoring + quarantine + digest dedup +
     # downstream forward + profile merge + digest append), comparable
@@ -564,86 +352,11 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
     return out
 
 
-_BURN_N = 8_000_000  # ~0.5 s of pure-python integer work per process
-
-
-def _burn(n: int) -> int:
-    s = 0
-    for i in range(n):
-        s += i * i
-    return s
-
-
-def _load_probe(reps: int = 2) -> dict:
-    """Concurrent-load indicator (r12 VERDICT item 2): the r12 driver
-    record was host-contaminated — headline 2× the idle-host number — and
-    nothing IN the record said so. This probe makes a contaminated run
-    self-identifying: one fixed CPU burn timed on ONE process, then the
-    same burn on EVERY core simultaneously. On an idle host the all-core
-    wall time tracks the serial wall time (every burn gets its own core,
-    modulo SMT sharing); background load inflates the all-core number
-    first and hardest. Judge the RATIO against the committed idle-host
-    baseline in BENCH_DETAIL — a round-over-round jump in
-    parallel_over_serial (or loadavg) means the host was busy and the
-    run's whole-core shuffle queries are not comparable."""
-    import multiprocessing as mp
-
-    loadavg = os.getloadavg()
-    cpus = os.cpu_count() or 1
-    serial = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        _burn(_BURN_N)
-        dt = time.perf_counter() - t0
-        serial = dt if serial is None else min(serial, dt)
-    par = None
-    ctx = mp.get_context("fork")
-    for _ in range(reps):
-        with ctx.Pool(cpus) as pool:
-            t0 = time.perf_counter()
-            pool.map(_burn, [_BURN_N] * cpus)
-            dt = time.perf_counter() - t0
-        par = dt if par is None else min(par, dt)
-    return {
-        "loadavg_1m": round(loadavg[0], 2),
-        "loadavg_5m": round(loadavg[1], 2),
-        "cpus": cpus,
-        "serial_burn_sec": round(serial, 4),
-        "allcore_burn_sec": round(par, 4),
-        "parallel_over_serial": round(par / serial, 2),
-    }
-
-
-def _calibration(spark, sf_dir: str) -> dict:
-    """Fixed reference scan (VERDICT r8 item 5): one full lineitem pass
-    through a two-column arithmetic aggregate, best-of-3. The same code
-    measured 8.21/8.90/9.98 s headline across environments in r8, so raw
-    cross-round headline deltas under ~20% are noise; headline divided by
-    this code-independent yardstick is the comparable number."""
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        li.select(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        ).collect()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return {
-        "metric": "lineitem_full_scan_agg",
-        "sec": round(best, 4),
-        "runs": 3,
-        "agg": "min",
-    }
-
-
 def _ann_store_bench(spark, tmp_root: str, sf_dir: str) -> dict:
-    """Persisted ANN index (VERDICT r8 item 3): train+encode ONCE into the
-    store, then serving pays scoring only — the split a real 100 TB vector
-    platform budgets (index build is an offline job; per-query cost is the
-    probe/score stage). Serve figures are best-of-3 on the same store."""
+    """Persisted ANN index: train+encode ONCE into the store, then serving
+    pays scoring only — the split a real 100 TB vector platform budgets
+    (index build is an offline job; per-query cost is the probe/score
+    stage). Serve figures are best-of-3 on the same store."""
     import shutil
     import time as _t
 
@@ -670,7 +383,7 @@ def _ann_store_bench(spark, tmp_root: str, sf_dir: str) -> dict:
         best = None
         for _ in range(3):
             t0 = _t.perf_counter()
-            fn(spark, ann_dir, q).count()
+            _materialize(fn(spark, ann_dir, q))
             dt = _t.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         out[key] = round(best, 3)
@@ -683,9 +396,8 @@ def _ann_store_bench(spark, tmp_root: str, sf_dir: str) -> dict:
         "(s24/s25 share s05/s07's full-pipeline oracles)."
     )
 
-    # Admission-gate price (VERDICT r10 item 6 follow-up): the SAME
-    # in-distribution batch merged through the ungated incremental writer
-    # vs the drift-gated one. The gate's marginal work is one O(K_CELLS)
+    # Admission-gate price: the SAME in-distribution batch merged through
+    # the ungated incremental writer vs the drift-gated one. The gate's marginal work is one O(K_CELLS)
     # cell-count collect + a driver-side L1 — plus, on the FIRST batch of
     # an application, the one-time index-histogram read (cached after).
     batch = emb.where(F.col("vec_id") % 2 == 0)
@@ -724,9 +436,8 @@ def _ann_store_bench(spark, tmp_root: str, sf_dir: str) -> dict:
 
 
 def _maintenance_scale(spark, tmp_root: str, sf_dir: str) -> dict:
-    """Store MAINTENANCE cost at 1x vs 10x HISTORY (VERDICT r8 item 6):
-    merge the SAME batch into a young store vs one holding 10x the
-    history, with per-phase attribution. The claims under test: the
+    """Store MAINTENANCE cost at 1x vs 10x HISTORY: merge the SAME batch
+    into a young store vs one holding 10x the history, with per-phase attribution. The claims under test: the
     sharded rollup's merge is O(touched shards) — flat in history; the
     dedup digest store's merge is O(store scan) — linear in history by
     design (one sequential map-only pass, no shuffle, no rewrite); the
@@ -885,8 +596,8 @@ def _maintenance_scale(spark, tmp_root: str, sf_dir: str) -> dict:
     )
     out["hll_store"] = hl
 
-    # ANN vectors store (VERDICT r9 item 5): merge the SAME encode batch
-    # into an index holding 1x vs 10x vectors. The claim under test is the
+    # ANN vectors store: merge the SAME encode batch into an index holding
+    # 1x vs 10x vectors. The claim under test is the
     # append-mostly vec_id sharding (ann_index.VEC_SHARD): a batch of new
     # high vec_ids rewrites only its own tail shard(s), so merge_sec is
     # flat in index size.
@@ -963,51 +674,47 @@ def _boot():
     return spark, registry, sf_dir
 
 
-def _time_queries(spark, registry, sf_dir: str, names, runs: int) -> dict:
-    """N timed runs per query, keep the min: steady-state engine cost, not
-    JIT/warmup jitter. Two runs proved insufficient on noisy virtualized
-    hosts — JIT warmup of a query's codegen'd stages routinely bleeds into
-    run 2, and the min of two inflated runs reads as a phantom regression
-    round-over-round."""
-    timings: dict[str, float] = {}
+def _time_queries(spark, registry, sf_dir: str, names, runs: int) -> tuple[dict, dict]:
+    """({name: wall s}, {name: cpu s}) of each query's fastest of ``runs``
+    full materializations: steady-state engine cost, not JIT/warmup jitter
+    (a query's codegen'd stages routinely warm into run 2). The CPU seconds
+    are the process tree's (driver, JVM, Python workers) in that same run."""
+    wall: dict[str, float] = {}
+    cpu: dict[str, float] = {}
     for name in names:
-        fn = registry.QUERIES.get(name)
-        if fn is None:
-            continue
+        fn = registry.QUERIES[name]
         best = None
         for _ in range(runs):
+            window = harness.CpuWindow()
+            window.start()
             t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
+            _materialize(fn(spark, sf_dir))
             dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-    return timings
+            used = sum(window.stop().values())
+            if best is None or dt < best[0]:
+                best = (dt, used)
+        wall[name] = round(best[0], 3)
+        cpu[name] = round(best[1], 3)
+    return wall, cpu
 
 
 def _section_core() -> dict:
-    """Headline queries + streaming/sink/maintenance throughput, in a JVM
-    that has run NOTHING else — the r7 verdict traced ~4× swings in the
-    stream/sink figures to measuring them after the 110-operator extras
-    sweep in the same session (GC/state perturbation), so the trustworthy
-    numbers get their own process."""
-    # host-load sample BEFORE the JVM exists (purest host signal) …
-    try:
-        probe_before = _load_probe()
-    except Exception as ex:
-        probe_before = {"error": f"{type(ex).__name__}: {ex}"}
+    """Headline queries + maintenance throughput, in a JVM that has run
+    nothing else: measured after the long sweep in the same session, the
+    maintenance figures swung up to 4× (GC/state perturbation)."""
+    host = harness.fingerprint()  # before the JVM exists
     spark, registry, sf_dir = _boot()
 
     # Warm the JVM + parquet footers once so per-query timings measure the
     # engine, not session startup; also pre-builds the sr01 fixture store.
-    registry.QUERIES["q01_pricing_summary"](spark, sf_dir).count()
-    registry.QUERIES["sr01_logstore_typed_agg"](spark, sf_dir).count()
+    _materialize(registry.QUERIES["q01_pricing_summary"](spark, sf_dir))
+    _materialize(registry.QUERIES["sr01_logstore_typed_agg"](spark, sf_dir))
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    timings = _time_queries(spark, registry, sf_dir, HEADLINE, runs)
+    timings, cpu = _time_queries(spark, registry, sf_dir, HEADLINE, runs)
 
-    # Record the actual input sizes: the driver regenerates testdata between
-    # rounds (round 5 grew documents 2.5x and embeddings 4x at the bench SF),
-    # so vs_prev deltas are only interpretable next to the row counts.
+    # The input sizes: test data is regenerated from time to time, so a
+    # record is only comparable next to its row counts.
     data_probe: dict[str, int] = {}
     try:
         import duckdb
@@ -1028,47 +735,15 @@ def _section_core() -> dict:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "runs": runs,
         "agg": "min",
+        "materialize": "noop",
+        "cpu_s": cpu,
+        "host": host,
     }
     if data_probe:
         out["data_probe"] = data_probe
 
-    # … and AFTER the timed queries (load arriving mid-run shows here);
-    # a contaminated record self-identifies instead of needing a judge
-    # re-measurement to adjudicate (r12's failure mode)
-    try:
-        probe_after = _load_probe()
-    except Exception as ex:
-        probe_after = {"error": f"{type(ex).__name__}: {ex}"}
-    out["load_probe"] = {"before_boot": probe_before, "after_queries": probe_after}
-
-    # Cross-environment calibration yardstick (VERDICT r8 item 5).
-    try:
-        out["calibration"] = _calibration(spark, sf_dir)
-        out["calibration"]["headline_over_calibration"] = round(
-            out["value"] / out["calibration"]["sec"], 2
-        )
-    except Exception as ex:
-        out["calibration"] = {"error": f"{type(ex).__name__}: {ex}"}
-
-    # Streaming throughput section (VERDICT r2 item 5).
-    try:
-        out["streaming"] = _streaming_bench(
-            spark, os.path.join(tempfile.gettempdir(), "spark_graft_streambench")
-        )
-    except Exception as ex:
-        out["streaming"] = {"error": f"{type(ex).__name__}: {ex}"}
-
-    # Sink write-path throughput (the reference's envelope bounds ingest,
-    # not just scan — BASELINE.md producer rows/sec has no published number,
-    # so this records ours).
-    try:
-        out["sink"] = _sink_bench(
-            spark, os.path.join(tempfile.gettempdir(), "spark_graft_sinkbench")
-        )
-    except Exception as ex:
-        out["sink"] = {"error": f"{type(ex).__name__}: {ex}"}
-
-    # Stateful-maintenance throughput (rollup merge + dedup-on-ingest).
+    # Stateful-maintenance throughput (rollup merge, dedup-on-ingest,
+    # compaction, drift gate, composed ingest pipeline).
     try:
         out["maintenance"] = _maintenance_bench(
             spark,
@@ -1081,59 +756,45 @@ def _section_core() -> dict:
 
 
 def _section_sweep() -> dict:
-    """Extras (every non-headline operator) + the 10× scale replica —
-    the long tail, isolated from the core section's JVM."""
+    """The registry sweep + the 10× scale replica — the long tail,
+    isolated from the core section's JVM."""
     spark, registry, sf_dir = _boot()
-    registry.QUERIES["q01_pricing_summary"](spark, sf_dir).count()  # warm
+    _materialize(registry.QUERIES["q01_pricing_summary"](spark, sf_dir))  # warm
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     out: dict = {}
 
     # Build the shared LSH+CC cluster assignment ONCE, cold, with per-round
-    # CC stats — the honest cost of the chain. The five consumers
-    # (d08/d09/d18/d20/p17) then time their post-chain cost against the
-    # session-pinned assignment (the serving posture a real pipeline runs:
-    # cluster once, consume many times). Disclosed here so the per-query
-    # extras numbers are read correctly.
+    # CC stats — the honest cost of the chain. Its consumers (d08/d09/d18/
+    # d20/p17) then time their post-chain cost against the session-pinned
+    # assignment (cluster once, consume many times).
     from spark_streaming_logservice_spark.operators import dedup as _dd
     from spark_streaming_logservice_spark.operators import graph as _g
 
     _g.CC_STATS = {}
     t0 = time.perf_counter()
-    _dd.cluster_assignments(spark, sf_dir).count()
+    _materialize(_dd.cluster_assignments(spark, sf_dir))
     build_sec = round(time.perf_counter() - t0, 3)
     _cc_rounds = _g.CC_STATS.get("rounds", [])
     _g.CC_STATS = None
-    # Phase attribution (VERDICT r7 watch item): re-run the pair stage
-    # alone on a fresh identical plan (warm JVM, cold shuffles — a new
-    # DataFrame shares no shuffle files with the build above), so
-    # build_sec ≈ pairs_sec + sum(cc_rounds) + checkpoint/materialize.
+    # Phase attribution: the pair stage alone on a fresh identical plan
+    # (warm JVM, cold shuffles — a new DataFrame shares no shuffle files
+    # with the build above), so build_sec ≈ pairs_sec + cc_sec +
+    # checkpoint materialization.
     from spark_streaming_logservice_spark.tables import load_table as _lt
 
     t0 = time.perf_counter()
-    n_pairs = (
-        _dd.lsh_verified_pairs(_lt(spark, sf_dir, "documents"))
-        .where("jaccard >= 0.8")
-        .count()
+    _materialize(
+        _dd.lsh_verified_pairs(_lt(spark, sf_dir, "documents")).where("jaccard >= 0.8")
     )
     pairs_sec = round(time.perf_counter() - t0, 3)
     out["neardup_chain"] = {
         "build_sec": build_sec,
         "pairs_sec": pairs_sec,
-        "n_pairs": n_pairs,
         "cc_sec": round(sum(r.get("sec", 0) for r in _cc_rounds), 3),
         "cc_rounds": _cc_rounds,
-        "note": (
-            "cold one-time build of the shared near-dup assignment "
-            "(minhash -> LSH bucket join -> jaccard verify -> "
-            "large/small-star CC); d08/d09/d18/d20/p17 extras below "
-            "measure post-chain cost against this pinned relation. "
-            "pairs_sec is the same pair stage re-measured standalone "
-            "(cold shuffles); build_sec - pairs_sec - cc_sec ~= "
-            "localCheckpoint materialization"
-        ),
     }
 
-    # Persisted ANN index store: build-once vs serve-only split (r9).
+    # Persisted ANN index store: build-once vs serve-only split.
     try:
         out["ann_store"] = _ann_store_bench(
             spark,
@@ -1143,213 +804,23 @@ def _section_sweep() -> dict:
     except Exception as ex:
         out["ann_store"] = {"error": f"{type(ex).__name__}: {ex}"}
 
-    # Round-3 operator families, reported separately so the headline set —
-    # and its round-over-round total — stays comparable. One steady-state
-    # number each (2 runs keep-min): connected-components dedup clustering
-    # (iterative, driver-round-trip bound at this SF), PQ ANN, repetition
-    # metrics.
-    extra_names = [
-        "d08_dedup_clusters",
-        "s07_ann_pq",
-        "t06_repetition_metrics",
-        "t07_pii_redaction",
-        "p06_mixture_upsample",
-        "d10_window_dedup",
-        "d11_incremental_dedup",
-        "t08_filter_rules",
-        "p07_balanced_shards",
-        "s09_centroid_residuals",
-        # round 4
-        "s11_semdedup",
-        "v01_vocab_topk",
-        "v02_bpe_pair_counts",
-        "v03_tfidf_top_terms",
-        "p08_pergroup_sample",
-        "t09_length_percentiles",
-        "s13_int8_quantize",
-        # round 5
-        "g01_pagerank",
-        "q25_salted_skew_join",
-        "e07_multires_rollup",
-        "c01_scd2_intervals",
-        "s14_dim_stats",
-        "t10_unigram_logprob",
-        "p10_weighted_sample",
-        "e08_conversion_funnel_7d",
-        "d12_minhash_calibration",
-        "l16_windowed_heavy_hitters",
-        "v04_vocab_coverage",
-        # round 6
-        "l17_log_templates",
-        "t11_bigram_logprob",
-        "s15_hamming_ann",
-        "l18_error_bursts",
-        "e09_last_touch_attribution",
-        "m05_image_luma_stats",
-        "sql06_lateral_topn",
-        "v05_zipf_slope",
-        "e10_dau_wau_stickiness",
-        "m06_audio_pcm_stats",
-        "d13_containment_pairs",
-        "j04_asof_forward",
-        "g02_triangle_count",
-        "sql07_window_battery",
-        "t12_column_profile",
-        "m07_image_resize",
-        "l19_countmin_frequency",
-        "d14_bloom_decontamination",
-        "l20_hopping_window",
-        "s16_mips_topk",
-        "g03_khop_reachability",
-        "t13_lexical_diversity",
-        "v06_bpe_merge_rounds",
-        "q26_top_supplier_revenue",
-        "c03_upsert_with_deletes",
-        "p11_neyman_allocation",
-        "p12_kfold_assignment",
-        "l21_event_trigram_paths",
-        "e11_ab_test_lift",
-        "p13_temperature_mixture",
-        "d16_bbit_minhash",
-        "m08_video_scene_cuts",
-        "v07_bm25_scoring",
-        "p14_group_split",
-        "l22_equidepth_histogram",
-        "d17_fuzzy_name_join",
-        "q27_monthly_growth",
-        "m09_image_ahash_neardup",
-        "e12_rfm_segments",
-        "m10_audio_silence_segments",
-        "e13_cumulative_reach",
-        "m11_png_text_metadata",
-        "sql08_range_frame",
-        "t14_source_divergence",
-        "q28_waiting_suppliers",
-        "e14_metric_correlation",
-        "p15_curation_manifest",
-        # round 6, third wave
-        "l23_hourly_gap_fill",
-        "e15_seasonality_profile",
-        "e16_changepoint_detection",
-        "e17_growth_accounting",
-        "c04_snapshot_asof",
-        "s17_cosine_range_search",
-        "sql09_unpivot",
-        "g05_label_propagation",
-        "p16_mixture_schedule",
-        "m12_audio_downsample",
-        "t15_ngram_novelty",
-        "j05_nearest_event_join",
-        "p17_leakage_free_split",
-        "q29_dominant_suppliers",
-        "v08_heaps_law",
-        "s18_threshold_sweep",
-        "e18_mad_anomalies",
-        "m13_image_contrast_stretch",
-        "q30_order_count_distribution",
-        "l24_dynamic_session_window",
-        "s19_lsh_recall_at_k",
-        "e19_interevent_gaps",
-        "e20_slo_burn_rate",
-        "q31_revenue_concentration",
-        "p18_dataset_card",
-        "e21_cohort_ltv",
-        "q32_ship_latency_percentiles",
-        "m14_video_keyframes",
-        "d18_cluster_size_histogram",
-        # round 7
-        "d19_cross_source_dup_matrix",
-        "c05_scd2_temporal_join",
-        "s20_sq8_rerank",
-        "p19_curriculum_order",
-        "d20_quality_collapse",
-        "v09_tokenizer_fertility",
-        "t16_overlap_chunking",
-        "s21_mmr_diversified_topk",
-        "d21_sorted_neighborhood",
-        "e22_survival_curve",
-        "p20_snapshot_diff",
-        "s22_multiprobe_lsh_recall",
-        "l25_hll_cardinality",
-        "l26_kmv_overlap",
-        "e23_event_transitions",
-        "d22_ngram_contamination",
-        "e24_peak_concurrency",
-        "e25_bot_regularity",
-        "l27_template_drift",
-        "g06_degree_powerlaw",
-        "e26_autocorrelation",
-        "e27_theilsen_trend",
-        "c06_cdc_net_effect",
-        "d23_containment",
-        "p21_inspection_sample",
-        "e28_conversion_latency",
-        "s23_knn_label_accuracy",
-        "l28_shard_balance",
-        "p22_epoch_shuffle",
-        "d24_dedup_funnel",
-        "l29_error_incidents",
-        "v10_vocab_overlap",
-        # round 9 (s24-s26 serve from the persisted ANN index: first run
-        # pays the one-time build via ensure_index, keep-min reports
-        # serve-only)
-        "s24_ann_ivf_served",
-        "s25_ann_pq_served",
-        "s26_ivf_nprobe_sweep",
-        "e29_retention_matrix",
-        "e30_anomaly_attribution",
-        "l30_volume_forecast",
-        "t17_funnel_token_budget",
-        "d25_shingle_df_spectrum",
-        "p24_sequence_packing",
-        "t18_quality_deciles",
-        "s27_adc_rank_fidelity",
-        "e31_experiment_power",
-        "p25_mixture_diversity",
-        "g07_degree_assortativity",
-        # round 10 (s28/s29 serve from the persisted ANN index)
-        "s28_ivf_cell_balance",
-        "s29_pq_reconstruction_error",
-        "g08_ra_link_prediction",
-        "e32_burstiness_fano",
-        "q33_brand_repeat_share",
-        "p26_epoch_allocation",
-        "sql10_qualify_topn",
-        "t19_positional_drift",
-        "d26_prefix_dedup",
-        "v11_char_bigram_entropy",
-        # round 11
-        "p27_dedup_aware_mixture",
-        "d27_dup_substring_spans",
-        "d28_dup_span_removal",
-        # round 12
-        "d29_dup_span_removal_canonical",
-        # round 13
-        "q34_copurchase_lift",
-        "j06_value_band_join",
-        # round 14
-        "s30_ndcg_mrr",
-        "e33_session_funnel_attribution",
-    ]
-    # Same 3-run keep-min as the headliners: the iterative trainers
-    # (d08, s07) pay a multi-second codegen warmup on run 1, so a 2-run
-    # min still reported a warming run, not steady state.
-    extras = _time_queries(spark, registry, sf_dir, extra_names, runs)
-    out["extra_operators"] = {"queries": extras, "runs": runs, "agg": "min"}
+    names = sweep_names(registry)
+    extras, extras_cpu = _time_queries(spark, registry, sf_dir, names, runs)
+    out["extra_operators"] = {
+        "queries": extras,
+        "cpu_s": extras_cpu,
+        "runs": runs,
+        "agg": "min",
+    }
 
-    # Scale-base headline timings measured in THIS session (2 runs, same
-    # as the replica below) so scaling_vs_base compares like with like;
-    # the core section's 3-run figures live in their own process.
-    timings = _time_queries(spark, registry, sf_dir, HEADLINE, 2)
+    # Scale base: the headline in THIS session with the replica's 2 runs,
+    # so scaling_vs_base compares like with like.
+    timings, _cpu = _time_queries(spark, registry, sf_dir, HEADLINE, 2)
 
-    # Scale section (VERDICT r2 item 4, extended to the extras set in r6):
-    # the same queries at a 10× key-consistent replica, reported with
-    # per-query scaling factors (≈10 ⇒ linear plan; ≫10 ⇒ superlinear risk
-    # at 100 TB). sr01 is excluded — it runs on its own fixture store, not
-    # the SF tables. Everything gets 2 runs keep-min: run 1 at a NEW sf_dir
-    # pays a fresh janino/codegen compile (plans embed the scan path), which
-    # misreported d10 as 21.8× cold when its warm curvature is 3.8× —
-    # cold-compile cost is a constant, not curvature.
+    # The same queries at a 10× key-consistent replica, with per-query
+    # scaling factors (≈10 ⇒ linear plan; ≫10 ⇒ superlinear risk). 2 runs
+    # keep-min: run 1 at a new sf_dir pays a fresh codegen compile (plans
+    # embed the scan path), a constant, not curvature.
     scale_factor = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "10"))
     if scale_factor > 1:
         try:
@@ -1365,27 +836,23 @@ def _section_sweep() -> dict:
             # chain's own scaling curve is recorded explicitly
             _g.CC_STATS = {}
             t0 = time.perf_counter()
-            _dd.cluster_assignments(spark, scale_dir).count()
+            _materialize(_dd.cluster_assignments(spark, scale_dir))
             chain_10x = {
                 "build_sec": round(time.perf_counter() - t0, 3),
                 "cc_rounds": _g.CC_STATS.get("rounds", []),
             }
             _g.CC_STATS = None
-            scaled: dict[str, float] = {}
-            for name in HEADLINE + [n for n in extra_names if n in extras]:
-                if name == "sr01_logstore_typed_agg":
-                    continue
-                best = None
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    registry.QUERIES[name](spark, scale_dir).count()
-                    dt = time.perf_counter() - t0
-                    best = dt if best is None else min(best, dt)
-                scaled[name] = round(best, 3)
+            # sr* read a logstore fixture built from events through Python
+            # rows once per sf_dir, not the replica's tables
+            scaled_names = [n for n in HEADLINE + names if not n.startswith("sr")]
+            scaled, scaled_cpu = _time_queries(
+                spark, registry, scale_dir, scaled_names, 2
+            )
             out["scale"] = {
                 "factor": scale_factor,
                 "value": round(sum(scaled[n] for n in HEADLINE if n in scaled), 3),
                 "queries": scaled,
+                "cpu_s": scaled_cpu,
                 "neardup_chain": chain_10x,
                 "runs": 2,
                 "scaling_vs_base": {
@@ -1393,381 +860,9 @@ def _section_sweep() -> dict:
                     for n in scaled
                     if base_times.get(n)
                 },
-                # Measured explanations for the non-linear growth curves
-                # (r6 verdict item 4): the key-offset replica duplicates
-                # every row VERBATIM factor× — genuine duplicate structure
-                # grows superlinearly, so duplicate-finding queries carry
-                # superlinearly more TRUE work, not a plan defect.
-                "notes": {
-                    "_r14_ratio_denominator": (
-                        "r14's metadata-cache win (tables.load_table scan-"
-                        "handle cache) removed 0.1-0.7 s of FIXED per-query "
-                        "cost from every base timing while the 10x timings "
-                        "are data-bound — so scaling_vs_base ratios rose "
-                        "mechanically on queries whose base shrank, with "
-                        "the 10x absolute time flat or better. Compare "
-                        "absolute 10x seconds round-over-round before "
-                        "reading any r14 ratio jump as new curvature."
-                    ),
-                    "t12_column_profile": (
-                        "single-scan Expand + partial agg (plan-pinned); "
-                        "base 1.58->0.91 s via the r14 metadata cache "
-                        "(ratio denominator), and the 10x replica was "
-                        "regenerated this round (driver refreshed testdata) "
-                        "so the distinct-value structure the Expand "
-                        "aggregates differs from the r13-era replica; 10x "
-                        "absolute 5.1 s vs 3.2 s on the old corpus."
-                    ),
-                    "d12_minhash_calibration": (
-                        "ratio denominator (base 1.57->1.19 s) plus "
-                        "regenerated-replica duplicate structure: the "
-                        "calibration's verified-pair volume tracks the "
-                        "corpus's true near-dup density, which changed "
-                        "with the regenerated testdata; r13 adjudicated "
-                        "this query's idle curve at 2.16x "
-                        "(QUIET_HOST-class volatility under load)."
-                    ),
-                    "d13_containment_pairs": (
-                        "same shape as d12: df-capped shingle pair join — "
-                        "pair volume = sum df^2 over shared shingles, a "
-                        "property of the regenerated corpus's duplicate "
-                        "structure; base also shrank via the metadata "
-                        "cache (1.23->1.01 s)."
-                    ),
-                    "e10_dau_wau_stickiness": (
-                        "ratio denominator: base 0.39->0.27 s; 10x "
-                        "absolute 1.15 s (two keyed distinct-user "
-                        "aggregates + a 7-day range join, linear work — "
-                        "the 0.2 s drift at 10x is within the noise band)."
-                    ),
-                    "c06_cdc_net_effect": (
-                        "ratio denominator: base 0.41->0.31 s; 10x "
-                        "absolute 1.11 s vs 1.05 s on the old corpus — "
-                        "flat; the net-effect fold is one keyed agg."
-                    ),
-                    "sql10_qualify_topn": (
-                        "ratio denominator only: base 1.00->0.30 s AND 10x "
-                        "absolute IMPROVED 1.78->1.06 s (WindowGroupLimit "
-                        "prunes map-side); the 3.55x is entirely the "
-                        "smaller base."
-                    ),
-                    "q34_copurchase_lift": (
-                        "linear work: pair volume = sum C(basket,2) over "
-                        "orders, and the replica replicates ORDERS (not "
-                        "basket width), so pairs grow ~10x with the data; "
-                        "measured 2.96x on the idle host (r13, "
-                        "QUIET_HOST.r13_q34_swap_remeasure) — a >3.5x "
-                        "reading here is the q01/q03-class load-noise "
-                        "signature (the r13 driver run read 4.32x at "
-                        "loadavg 3.41), re-measure on a quiet host."
-                    ),
-                    "j06_value_band_join": (
-                        "linear work: candidates are structurally capped "
-                        "at 3x the click side by the bucket expansion, and "
-                        "the replica shifts user_id per copy so "
-                        "per-(user,bucket) occupancy is constant; measured "
-                        "3.1x at 10x on the idle host (r13). A >3.5x "
-                        "reading is load noise, not curvature."
-                    ),
-                    "s30_ndcg_mrr": (
-                        "linear work: both legs scan the corpus once "
-                        "against the FIXED N_QUERY broadcast query set "
-                        "(exact-relevance leg = s01's shape, retrieved "
-                        "leg = s20's int8 candidate stage), top-k windows "
-                        "are q_id-partitioned WindowGroupLimit, and "
-                        "everything downstream is O(N_QUERY) rows."
-                    ),
-                    "e33_session_funnel_attribution": (
-                        "linear work: ONE user-keyed session_window "
-                        "shuffle (sessions are user-local; the replica "
-                        "shifts user_id so per-user event counts are "
-                        "constant) + an O(event_types) rollup; no joins, "
-                        "no corpus-wide windows."
-                    ),
-                    "e31_experiment_power": (
-                        "sub-second jitter straddler, not curvature: the "
-                        "power/MDE math runs over the O(variants) "
-                        "aggregate of ONE corpus shuffle. Measured "
-                        "0.38-0.51 s base and 1.20-1.51 s at 10x across "
-                        "r12/r13 idle-host runs (2.35x-4.02x) — the ratio "
-                        "straddles 3.5x on ±0.15 s of noise at BOTH ends."
-                    ),
-                    "e20_slo_burn_rate": (
-                        "sub-second jitter, not curvature: one 5-minute "
-                        "bucket rollup (the only corpus shuffle) + windows "
-                        "over the O(buckets) aggregate — bucket count is "
-                        "IDENTICAL at 10x (same time span, denser "
-                        "buckets). Measured 0.83-1.16 s at 10x across "
-                        "three same-code runs (2.8x-3.9x), straddling the "
-                        "3.5x line on ±0.3 s of timing noise."
-                    ),
-                    "d29_dup_span_removal_canonical": (
-                        "expected dup-structure growth, straddles 3.5x "
-                        "on sub-second jitter: verbatim replication makes "
-                        "every 5-gram duplicated, so d29's NON-canonical "
-                        "hit set grows like d28's (~99.9x gram "
-                        "occurrences) while the keeper election itself "
-                        "stays one map-side-combined aggregate; measured "
-                        "2.3x-3.6x across fresh 2-run sessions — the "
-                        "spread is the d28 family's documented jitter "
-                        "band, not plan curvature."
-                    ),
-                    "d27_dup_substring_spans": (
-                        "expected dup-structure growth: verbatim "
-                        "replication makes EVERY 5-gram a duplicate — "
-                        "duplicated gram occurrences measured 25,090 (1x) "
-                        "-> 2,507,040 (10x) = 99.9x — yet time stays "
-                        "~1.5x: the md5-keyed count shuffle is linear in "
-                        "grams regardless of duplication, and the island "
-                        "merge is linear in hits."
-                    ),
-                    "s03_cosine_neardup_pairs": (
-                        "expected candidate growth: identical replicated "
-                        "vectors share an LSH cell at ANY plane count; "
-                        "measured same-cell pairs 1,971 (1x) -> 101,900 "
-                        "(10x) = 51.7x true candidates (planes did adapt "
-                        "10 -> 14). ~7x time on 51.7x candidates is "
-                        "sublinear in true work; organic non-duplicated "
-                        "growth is what adaptive_n_planes bounds."
-                    ),
-                    "d10_window_dedup": (
-                        "expected: the replica makes every document a "
-                        "factor-way duplicate, so duplicated window hashes "
-                        "grow 10,533 (1x) -> 224,694 (10x) = 21.3x and the "
-                        "dup semi-join survivor set covers ~the whole "
-                        "corpus; ~4.5x time on 10x rows + 21x dup "
-                        "structure."
-                    ),
-                    "g02_triangle_count": (
-                        "expected: degree-oriented wedge enumeration is "
-                        "O(E^1.5) — the optimal exact-triangle bound — so "
-                        "10x edges implies up to ~31.6x wedges; measured "
-                        "growth stays well under that."
-                    ),
-                    "q25_salted_skew_join": (
-                        "by design: the salted join replicates the dim "
-                        "side n_salt(=8)x to spread a hot key, so its "
-                        "shuffle volume is deliberately 8x a plain join's "
-                        "at every scale — the price of skew immunity the "
-                        "query demonstrates (oracle = the plain join)."
-                    ),
-                    "s18_threshold_sweep": (
-                        "same mechanism as s03 (cell-keyed pair "
-                        "enumeration): identical replicated vectors share "
-                        "an LSH cell at any plane count, so measured "
-                        "same-cell pairs grow 1,971 (1x) -> 101,900 (10x) "
-                        "= 51.7x TRUE pair work (planes adapted 10 -> "
-                        "14); ~4.6x time on 51.7x pairs is sublinear in "
-                        "work."
-                    ),
-                    "q29_dominant_suppliers": (
-                        "linear work, saturated cores: the dominant "
-                        "(l_partkey, l_suppkey) aggregate carries "
-                        "590,973 (1x) -> 5,909,730 (10x) groups — "
-                        "exactly 10.0x — through two group-key shuffles; "
-                        "~4-5x time on 10x groups is sublinear. The 1x "
-                        "run is partially overhead-bound (0.1-0.2 s/job "
-                        "scheduling floor), which inflates the ratio vs "
-                        "scan-light peers."
-                    ),
-                    "g05_label_propagation": (
-                        "linear work, saturated cores: co-purchase edges "
-                        "grow 305,711 (1x) -> 3,057,110 (10x) — exactly "
-                        "10.0x — and the 2 propagation rounds are fixed, "
-                        "so total join volume is 10.0x for ~4-5x time "
-                        "(sublinear)."
-                    ),
-                    "l17_log_templates": (
-                        "linear work: 10x events through the row-local "
-                        "regex mask; distinct templates stay constant "
-                        "(5 at both SFs — the mask folds every id), so "
-                        "the aggregate output is flat and the ~4x time "
-                        "is the 10x scan+regex cost absorbed by idle "
-                        "cores."
-                    ),
-                    "v08_heaps_law": (
-                        "linear work: token occurrences grow 270,704 "
-                        "(1x) -> 2,707,040 (10x) — exactly 10.0x — while "
-                        "distinct types stay 31 (replica duplicates text "
-                        "verbatim), so the type shuffle is flat and the "
-                        "~4x time is the 10x explode+shuffle of token "
-                        "rows."
-                    ),
-                    "s21_mmr_diversified_topk": (
-                        "linear work, saturated cores: the only "
-                        "corpus-sized stage is the s01-style scored scan "
-                        "(10x rows); the greedy runs over the "
-                        "corpus-independent queries x 20 pool in one "
-                        "applyInPandas stage, so ~3.7x time on 10x scan "
-                        "rows is sublinear."
-                    ),
-                    "q30_order_count_distribution": (
-                        "linear work: the customer left-join-orders "
-                        "aggregate carries exactly 10x rows on both "
-                        "sides (15,000/150,000 -> 150,000/1,500,000); "
-                        "~3.5x time on 10x rows is sublinear."
-                    ),
-                    "q33_brand_repeat_share": (
-                        "linear work, saturated cores: the distinct "
-                        "(brand, custkey, orderkey) projection carries "
-                        "554,601 (1x) -> 5,546,010 (10x) rows — exactly "
-                        "10.0x (key-offset replica: no extra cross-brand "
-                        "collisions) — and the (brand, custkey) groups "
-                        "289,583 -> 2,895,830 = 10.0x; ~3.5x time on "
-                        "10.0x rows through the fact-fact join + two "
-                        "keyed aggregates is sublinear."
-                    ),
-                    "d21_sorted_neighborhood": (
-                        "structurally bounded work: SNM candidates are "
-                        "(w-1) per doc by construction — measured 14,994 "
-                        "(1x) -> 149,994 (10x) = 10.0x; verify token-match "
-                        "rows 303,237 -> 3,403,830 = 11.2x (verbatim "
-                        "replicas sort adjacent, so in-window pairs "
-                        "overlap more). ~4.4x time on 10-11x work is "
-                        "sublinear."
-                    ),
-                    "s23_knn_label_accuracy": (
-                        "linear work, fixed eval set: the id-capped eval "
-                        "set stays 25 queries at both SFs (replica ids are "
-                        "offset past the cap) while the scored corpus "
-                        "grows 2,000 -> 20,000 = 10.0x; ~4.1x time on 10x "
-                        "scored rows is sublinear."
-                    ),
-                    "g06_degree_powerlaw": (
-                        "linear work: co-purchase edges grow 305,711 (1x) "
-                        "-> 3,057,110 (10x) — exactly 10.0x — through one "
-                        "node-keyed count; the histogram+fit stages are "
-                        "O(distinct degrees). ~3.9x time on 10x edges is "
-                        "sublinear."
-                    ),
-                    "s17_cosine_range_search": (
-                        "linear work, small base: the fixed query set "
-                        "scores a 10.0x larger corpus (2,000 -> 20,000 "
-                        "vectors) in one scan; the ~0.4 s 1x base is "
-                        "partly job-scheduling floor, which inflates the "
-                        "ratio vs scan-heavy peers."
-                    ),
-                    "t08_filter_rules": (
-                        "linear work: row-local regex/length predicates "
-                        "over exactly 10.0x documents (5,000 -> 50,000) "
-                        "with a flat per-source aggregate; ratio jitters "
-                        "around 3.5x run-to-run on a sub-second base."
-                    ),
-                    "v02_bpe_pair_counts": (
-                        "linear work: adjacent-pair occurrences grow "
-                        "265,704 (1x) -> 2,657,040 (10x) — exactly 10.0x — "
-                        "while distinct pairs stay 931 (verbatim replica), "
-                        "so the pair shuffle is flat and the time is the "
-                        "10x explode cost."
-                    ),
-                    "s01_cosine_topk": (
-                        "linear work: the fixed query set scores a "
-                        "2,000 -> 20,000 vector corpus — exactly 10.0x "
-                        "scored rows — in one scan with WindowGroupLimit "
-                        "pruning; the ratio hovers around the bar on a "
-                        "~0.6 s base (job-floor share), same mechanism "
-                        "as s17."
-                    ),
-                    "g07_degree_assortativity": (
-                        "linear work: co-purchase edges grow 305,711 -> "
-                        "3,057,110 — exactly 10.0x (same edge relation "
-                        "as g05/g06) — through one degree count and two "
-                        "node-keyed joins to a single-row aggregate; "
-                        "~3.5x time on 10x edges is sublinear."
-                    ),
-                    "v03_tfidf_top_terms": (
-                        "linear work, sub-second base: token occurrences "
-                        "grow 270,704 -> 2,707,040 — exactly 10.0x — "
-                        "while the (source, token) tf/idf relation stays "
-                        "flat (31 types, verbatim replica); the ratio on "
-                        "a ~0.2-1s base jitters run-to-run with the host "
-                        "(same mechanism as v05/v07/v08, which carry the "
-                        "same measured counts)."
-                    ),
-                    "q13_top_orders_per_customer": (
-                        "linear work: orders and customers both grow "
-                        "exactly 10.0x (150k -> 1.5M orders, 15k -> 150k "
-                        "customers) through one customer-keyed aggregate "
-                        "+ WindowGroupLimit top-k; ~3.5x time on 10x "
-                        "rows is sublinear, jittering around the bar on "
-                        "a sub-second base."
-                    ),
-                    "p15_curation_manifest": (
-                        "linear work, sub-second base: documents grow "
-                        "5,000 -> 50,000 — exactly 10.0x — through "
-                        "row-local rule evaluation + one per-source "
-                        "aggregate (sources flat); the 0.3 s 1x base is "
-                        "mostly the per-job scheduling floor, which "
-                        "inflates the ratio (10x run ~1.4 s on 10x rows "
-                        "is sublinear)."
-                    ),
-                    "l23_hourly_gap_fill": (
-                        "linear scan, flat gap-fill axis: the calendar "
-                        "hour spine stays exactly 720 hours at BOTH SFs "
-                        "(the fill is over time, not rows) while events "
-                        "grow 100k -> 1M; the 0.24 s 1x base is the "
-                        "job-scheduling floor, inflating the ratio."
-                    ),
-                    "e14_metric_correlation": (
-                        "linear scan, flat aggregate: the correlation "
-                        "runs on exactly 30 daily rows at BOTH SFs; "
-                        "events grow 100k -> 1M through one day-keyed "
-                        "aggregate; the 0.16 s 1x base is essentially "
-                        "pure scheduling floor — the ratio measures the "
-                        "floor, not the plan."
-                    ),
-                    "v07_bm25_scoring": (
-                        "linear work: token occurrences grow 270,704 -> "
-                        "2,707,040 — exactly 10.0x — while the vocabulary "
-                        "(df/idf relation) stays 31 types (verbatim "
-                        "replica); ~3.7x time on 10x token rows is "
-                        "sublinear."
-                    ),
-                    "d25_shingle_df_spectrum": (
-                        "linear work: shingle occurrences grow 260,388 "
-                        "(1x) -> 2,603,880 (10x) — exactly 10.0x — while "
-                        "distinct shingles stay 27,213 (verbatim replica), "
-                        "so the df shuffle is flat and the ~3x time is the "
-                        "10x in-row shingling + occurrence shuffle."
-                    ),
-                    "q28_waiting_suppliers": (
-                        "linear work, saturated cores: the rewrite's one "
-                        "big aggregate carries (l_orderkey, l_suppkey) "
-                        "groups 198,052 (1x) -> 1,980,520 (10x) — exactly "
-                        "10.0x — and the orders join feeds 198,470 -> "
-                        "1,984,700 rows (10.0x); 3.6x time on 10.0x work "
-                        "is sublinear (the decorrelated aggregate shape, "
-                        "not the textbook double-EXISTS, is what makes "
-                        "the work linear in the first place)."
-                    ),
-                    "l27_template_drift": (
-                        "linear scan, flat aggregate: (day, template) "
-                        "groups stay exactly 150 at BOTH SFs (user ids "
-                        "are masked to <NUM> in the template, so the "
-                        "replica adds no templates) while the corpus "
-                        "grows 100k -> 1M events; ~3.3x time is the 10x "
-                        "scan+regex cost absorbed by idle cores — "
-                        "everything after the count runs on 150 rows."
-                    ),
-                    "e11_ab_test_lift": (
-                        "linear work: per-user groups grow 1,500 -> "
-                        "15,000 and events 100k -> 1M — both exactly "
-                        "10.0x — through one user-keyed aggregate; the "
-                        "arm-level stage is 2 rows at any scale. ~3x "
-                        "time on 10x work is sublinear."
-                    ),
-                    "v05_zipf_slope": (
-                        "linear work: token occurrences grow 270,704 (1x) "
-                        "-> 2,707,040 (10x) — exactly 10.0x — while "
-                        "distinct types stay 31 (verbatim replica), so "
-                        "the type shuffle and the 100-row regression are "
-                        "flat; the 1x base (~0.3 s) is partly job-"
-                        "scheduling floor, which inflates the ratio."
-                    ),
-                },
             }
-            # Store maintenance at 1x vs 10x HISTORY (VERDICT r8 item 6) —
-            # the scale axis the query replica can't exercise.
+            # Store maintenance at 1x vs 10x HISTORY — the scale axis the
+            # query replica can't exercise.
             try:
                 out["scale"]["maintenance"] = _maintenance_scale(
                     spark,
@@ -1812,6 +907,29 @@ def _run_section(section: str) -> dict:
             pass
 
 
+def _compact(out: dict) -> dict:
+    """The stdout record: the contract keys plus a few section totals. The
+    driver keeps only the last ~2 KB of stdout, so per-query detail beyond
+    the headline wall times stays in BENCH_DETAIL.json."""
+    compact = {
+        k: out[k]
+        for k in ("metric", "value", "unit", "queries", "sf", "runs", "agg",
+                  "materialize", "host")
+        if k in out
+    }
+    extras = out.get("extra_operators", {}).get("queries", {})
+    if extras:
+        compact["extras_total"] = round(sum(extras.values()), 3)
+        compact["extras_n"] = len(extras)
+    scale = out.get("scale", {})
+    if isinstance(scale.get("value"), (int, float)):
+        compact["scale_total"] = scale["value"]
+        compact["scale_factor"] = scale["factor"]
+    if "sweep_error" in out:
+        compact["sweep_error"] = out["sweep_error"]
+    return compact
+
+
 def main() -> None:
     # Child mode: run one section, write its JSON to the path the parent
     # chose, stay silent on stdout (the driver captures only the parent's
@@ -1828,9 +946,8 @@ def main() -> None:
         return
 
     # Parent mode: core first (fresh JVM, nothing before it), then the
-    # extras/scale sweep in a second process (VERDICT r7 item 8: the
-    # sweep's 110 operators × 3 runs in the same JVM perturbed the
-    # streaming/sink/maintenance figures by up to 4×).
+    # sweep in a second process, so the sweep's hundreds of queries never
+    # perturb the core figures.
     out = _run_section("core")
     if "error" in out:  # core is mandatory — surface the failure loudly
         print(json.dumps({"metric": "headline_queries_total", **out}))
@@ -1840,144 +957,14 @@ def main() -> None:
         if k in sweep:
             out[k if k != "error" else "sweep_error"] = sweep[k]
 
-    prev, prev_base = _prev_bench()
-    if prev_base is not None:
-        out["vs_prev_base"] = prev_base
-        if "_builder" in prev_base:
-            out["vs_prev_base_note"] = (
-                "comparison base is the adjudicated builder replacement "
-                "record (the driver-recorded round file was judged "
-                "host-contaminated; see _CONTAMINATED_BENCH in bench.py)"
-            )
-    timings = out["queries"]
-    if prev and isinstance(prev.get("queries"), dict):
-        out["vs_prev"] = {
-            name: round(timings[name] - prev["queries"][name], 3)
-            for name in timings
-            if name in prev["queries"]
-        }
-        if isinstance(prev.get("value"), (int, float)):
-            out["vs_prev_total"] = round(out["value"] - prev["value"], 3)
-    # Round-over-round claims are made on the CALIBRATED ratio (headline /
-    # lineitem-full-scan yardstick), not the raw delta: the same code
-    # measured ±20% headline spread across environments (r8), so a raw
-    # delta inside that band is noise (VERDICT r9 items 1+3).
-    hoc = out.get("calibration", {}).get("headline_over_calibration")
-    prev_hoc = prev.get("headline_over_calibration") if prev else None
-    if isinstance(hoc, (int, float)) and isinstance(prev_hoc, (int, float)):
-        prev_cal = prev.get("calibration_sec")
-        if prev_cal is None and isinstance(prev.get("calibration"), dict):
-            prev_cal = prev["calibration"].get("sec")
-        out["vs_prev_calibrated"] = {
-            "headline_over_calibration": hoc,
-            "prev_headline_over_calibration": prev_hoc,
-            # both denominators, so a ratio jump driven by the calibration
-            # scan's own same-code spread (documented ~33%) is readable
-            # from the record without archaeology
-            "calibration_sec": out.get("calibration", {}).get("sec"),
-            "prev_calibration_sec": prev_cal,
-            "ratio_delta_pct": round(100.0 * (hoc / prev_hoc - 1.0), 1),
-            "note": (
-                "negative = faster per unit of environment speed; raw "
-                "vs_prev_total deltas within the documented ±20% "
-                "cross-environment spread are noise — judge the ratio. "
-                "Caveat (r10, measured): the calibration scan itself "
-                "showed ~33% same-code spread across two local runs "
-                "(0.0806 vs 0.1076 s best-of-3), so ratio deltas under "
-                "~±15% are STILL noise; the ratio separates real "
-                "regressions from the 2x-class environment swings, not "
-                "from single-digit ones"
-            ),
-        }
-
-    # Full detail goes to a side file; stdout gets a COMPACT line. The
-    # driver keeps only the last ~2 KB of stdout — r4's full-detail line
-    # (~2.8 KB) was clipped mid-line and recorded as ``parsed: null``.
     here = os.path.dirname(os.path.abspath(__file__))
-    # Merge the one-off 100x audit (scripts/scale100.py) so it survives
-    # per-round BENCH_DETAIL rewrites.
-    try:
-        with open(os.path.join(here, "SCALE100.json")) as f:
-            out["scale100"] = json.load(f)
-    except (OSError, ValueError):
-        pass
-    # Same for the quiet-host re-measure ledger (one-off best-of-N runs
-    # on an otherwise-idle host, used to separate real per-query
-    # regressions from loaded-host noise).
-    try:
-        with open(os.path.join(here, "QUIET_HOST.json")) as f:
-            out["quiet_host_checks"] = json.load(f)
-    except (OSError, ValueError):
-        pass
     try:
         with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
             json.dump(out, f, indent=1)
             f.write("\n")
     except OSError:
         pass
-
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "queries": out["queries"],
-        "sf": out["sf"],
-        "runs": out["runs"],
-        "agg": out["agg"],
-    }
-    cal = out.get("calibration", {})
-    if isinstance(cal.get("sec"), (int, float)):
-        compact["calibration_sec"] = cal["sec"]
-        compact["headline_over_calibration"] = cal.get(
-            "headline_over_calibration"
-        )
-    vpc = out.get("vs_prev_calibrated", {})
-    if isinstance(vpc.get("ratio_delta_pct"), (int, float)):
-        compact["calibrated_vs_prev_pct"] = vpc["ratio_delta_pct"]
-    if "vs_prev_base" in out:
-        compact["vs_prev_base"] = out["vs_prev_base"]
-    lp = out.get("load_probe", {})
-    ratios = [
-        lp.get(k, {}).get("parallel_over_serial")
-        for k in ("before_boot", "after_queries")
-    ]
-    if any(isinstance(r, (int, float)) for r in ratios):
-        # all-core burn / serial burn, sampled before boot and after the
-        # timed queries: a jump vs the committed idle baseline = the host
-        # was busy and this record is not comparable (r12's failure mode)
-        compact["load_probe_ratio"] = ratios
-    ann = out.get("ann_store", {})
-    if isinstance(ann.get("pq_serve_sec"), (int, float)):
-        compact["ann_pq_serve_sec"] = ann["pq_serve_sec"]
-    scale = out.get("scale", {})
-    if isinstance(scale.get("value"), (int, float)):
-        compact["scale_total"] = scale["value"]
-        compact["scale_factor"] = scale["factor"]
-    extras_d = out.get("extra_operators", {}).get("queries", {})
-    if extras_d:
-        compact["extras_total"] = round(sum(extras_d.values()), 3)
-        compact["extras_n"] = len(extras_d)
-    stream = out.get("streaming", {})
-    if isinstance(stream.get("rows_per_sec"), (int, float)):
-        compact["stream_rows_per_sec"] = stream["rows_per_sec"]
-    sink = out.get("sink", {})
-    if isinstance(sink.get("rows_per_sec"), (int, float)):
-        compact["sink_rows_per_sec"] = sink["rows_per_sec"]
-    maint = out.get("maintenance", {})
-    for key, label in (
-        ("rollup", "rollup_rows_per_sec"),
-        ("dedup_store", "dedup_store_rows_per_sec"),
-    ):
-        rps = maint.get(key, {}).get("rows_per_sec") if isinstance(maint.get(key), dict) else None
-        if isinstance(rps, (int, float)):
-            compact[label] = rps
-    if "vs_prev_total" in out:
-        compact["vs_prev_total"] = out["vs_prev_total"]
-    line = json.dumps(compact)
-    if len(line) > 1900:  # belt-and-braces: never exceed the tail capture
-        compact.pop("queries", None)
-        line = json.dumps(compact)
-    print(line)
+    print(json.dumps(_compact(out)))
 
 
 if __name__ == "__main__":

@@ -10,9 +10,7 @@ plus the most expensive 10x extras (g01/g03/q25), at a 100x replica
 (~6M orders / 60M lineitem / 100M events, the sf10-equivalent the verdict
 asked for) and record measured work-growth counters next to the timings.
 
-Writes SCALE100.json at the repo root; bench.py merges it into
-BENCH_DETAIL.json under "scale100" so the one-off survives per-round
-bench reruns. Usage:
+Writes SCALE100.json at the repo root. Usage:
 
     python scripts/scale100.py            # factor 100 of $SPARK_GRAFT_SF_DIR
     SPARK_GRAFT_SCALE100_RUNS=1 python scripts/scale100.py   # single-run

@@ -33,6 +33,7 @@ import os
 import time as _time
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -385,33 +386,32 @@ class LogstoreStreamReader(_ShardRangeReader, DataSourceStreamReader):
             # remaining budget instead of cap/n_shards, and idle shards don't
             # strand their slice of the quota. Whole-second-bucket
             # granularity is preserved (may overshoot by one bucket).
-            hists = {
-                sh: be.second_histogram(self.path, sh, st, self.max_per_trigger)
+            # Each lagging shard's cap-bounded window is read ONCE: the
+            # merged histogram and the per-shard end both come from it.
+            windows = {
+                sh: be.budget_window(self.path, sh, st, self.max_per_trigger)
                 for sh, st in lagging.items()
             }
-            bucket_totals: dict[int, int] = {}
-            for h in hists.values():
-                for sec, cnt in h:
-                    bucket_totals[sec] = bucket_totals.get(sec, 0) + cnt
-            total = 0
+            secs, cnts = np.unique(
+                np.concatenate([t for _s, t in windows.values()]), return_counts=True
+            )
+            # the first whole bucket whose running total reaches the cap,
+            # else the last one
             last_sec = None
-            for sec in sorted(bucket_totals):
-                total += bucket_totals[sec]
-                last_sec = sec
-                if total >= self.max_per_trigger:
-                    break
+            if secs.size:
+                i = int(np.searchsorted(np.cumsum(cnts), self.max_per_trigger))
+                last_sec = secs[min(i, secs.size - 1)]
             for sh, st in lagging.items():
-                if last_sec is None or not hists[sh]:
-                    out[sh] = st
-                    continue
                 # The walk allocates whole buckets; each shard then advances
-                # past exactly its allocated ROW COUNT in seq order
-                # (nth_seq). A time-cut boundary can deadlock at the cursor
-                # when event times interleave non-monotonically with seqs;
-                # counting rows guarantees progress whenever any unread row
-                # exists, and equals the time cut on time-ordered data.
-                n_sh = sum(cnt for sec, cnt in hists[sh] if sec <= last_sec)
-                out[sh] = be.nth_seq(self.path, sh, st, n_sh) if n_sh else st
+                # past exactly its allocated ROW COUNT in seq order (the
+                # n-th seq of its window, = nth_seq). A time-cut boundary
+                # can deadlock at the cursor when event times interleave
+                # non-monotonically with seqs; counting rows guarantees
+                # progress whenever any unread row exists, and equals the
+                # time cut on time-ordered data.
+                seqs, times = windows[sh]
+                n_sh = 0 if last_sec is None else int(np.count_nonzero(times <= last_sec))
+                out[sh] = int(seqs[n_sh - 1]) + 1 if n_sh else st
         self._advance(out)
         return off.StreamOffset(dict(self._last_end)).to_dict()
 

@@ -296,12 +296,23 @@ def second_histogram(
     unbounded walk would — still safe: offsets advance by row count, never
     past real data, and undercounted rows are simply picked up by the next
     trigger."""
+    _seqs, times = budget_window(path, shard, from_seq, max_records)
+    vals, cnts = np.unique(times, return_counts=True)
+    return [(int(t), int(c)) for t, c in zip(vals, cnts)]
+
+
+def budget_window(
+    path: str, shard: int, from_seq: int, max_records: int | None = None
+):
+    """(seqs, times) numpy arrays, sorted by seq, of the rows ``second_histogram``
+    counts: seq >= from_seq, bounded with ``max_records`` by the same
+    footer-stats ceiling. The window is a seq-range prefix of the tail, so
+    its n-th seq equals ``nth_seq(from_seq, n)`` for any n it holds — the
+    rate walk plans a trigger from this one read."""
     ceiling = None
     if max_records is not None:
         ceiling = _seq_ceiling_for_count(path, shard, from_seq, max_records)
-    _seqs, times = _window(path, shard, from_seq, ceiling)
-    vals, cnts = np.unique(times, return_counts=True)
-    return [(int(t), int(c)) for t, c in zip(vals, cnts)]
+    return _window(path, shard, from_seq, ceiling)
 
 
 def row_group_stats(path: str, shard: int) -> list[tuple[int, int, int]]:

@@ -1,8 +1,7 @@
-"""The bench record's round-over-round base selection is judged policy
-(r12 VERDICT items 1+2): a host-contaminated driver record must never be
-the comparison base — only its adjudicated *_builder.json replacement —
-and a clean round's driver record must never be displaced by a stray
-builder file. Pure-python over temp files; no Spark session."""
+"""bench.py's record contract: the sweep is derived from the registry, its
+exclusions are live names with reasons, and the compact stdout line keeps
+the headline contract within the driver's tail capture. Pure-python; no
+Spark session."""
 
 from __future__ import annotations
 
@@ -12,9 +11,12 @@ import os
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CONTRACT = ("metric", "value", "unit", "queries", "sf", "runs", "agg")
 
 
 def _bench():
+    if _REPO not in sys.path:
+        sys.path.insert(0, _REPO)
     spec = importlib.util.spec_from_file_location(
         "bench_under_test", os.path.join(_REPO, "bench.py")
     )
@@ -24,82 +26,57 @@ def _bench():
     return mod
 
 
-def _record(value: float) -> dict:
-    return {"value": value, "queries": {"q01": value}}
+def _registry():
+    from spark_streaming_logservice_spark import registry
+
+    registry.load_all()
+    return registry
 
 
-def _write(d, name, obj):
-    with open(os.path.join(d, name), "w") as f:
-        json.dump(obj, f)
-
-
-def test_contaminated_round_skipped_without_replacement(tmp_path, monkeypatch):
-    B = _bench()
-    monkeypatch.setattr(B, "_CONTAMINATED_BENCH", {12})
-    d = str(tmp_path)
-    _write(d, "BENCH_r11.json", _record(8.6))
-    _write(d, "BENCH_r12.json", _record(16.1))  # adjudicated contaminated
-    prev, base = B._prev_bench(d)
-    assert base == "BENCH_r11.json" and prev["value"] == 8.6, (
-        "a contaminated record must never be the comparison base"
+def test_sweep_is_registry_minus_headline_and_exclusions():
+    B, registry = _bench(), _registry()
+    sweep = B.sweep_names(registry)
+    assert sweep == sorted(
+        set(registry.QUERIES) - set(B.HEADLINE) - set(B.SWEEP_EXCLUDE)
     )
+    assert set(B.HEADLINE) <= set(registry.QUERIES)
+    # every registered query is timed exactly once, or excluded with a reason
+    assert len(sweep) + len(B.HEADLINE) + len(B.SWEEP_EXCLUDE) == len(registry.QUERIES)
 
 
-def test_contaminated_round_uses_adjudicated_replacement(tmp_path, monkeypatch):
+def test_every_excluded_name_is_registered_with_a_reason():
+    B, registry = _bench(), _registry()
+    stale = sorted(set(B.SWEEP_EXCLUDE) - set(registry.QUERIES))
+    assert not stale, f"SWEEP_EXCLUDE names no registered query: {stale}"
+    assert not set(B.SWEEP_EXCLUDE) & set(B.HEADLINE)
+    for name, reason in B.SWEEP_EXCLUDE.items():
+        assert reason.strip() and "\n" not in reason, name
+
+
+def test_compact_line_keeps_contract_within_tail_capture():
     B = _bench()
-    monkeypatch.setattr(B, "_CONTAMINATED_BENCH", {12})
-    d = str(tmp_path)
-    _write(d, "BENCH_r11.json", _record(8.6))
-    _write(d, "BENCH_r12.json", _record(16.1))
-    _write(d, "BENCH_r12_builder.json", _record(8.999))
-    prev, base = B._prev_bench(d)
-    assert base == "BENCH_r12_builder.json" and prev["value"] == 8.999
+    from perfbench import harness
 
-
-def test_clean_round_never_displaced_by_stray_builder_file(tmp_path, monkeypatch):
-    B = _bench()
-    monkeypatch.setattr(B, "_CONTAMINATED_BENCH", set())
-    d = str(tmp_path)
-    _write(d, "BENCH_r13.json", _record(9.1))
-    _write(d, "BENCH_r13_builder.json", _record(7.0))  # stray side record
-    prev, base = B._prev_bench(d)
-    assert base == "BENCH_r13.json" and prev["value"] == 9.1, (
-        "only adjudicated-contaminated rounds may use a builder replacement"
-    )
-
-
-def test_unparseable_round_walked_past(tmp_path, monkeypatch):
-    B = _bench()
-    monkeypatch.setattr(B, "_CONTAMINATED_BENCH", set())
-    d = str(tmp_path)
-    _write(d, "BENCH_r10.json", _record(9.3))
-    with open(os.path.join(d, "BENCH_r11.json"), "w") as f:
-        f.write("{truncated")  # the r4-style clipped-tail artifact
-    prev, base = B._prev_bench(d)
-    assert base == "BENCH_r10.json" and prev["value"] == 9.3
-
-
-def test_driver_tail_shape_parsed(tmp_path, monkeypatch):
-    B = _bench()
-    monkeypatch.setattr(B, "_CONTAMINATED_BENCH", set())
-    d = str(tmp_path)
-    line = json.dumps(
-        {"metric": "headline_queries_total", "value": 8.2, "queries": {"q01": 8.2}}
-    )
-    _write(d, "BENCH_r09.json", {"tail": f"noise\n{line}\n"})
-    prev, base = B._prev_bench(d)
-    assert base == "BENCH_r09.json" and prev["value"] == 8.2
-
-
-def test_real_repo_base_is_the_adjudicated_r12_replacement():
-    """Against the actual committed artifacts: r12 is listed contaminated
-    and its builder replacement exists, so (until BENCH_r13.json lands)
-    the base must be BENCH_r12_builder.json."""
-    B = _bench()
-    prev, base = B._prev_bench()
-    assert base is not None
-    if 12 in B._CONTAMINATED_BENCH and not os.path.exists(
-        os.path.join(_REPO, "BENCH_r13.json")
-    ):
-        assert base == "BENCH_r12_builder.json"
-        assert prev["value"] == 8.999
+    out = {
+        "metric": "headline_queries_total",
+        "value": 9999.999,
+        "unit": "sec",
+        "queries": {name: 999.999 for name in B.HEADLINE},
+        "sf": 0.1,
+        "runs": 3,
+        "agg": "min",
+        "materialize": "noop",
+        "cpu_s": {name: 9999.999 for name in B.HEADLINE},
+        "host": harness.fingerprint(),
+        "data_probe": {"lineitem": 600_000},
+        "maintenance": {"rollup": {"rows_per_sec": 1.0}},
+        "extra_operators": {"queries": {f"x{i}": 99.999 for i in range(300)}},
+        "scale": {"factor": 10, "value": 99999.999, "queries": {}},
+    }
+    compact = B._compact(out)
+    for key in CONTRACT + ("materialize", "host"):
+        assert compact[key] == out[key], key
+    assert set(compact["queries"]) == set(B.HEADLINE) and len(B.HEADLINE) == 17
+    assert "cpu_s" not in compact  # per-query CPU lives in BENCH_DETAIL.json
+    assert compact["extras_n"] == 300 and compact["scale_factor"] == 10
+    assert len(json.dumps(compact)) <= 1900

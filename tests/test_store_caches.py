@@ -153,3 +153,132 @@ def test_per_file_key_survives_recompaction(tmp_path):
             zip(vals.tolist(), cnts.tolist())
         )
     assert be.time_for_seq(path, 0, int(seqs[-1]) + 1) is None
+
+
+def _write_file(path: str, shard: int, seqs, times, row_group_size: int) -> None:
+    rows = [{"seq": int(s), "time": int(t), "topic": "t", "source": "s",
+             "contents": {"k": str(s)}, "tags": {}} for s, t in zip(seqs, times)]
+    tbl, _ = be._rows_table(rows)
+    d = os.path.abspath(be.shard_dir(path, shard))
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{len(os.listdir(d)):03d}.parquet"
+    pq.write_table(tbl, os.path.join(d, name), row_group_size=row_group_size)
+
+
+def _random_store(path: str, rng, now: int) -> int:
+    """1-4 shards of 1-5 files each, row groups of 3, 7 or 100 rows. Seqs
+    are unique per shard with gaps, and a later file may backfill seqs below
+    an earlier one's; times are not monotone in seq. Shard 3, when present,
+    is recent, so it takes the fast path. Returns the shard count."""
+    n_shards = int(rng.integers(1, 5))
+    for sh in range(n_shards):
+        pool = rng.permutation(int(rng.integers(20, 400)) * 3)
+        base = now - 5 if sh == 3 else 1_700_000_000
+        at = 0
+        for _f in range(int(rng.integers(1, 6))):
+            n = int(rng.integers(1, 120))
+            seqs = np.sort(pool[at:at + n])
+            at += n
+            if not seqs.size:
+                break
+            times = base + seqs // 4 + rng.integers(-6, 7, seqs.size)
+            _write_file(path, sh, seqs, times, int(rng.choice([3, 7, 100])))
+    return n_shards
+
+
+def _two_call_offsets(path: str, base: dict, cap: int, now: int) -> dict:
+    """The planner as two calls per lagging shard: the merged histogram walk
+    over ``second_histogram``, then ``nth_seq`` for each shard's row count."""
+    out, lagging = {}, {}
+    for shard in be.list_shards(path):
+        start = base.get(shard, be.shard_bounds(path, shard)[0])
+        t = be.time_for_seq(path, shard, start)
+        if t is not None and now - t < 60:
+            out[shard] = be.shard_bounds(path, shard)[1]
+        else:
+            lagging[shard] = start
+    hists = {sh: be.second_histogram(path, sh, st, cap) for sh, st in lagging.items()}
+    totals: dict[int, int] = {}
+    for h in hists.values():
+        for sec, cnt in h:
+            totals[sec] = totals.get(sec, 0) + cnt
+    total, last = 0, None
+    for sec in sorted(totals):
+        total, last = total + totals[sec], sec
+        if total >= cap:
+            break
+    for sh, st in lagging.items():
+        n = sum(c for sec, c in hists[sh] if last is not None and sec <= last)
+        out[sh] = be.nth_seq(path, sh, st, n) if n else st
+    return {sh: max(base.get(sh, 0), e) for sh, e in {**base, **out}.items()}
+
+
+def test_latest_offset_equals_histogram_then_nth_seq(tmp_path):
+    """On random multi-file stores (seq gaps, backfills, non-monotone
+    times), every trigger's offsets equal the two-call planner's."""
+    import time as _time
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from spark_streaming_logservice_spark import offsets as off
+    from spark_streaming_logservice_spark.sources.logstore import LogstoreStreamReader
+
+    rng = np.random.default_rng(11)
+    schema = StructType([StructField("msg", StringType())])
+    for case in range(40):
+        path = str(tmp_path / f"s{case}")
+        now = int(_time.time())
+        _random_store(path, rng, now)
+        cap = int(rng.choice([1, 3, 10, 50, 400]))
+        reader = LogstoreStreamReader(
+            schema,
+            {"path": path, "startingoffsets": "earliest",
+             "maxoffsetspertrigger": str(cap)},
+        )
+        base = off.StreamOffset.from_dict(reader.initialOffset()).shard_seqs
+        for _trigger in range(6):
+            want = _two_call_offsets(path, base, cap, now)
+            got = off.StreamOffset.from_dict(reader.latestOffset()).shard_seqs
+            assert got == want, (case, cap, base)
+            base = got
+
+
+def test_latest_offset_reads_each_lagging_window_once(tmp_path, monkeypatch):
+    """With every footer cached, a trigger opens each file of a lagging
+    shard's budget window once, besides the fast-path check's own read;
+    ``second_histogram`` then ``nth_seq`` open each of them twice."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from spark_streaming_logservice_spark.sources.logstore import LogstoreStreamReader
+
+    path = str(tmp_path / "drain")
+    for sh in range(4):
+        for f in range(8):
+            seqs = np.arange(f * 64, (f + 1) * 64)
+            _write_file(path, sh, seqs, 1_700_000_000 + seqs // 8, 16)
+    cap = 200
+    reader = LogstoreStreamReader(
+        StructType([StructField("msg", StringType())]),
+        {"path": path, "startingoffsets": "earliest", "maxoffsetspertrigger": str(cap)},
+    )
+    reader.initialOffset()
+    for sh in range(4):
+        be.row_group_stats(path, sh)  # warm every footer
+
+    def opened(fn) -> list[str]:
+        opens = _counting_parquet_file(monkeypatch)
+        fn()
+        monkeypatch.undo()
+        assert all(rgs for _p, rgs in opens), opens  # no footer parsed
+        return sorted(p for p, _rgs in opens)
+
+    lookups = opened(lambda: [be.time_for_seq(path, sh, 0) for sh in range(4)])
+    window = opened(lambda: [be.budget_window(path, sh, 0, cap) for sh in range(4)])
+    assert len(window) == len(set(window)) > 4  # the windows span several files
+    assert opened(reader.latestOffset) == sorted(lookups + window)
+
+    two_calls = opened(lambda: [
+        (be.second_histogram(path, sh, 0, cap), be.nth_seq(path, sh, 0, cap // 4))
+        for sh in range(4)
+    ])
+    assert len(two_calls) > len(window)
