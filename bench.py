@@ -757,7 +757,9 @@ def _section_core() -> dict:
 
 def _section_sweep() -> dict:
     """The registry sweep + the 10× scale replica — the long tail,
-    isolated from the core section's JVM."""
+    isolated from the core section's JVM. The result so far is rewritten
+    after each sub-section (chain, ANN store, extras, replica), so a sweep
+    killed at its timeout keeps what it measured."""
     spark, registry, sf_dir = _boot()
     _materialize(registry.QUERIES["q01_pricing_summary"](spark, sf_dir))  # warm
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -793,6 +795,7 @@ def _section_sweep() -> dict:
         "cc_sec": round(sum(r.get("sec", 0) for r in _cc_rounds), 3),
         "cc_rounds": _cc_rounds,
     }
+    _emit(out)
 
     # Persisted ANN index store: build-once vs serve-only split.
     try:
@@ -803,6 +806,7 @@ def _section_sweep() -> dict:
         )
     except Exception as ex:
         out["ann_store"] = {"error": f"{type(ex).__name__}: {ex}"}
+    _emit(out)
 
     names = sweep_names(registry)
     extras, extras_cpu = _time_queries(spark, registry, sf_dir, names, runs)
@@ -812,6 +816,7 @@ def _section_sweep() -> dict:
         "runs": runs,
         "agg": "min",
     }
+    _emit(out)
 
     # Scale base: the headline in THIS session with the replica's 2 runs,
     # so scaling_vs_base compares like with like.
@@ -880,31 +885,59 @@ def _section_sweep() -> dict:
     return out
 
 
+def _emit(result: dict) -> None:
+    """Child side: (re)write the section's result so far to the path the
+    parent chose. The file is replaced whole, so a kill never leaves half a
+    record."""
+    out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
+    if out_path:
+        with open(out_path + ".tmp", "w") as f:
+            json.dump(result, f)
+        os.replace(out_path + ".tmp", out_path)
+
+
 def _run_section(section: str) -> dict:
     """Run one bench section in its own python/JVM process and return its
     JSON result (the isolation is the point — see _section_core)."""
+    return _run_child(
+        section,
+        [sys.executable, os.path.abspath(__file__), "--section", section],
+        int(os.environ.get("SPARK_GRAFT_BENCH_SECTION_TIMEOUT", "3600")),
+    )
+
+
+def _run_child(section: str, cmd: list[str], timeout: float) -> dict:
+    """Run ``cmd`` and return the last result it wrote with ``_emit``. When
+    it exits non-zero or outlives ``timeout``, the result keeps what was
+    written, next to an ``error``."""
     fd, out_path = tempfile.mkstemp(suffix=f"-bench-{section}.json")
     os.close(fd)
-    env = dict(os.environ)
-    env["SPARK_GRAFT_BENCH_OUT"] = out_path
+    error = None
     try:
         proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--section", section],
-            env=env,
+            cmd,
+            env={**os.environ, "SPARK_GRAFT_BENCH_OUT": out_path},
             stdout=subprocess.DEVNULL,
-            timeout=int(os.environ.get("SPARK_GRAFT_BENCH_SECTION_TIMEOUT", "3600")),
+            timeout=timeout,
         )
         if proc.returncode != 0:
-            return {"error": f"section {section} exited {proc.returncode}"}
+            error = f"section {section} exited {proc.returncode}"
+    except (subprocess.SubprocessError, OSError) as ex:
+        error = f"section {section}: {type(ex).__name__}: {ex}"
+    try:
         with open(out_path) as f:
-            return json.load(f)
-    except Exception as ex:
-        return {"error": f"section {section}: {type(ex).__name__}: {ex}"}
+            result = json.load(f)
+    except (OSError, ValueError):
+        result = {}
     finally:
-        try:
-            os.unlink(out_path)
-        except OSError:
-            pass
+        for p in (out_path, out_path + ".tmp"):
+            try:
+                os.unlink(p)
+            except OSError:
+                pass
+    if error:
+        result["error"] = error
+    return result
 
 
 def _compact(out: dict) -> dict:
@@ -937,10 +970,8 @@ def main() -> None:
     if "--section" in sys.argv:
         section = sys.argv[sys.argv.index("--section") + 1]
         result = _section_core() if section == "core" else _section_sweep()
-        out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
-        if out_path:
-            with open(out_path, "w") as f:
-                json.dump(result, f)
+        if os.environ.get("SPARK_GRAFT_BENCH_OUT"):
+            _emit(result)
         else:
             print(json.dumps(result))
         return

@@ -8,6 +8,8 @@ etc. aliases defined there).
 
 Layout:
     session    — tuned SparkSession factory (AQE, Arrow, broadcast thresholds)
+    pyworker_daemon — daemon of the Python task workers (prunes archives
+                 from their sys.path)
     schema     — log-record data model: default 8-col schema, envelope
                  columns, string→typed converter battery
     offsets    — cursor/offset algebra (JSON format, sentinels, clamping)
@@ -23,4 +25,13 @@ Layout:
 
 __version__ = "0.1.0"
 
-from spark_streaming_logservice_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # ``get_spark`` imports pyspark. The Python workers' daemon module
+    # (``pyworker_daemon``) imports this package before it prunes
+    # ``sys.path``, so pyspark is imported only on first use of the name.
+    if name == "get_spark":
+        from spark_streaming_logservice_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

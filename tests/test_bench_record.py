@@ -9,6 +9,7 @@ import importlib.util
 import json
 import os
 import sys
+import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CONTRACT = ("metric", "value", "unit", "queries", "sf", "runs", "agg")
@@ -80,3 +81,31 @@ def test_compact_line_keeps_contract_within_tail_capture():
     assert "cpu_s" not in compact  # per-query CPU lives in BENCH_DETAIL.json
     assert compact["extras_n"] == 300 and compact["scale_factor"] == 10
     assert len(json.dumps(compact)) <= 1900
+
+
+_FAKE_SECTION = """
+import sys, time
+sys.path.insert(0, sys.argv[1])
+import bench
+out = {"neardup_chain": {"build_sec": 1.5}}
+bench._emit(out)
+out["extra_operators"] = {"queries": {"x01": 0.25}}
+bench._emit(out)
+time.sleep(120)  # the 10x replica that never ends
+"""
+
+
+def test_timed_out_section_keeps_partial_result():
+    B = _bench()
+    t0 = time.monotonic()
+    got = B._run_child("sweep", [sys.executable, "-c", _FAKE_SECTION, _REPO], timeout=5)
+    assert time.monotonic() - t0 < 60
+    assert got["neardup_chain"] == {"build_sec": 1.5}
+    assert got["extra_operators"] == {"queries": {"x01": 0.25}}
+    assert "TimeoutExpired" in got["error"]
+
+
+def test_failed_section_without_output_reports_only_error():
+    B = _bench()
+    got = B._run_child("core", [sys.executable, "-c", "raise SystemExit(3)"], timeout=60)
+    assert got == {"error": "section core exited 3"}
