@@ -8,8 +8,10 @@ etc. aliases defined there).
 
 Layout:
     session    — tuned SparkSession factory (AQE, Arrow, broadcast thresholds)
-    pyworker_daemon — daemon of the Python task workers (prunes archives
-                 from their sys.path)
+    pyworker_daemon — archive rule of the Python workers' startup hook
+                 (which archives to prune from their sys.path)
+    worker_site/ — ``sitecustomize.py``, the startup hook of every Python
+                 process Spark starts; on the workers' PYTHONPATH only
     schema     — log-record data model: default 8-col schema, envelope
                  columns, string→typed converter battery
     offsets    — cursor/offset algebra (JSON format, sentinels, clamping)
@@ -27,9 +29,10 @@ __version__ = "0.1.0"
 
 
 def __getattr__(name: str):
-    # ``get_spark`` imports pyspark. The Python workers' daemon module
-    # (``pyworker_daemon``) imports this package before it prunes
-    # ``sys.path``, so pyspark is imported only on first use of the name.
+    # ``get_spark`` imports pyspark. The workers' startup hook
+    # (``worker_site/sitecustomize.py``) imports this package before it
+    # prunes ``sys.path``, so pyspark is imported only on first use of the
+    # name.
     if name == "get_spark":
         from spark_streaming_logservice_spark.session import get_spark
 

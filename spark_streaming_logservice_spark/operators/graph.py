@@ -29,6 +29,8 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -37,6 +39,8 @@ from pyspark.sql import functions as F
 # "rounds" — the measured basis for the d08 chain-cost note. Never set in
 # production use.
 CC_STATS: dict | None = None
+
+logger = logging.getLogger(__name__)
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -49,7 +53,7 @@ def _release_checkpoint(df: DataFrame) -> None:
         plan = df._jdf.queryExecution().analyzed()
         plan.rdd().unpersist(False)
     except Exception:
-        pass
+        logger.debug("_release_checkpoint: blocks left to GC", exc_info=True)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:

@@ -1,15 +1,16 @@
-"""Daemon of the Python task workers (``spark.python.daemon.module``, set by
+"""Archive rule of the Python workers' startup hook
+(``worker_site/sitecustomize.py``, put on the workers' path by
 ``session.get_spark``).
 
-Spark starts it as ``python -m <this module> pyspark.worker`` once per
-executor, before any pyspark import, and forks every task worker from it.
-It drops from ``sys.path`` each archive that adds nothing a directory entry
-does not already give, then runs ``pyspark.daemon.manager``. On CPython 3.11
-every task's ``importlib.invalidate_caches()`` re-reads the directory of each
-cached ``zipimporter`` (``pyspark.zip``, the py4j zip and the spark-core jar
-that ``PythonUtils.sparkPythonPath`` puts on the path); with the archives
-gone it resets directory finders only. An archive with a module found nowhere
-else, or a package whose ``version.py`` differs, stays on the path.
+Spark puts ``pyspark.zip``, the py4j zip and the spark-core jar
+(``PythonUtils.sparkPythonPath``) ahead of everything else on the
+``sys.path`` of every Python process it starts. On CPython 3.11 each
+``importlib.invalidate_caches()`` (one per task and one per data-source
+runner call) re-reads the directory of each cached ``zipimporter``, and
+pyspark itself is imported from the zip. The hook calls ``prune_archives``
+before any pyspark import; it drops each archive that adds nothing a
+directory entry does not already give. An archive with a module found
+nowhere else, or a package whose ``version.py`` differs, stays on the path.
 """
 
 from __future__ import annotations
@@ -48,9 +49,3 @@ def prune_archives(path: list[str]) -> list[str]:
         sys.path_importer_cache.pop(p, None)
     return dropped
 
-
-if __name__ == "__main__":
-    prune_archives(sys.path)
-    from pyspark import daemon
-
-    daemon.manager()

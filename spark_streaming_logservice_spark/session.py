@@ -12,18 +12,26 @@ Design notes (100 TB posture, tested on local[32]):
   and similarity paths) moves batches, not rows.
 - shuffle.partitions defaults to the local core count; on a real cluster this
   should be ~2-3x total executor cores (AQE coalesces the excess).
-- Python task workers fork from ``pyworker_daemon``
-  (``spark.python.daemon.module``), which drops ``pyspark.zip``, the py4j zip
-  and the spark-core jar from the workers' ``sys.path`` when a directory on it
-  already holds the same package version. Each Python task calls
-  ``importlib.invalidate_caches()``, and on CPython 3.11 that re-reads the
-  directory of every cached ``zipimporter`` (16 of them and 0.13-0.18 CPU s a
-  task with the archives on the path, on a 4-CPU host; under 0.1 ms without
-  them). The daemon is started before
-  any pyspark import, so the package root must be importable by the worker
-  interpreter itself: workers do not see driver-side ``sys.path`` edits, so
-  ``spark.executorEnv.PYTHONPATH`` carries the root, after any value the
-  caller passes.
+- Every Python process Spark starts for the application (task workers, the
+  data-source planner runners forked from the daemon, the per-query
+  streaming source runner) runs ``worker_site/sitecustomize.py`` at
+  interpreter start, before it imports pyspark: ``site`` finds it on
+  ``spark.executorEnv.PYTHONPATH``, which Spark passes to each of them (a
+  registered DataSource's Python function carries ``sc.environment``, the
+  executorEnv). The hook drops ``pyspark.zip``, the py4j zip and the
+  spark-core jar from ``sys.path`` when a directory on it already holds the
+  same package version (``pyworker_daemon.prune_archives``), so pyspark is
+  imported from site-packages, and each task's or runner call's
+  ``importlib.invalidate_caches()`` re-reads no ``zipimporter``. Measured
+  in a bare interpreter on a 4-CPU host: importing a planner runner's
+  module costs 0.17-0.19 CPU s against 0.68-0.72 s from the zip, and
+  ``invalidate_caches()`` under 0.1 ms against 0.11-0.14 s with the 17
+  importers the archives leave; the hook itself adds about 0.03 CPU s to
+  interpreter start. Workers do not see driver-side ``sys.path`` edits, so
+  the executorEnv PYTHONPATH carries the package root (the hook imports the
+  package) and then the hook directory, after any value the caller passes.
+  The hook directory is on the workers' path only. A worker started without
+  it imports pyspark from the zip: same results, old speed.
 """
 
 from __future__ import annotations
@@ -33,7 +41,7 @@ import os
 from pyspark.sql import SparkSession
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_DAEMON_MODULE = f"{__package__}.pyworker_daemon"
+_WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_site")
 _EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
@@ -45,12 +53,11 @@ def _cpus() -> int:
 
 
 def _worker_conf(extra_conf: dict[str, str]) -> dict[str, str]:
-    """The daemon module and the package root on the workers' PYTHONPATH,
-    then the caller's settings (their PYTHONPATH merged ahead of the root)."""
-    conf = {"spark.python.daemon.module": _DAEMON_MODULE, **extra_conf}
+    """The caller's settings, with the package root and then the workers'
+    startup-hook directory appended to the workers' PYTHONPATH."""
+    conf = dict(extra_conf)
     paths = [p for p in conf.get(_EXECUTOR_PYTHONPATH, "").split(os.pathsep) if p]
-    if _ROOT not in paths:
-        paths.append(_ROOT)
+    paths += [p for p in (_ROOT, _WORKER_SITE) if p not in paths]
     conf[_EXECUTOR_PYTHONPATH] = os.pathsep.join(paths)
     return conf
 

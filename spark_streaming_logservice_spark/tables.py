@@ -7,6 +7,7 @@ gets predicate pushdown / column pruning for free.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 from collections import OrderedDict
@@ -30,6 +31,8 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+logger = logging.getLogger(__name__)
 
 
 def dataset_content_key(path: str) -> tuple:
@@ -93,6 +96,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             dataset_content_key(path),
         )
     except Exception:
+        logger.warning("load_table(%r): no cache key for %s; loading uncached",
+                       name, path, exc_info=True)
         key = None
     with _TABLE_CACHE_LOCK:
         hit = None if key is None else _TABLE_CACHE.get(key)

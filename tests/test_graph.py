@@ -11,6 +11,7 @@ import random
 
 import pytest
 
+from spark_streaming_logservice_spark.operators import graph
 from spark_streaming_logservice_spark.operators.graph import connected_components
 
 
@@ -162,3 +163,16 @@ def test_khop_star_graph(spark):
     seeds = spark.createDataFrame([(0,)], "node BIGINT")
     got = {(r["hop"], r["n_nodes"]) for r in khop_frontiers(und, seeds, hops=2).collect()}
     assert got == {(0, 1), (1, 6), (2, 0)}
+
+
+def test_release_checkpoint_failure_is_logged_at_debug(caplog):
+    class NoPlan:  # a DataFrame whose plan cannot be reached
+        @property
+        def _jdf(self):
+            raise RuntimeError("no plan")
+
+    with caplog.at_level("DEBUG", logger=graph.__name__):
+        graph._release_checkpoint(NoPlan())
+    [rec] = [r for r in caplog.records if r.name == graph.__name__]
+    assert rec.levelname == "DEBUG"
+    assert isinstance(rec.exc_info[1], RuntimeError)

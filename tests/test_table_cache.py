@@ -121,3 +121,23 @@ def test_events_confs_reasserted_on_cache_hit(spark):
     tables.load_table(spark, sf, "events")  # hit
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def test_key_failure_loads_uncached_and_logs_a_warning(spark, tmp_path, monkeypatch, caplog):
+    sf = str(tmp_path)
+    spark.range(4).selectExpr("id AS r_regionkey").write.parquet(
+        os.path.join(sf, "region.parquet"))
+
+    def no_key(path):
+        raise OSError("unreadable")
+
+    monkeypatch.setattr(tables, "dataset_content_key", no_key)
+    monkeypatch.setattr(tables, "_TABLE_CACHE", OrderedDict())
+    with caplog.at_level("WARNING", logger=tables.__name__):
+        df = tables.load_table(spark, sf, "region")
+    assert df.count() == 4
+    assert not tables._TABLE_CACHE
+    [rec] = [r for r in caplog.records if r.name == tables.__name__]
+    assert rec.levelname == "WARNING"
+    assert "loading uncached" in rec.getMessage()
+    assert isinstance(rec.exc_info[1], OSError)
