@@ -154,36 +154,22 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
     n_docs = n_base * k
     from spark_streaming_logservice_spark.streaming import dedup_store as _DS
 
-    # A/B the store digest: the digest never crosses engines, so the
-    # impl is a pure cost knob — measure md5 (historical)
-    # vs the two-seed-xxhash64 128-bit default, best-of-2 fresh-store
-    # passes each; the headline figure is the adopted default's.
-    ab: dict[str, float] = {}
     dt, forwarded, dbreak = None, [], {}
-    for impl in ("xxhash128", "md5"):
-        impl_dt, impl_fwd, impl_break = None, [], {}
-        for p in range(2):  # best-of-2 fresh-store passes, like the rollup
-            digest_dir = os.path.join(tmp_root, f"digest-store-{impl}-{p}")
-            shutil.rmtree(digest_dir, ignore_errors=True)
-            fwd: list = []
-            ingest = dedup_on_ingest(
-                lambda df, bid: fwd.append(df.count()),
-                digest_dir,
-                digest_impl=impl,
-            )
-            _DS.TIMINGS = {}
-            t0 = _t.perf_counter()
-            for b in range(n_batches):
-                ingest(docs.where(F.col("doc_id") % n_batches == b), b)
-            d1 = _t.perf_counter() - t0
-            if impl_dt is None or d1 < impl_dt:
-                impl_dt, impl_fwd = d1, fwd
-                impl_break = {
-                    k2: round(v, 3) for k2, v in _DS.TIMINGS.items()
-                }
-        ab[impl] = round(impl_dt, 3)
-        if impl == "xxhash128":  # the adopted default is the headline
-            dt, forwarded, dbreak = impl_dt, impl_fwd, impl_break
+    for p in range(2):  # best-of-2 fresh-store passes, like the rollup
+        digest_dir = os.path.join(tmp_root, f"digest-store-{p}")
+        shutil.rmtree(digest_dir, ignore_errors=True)
+        fwd: list = []
+        ingest = dedup_on_ingest(
+            lambda df, bid: fwd.append(df.count()), digest_dir
+        )
+        _DS.TIMINGS = {}
+        t0 = _t.perf_counter()
+        for b in range(n_batches):
+            ingest(docs.where(F.col("doc_id") % n_batches == b), b)
+        d1 = _t.perf_counter() - t0
+        if dt is None or d1 < dt:
+            dt, forwarded = d1, fwd
+            dbreak = {k2: round(v, 3) for k2, v in _DS.TIMINGS.items()}
     _DS.TIMINGS = None
     out["dedup_store"] = {
         "rows": n_docs,
@@ -199,11 +185,6 @@ def _maintenance_bench(spark, tmp_root: str, sf_dir: str, n_batches: int = 4) ->
         # scan), forward = downstream count over the cached novel set,
         # digests = the 16-byte-key parquet append.
         "phase_sec": dbreak,
-        # md5 vs xxhash128 (two-seed xxhash64 pair), same 4-batch pass —
-        # the adopted default is whichever this A/B justifies (the
-        # xxhash128 store path, same 128-bit birthday bound as md5).
-        "digest_ab_sec": ab,
-        "digest_impl": "xxhash128",
         "note": (
             "input replicated to ~100k unique rows so batches carry the "
             "same volume as the rollup bench; the store is append-only "

@@ -7,8 +7,7 @@ That state can't live in the streaming state store (unbounded); the standard
 shape is an external digest table:
 
     per micro-batch:
-      1. digest rows (128-bit content digest — two-seed xxhash64 by
-         default, md5 selectable; see DIGEST_IMPLS),
+      1. digest rows (128-bit content digest: two-seed xxhash64),
       2. collapse duplicates within the batch (keep lowest id),
       3. anti-join against the persistent digest table,
       4. forward only the novel rows to the downstream writer,
@@ -54,77 +53,38 @@ from pyspark.sql import functions as F
 
 from spark_streaming_logservice_spark.streaming import storefs
 
-DIGEST_SCHEMA = "digest STRING"  # md5 impl (back-compat alias)
-
-# Digest implementations for the store path (the digest never crosses
-# engines — stream-equals-batch is pytest-pinned, not oracle-replayed —
-# so a cheaper JVM hash is semantically free; VERDICT r9 item 6):
-# - "md5": 128-bit, hex STRING (32 chars/row in the store). The
-#   historical default.
-# - "xxhash128": two independently-seeded xxhash64 passes packed into two
-#   BIGINTs — 128 bits of digest (same birthday bound as md5: a SINGLE
-#   64-bit hash would expect real collisions at 10^10 docs, i.e. silent
-#   false-dedup at 100 TB) at xxhash speed, 16 bytes/row in the store.
-# The A/B lives in BENCH_DETAIL.json maintenance.dedup_store.digest_ab.
-# impl -> (store schema DDL, batch-side column names, store-side column
-# names). Store columns are listed explicitly — nothing re-parses the DDL.
-DIGEST_IMPLS = {
-    "md5": ("digest STRING", ("__d0",), ("digest",)),
-    "xxhash128": ("d0 BIGINT, d1 BIGINT", ("__d0", "__d1"), ("d0", "d1")),
-}
-DEFAULT_DIGEST_IMPL = "xxhash128"
-# stores created before the impl pin existed carry md5 'digest STRING'
-# files and no _digest_impl file — that absence means md5, NOT the current
-# default (reading md5 files with the xxhash schema would NULL every join
-# key, re-forward all history, and let compaction destroy the store).
-_LEGACY_IMPL = "md5"
+# The store digest: two independently-seeded xxhash64 passes packed into
+# two BIGINTs — 128 bits (a SINGLE 64-bit hash would expect real
+# collisions at 10^10 docs, i.e. silent false-dedup at 100 TB) at xxhash
+# speed, 16 bytes/row in the store. The digest never crosses engines
+# (stream-equals-batch is pytest-pinned, not oracle-replayed), so a JVM
+# hash is semantically free.
+STORE_SCHEMA = "d0 BIGINT, d1 BIGINT"
+DIGEST_COLS = ("__d0", "__d1")
+STORE_KEYS = ("d0", "d1")
 
 
-def _digest_exprs(text_col: str, impl: str) -> list:
-    if impl == "md5":
-        return [F.md5(F.col(text_col)).alias("__d0")]
+def _digest_exprs(text_col: str) -> list:
     # two fixed distinct salt literals give two independent 64-bit streams
     return [
-        F.xxhash64(F.lit(0x9E3779B9), F.col(text_col)).alias("__d0"),
-        F.xxhash64(F.lit(0x85EBCA6B), F.col(text_col)).alias("__d1"),
+        F.xxhash64(F.lit(salt), F.col(text_col)).alias(d)
+        for salt, d in zip((0x9E3779B9, 0x85EBCA6B), DIGEST_COLS)
     ]
 
 
-def _null_digest_exprs(impl: str) -> list:
+def _null_digest_exprs() -> list:
     """Typed NULL digest columns for the NULL-text pass-through rows —
-    NOT the digest exprs over NULL text (md5(NULL) is NULL but xxhash64
-    skips NULL inputs and hashes just the salt, which is exactly the
-    impl divergence the pass-through exists to remove)."""
-    _, dcols, _ = DIGEST_IMPLS[impl]
-    typ = "string" if impl == "md5" else "bigint"
-    return [F.lit(None).cast(typ).alias(d) for d in dcols]
+    NOT the digest exprs over NULL text (xxhash64 skips NULL inputs and
+    hashes just the salt, which would give every NULL text one digest)."""
+    return [F.lit(None).cast("bigint").alias(d) for d in DIGEST_COLS]
 
 
-def _store_cols(impl: str) -> tuple[str, ...]:
-    return DIGEST_IMPLS[impl][2]
-
-
-def _pinned_impl(digest_dir: str) -> str | None:
-    """The impl this store is committed to: the _digest_impl pin if
-    present, the legacy default if the store has files but no pin, None
-    for a store that doesn't exist yet."""
-    impl_file = os.path.join(digest_dir, "_digest_impl")
-    if storefs.exists(impl_file):
-        pinned = storefs.read_text(impl_file).strip()
-        if pinned not in DIGEST_IMPLS:
-            raise ValueError(
-                f"digest store {digest_dir} pinned to unknown impl {pinned!r}"
-            )
-        return pinned
-    if _store_files(digest_dir):
-        return _LEGACY_IMPL
-    return None
-
-
-def _to_store(df: DataFrame, impl: str) -> DataFrame:
+def _to_store(df: DataFrame) -> DataFrame:
     """Project a digested batch relation onto the store's column names."""
-    _, dcols, scols = DIGEST_IMPLS[impl]
-    return df.select(*[F.col(d).alias(s) for d, s in zip(dcols, scols)])
+    return df.select(
+        *[F.col(d).alias(s) for d, s in zip(DIGEST_COLS, STORE_KEYS)]
+    )
+
 
 # bench hook (same contract as streaming/rollup.TIMINGS): set to {} before
 # driving batches to accumulate per-phase wall-clock; None = no-op. When
@@ -150,14 +110,6 @@ def _store_files(digest_dir: str) -> list[str]:
     ]
 
 
-# staging dirs written BEFORE sweeps became namespace-scoped (r12) were
-# named '_staging-<batch_id>-<hex>'; the digit-first second segment is
-# unambiguous because namespaces must start with a letter (validated in
-# _check_namespace), so a one-time legacy sweep can reclaim orphans a
-# pre-upgrade crash left behind without touching any live writer's
-# '_staging-<namespace>-…' dirs (r12 ADVICE: they matched neither the
-# scoped sweep nor '_staging-compact-' and leaked forever)
-_LEGACY_STAGING = re.compile(r"^_staging-\d+-[0-9a-f]+$")
 _NAMESPACE_OK = re.compile(r"^[A-Za-z][A-Za-z0-9_]*$")
 
 
@@ -165,22 +117,22 @@ def _check_namespace(namespace: str) -> str:
     if not _NAMESPACE_OK.match(namespace):
         raise ValueError(
             f"digest-store namespace {namespace!r} must start with a letter "
-            "(letters/digits/underscore): a digit-first namespace would be "
-            "indistinguishable from pre-namespace legacy staging dirs and "
-            "the legacy orphan sweep could delete its in-flight staging"
+            "(letters/digits/underscore): it prefixes the writer's batch "
+            "files and staging dirs, and the sweep matches "
+            "'_staging-<namespace>-'"
         )
     return namespace
 
 
 def sweep_staging_orphans(digest_dir: str, namespace: str) -> None:
     """Remove THIS writer's staging orphans from crashed attempts (anything
-    not renamed to final never happened) plus pre-namespace legacy orphans.
-    Scoped to the namespace prefix: a shared store legitimately hosts
-    concurrent writers (dedup_on_ingest + ingest_pipeline), and an unscoped
-    sweep would delete another writer's in-flight staging dir mid-write."""
+    not renamed to final never happened). Scoped to the namespace prefix:
+    a shared store legitimately hosts concurrent writers (dedup_on_ingest
+    + ingest_pipeline), and an unscoped sweep would delete another
+    writer's in-flight staging dir mid-write."""
     own = f"_staging-{namespace}-"
     for f in storefs.listdir(digest_dir):
-        if f.startswith(own) or _LEGACY_STAGING.match(f):
+        if f.startswith(own):
             storefs.rmtree(os.path.join(digest_dir, f), ignore_errors=True)
 
 
@@ -189,7 +141,6 @@ def dedup_against_store(
     digest_dir: str,
     text_col: str,
     id_col: str,
-    digest_impl: str | None = None,
 ) -> DataFrame:
     """The batch's novel rows: within-batch collapse (keep the lowest id per
     digest — one batch-keyed shuffle via a partitioned row_number), then an
@@ -197,42 +148,25 @@ def dedup_against_store(
     a single map-only scan: hits = store ⋉ broadcast(batch digests), then
     batch ⋉̸ broadcast(hits). Both broadcast sides are micro-batch-sized.
 
-    ``digest_impl=None`` resolves to the store's own pin (legacy md5 for
-    pre-pin stores, the default for new stores); passing an impl that
-    contradicts an existing store's pin raises — probing md5 files with
-    the xxhash schema would silently report every duplicate as novel.
-
     NULL-text rows have no content to compare, so they are PASSED THROUGH
     untouched: always forwarded, never deduplicated (within the batch or
     against history), never written to the digest store. This is explicit
-    because the two impls would otherwise silently disagree (ADVICE r10):
-    md5(NULL) is NULL — the NULL-keyed anti-join never matches, so md5
-    re-forwards one NULL row per batch — while Spark's xxhash64 SKIPS
-    NULL inputs, hashing just the salt, which would collapse every
-    NULL-text row in history to one. Pass-through makes the semantics
-    impl-independent and loss-free (a pipeline that wants NULLs dropped
+    because Spark's xxhash64 SKIPS NULL inputs, hashing just the salt,
+    which would collapse every NULL-text row in history to one (ADVICE
+    r10). Pass-through is loss-free (a pipeline that wants NULLs dropped
     filters them upstream)."""
     from pyspark.sql.window import Window
 
     spark = batch_df.sparkSession
-    pinned = _pinned_impl(digest_dir)
-    if digest_impl is None:
-        digest_impl = pinned or DEFAULT_DIGEST_IMPL
-    elif pinned is not None and digest_impl != pinned:
-        raise ValueError(
-            f"digest store {digest_dir} is pinned to {pinned!r}; "
-            f"got digest_impl={digest_impl!r}"
-        )
-    schema, dcols, scols = DIGEST_IMPLS[digest_impl]
     digested = batch_df.where(F.col(text_col).isNotNull()).select(
-        "*", *_digest_exprs(text_col, digest_impl)
+        "*", *_digest_exprs(text_col)
     )
     # NULL-text pass-through: forwarded every batch, never stored
     passthrough = batch_df.where(F.col(text_col).isNull()).select(
-        "*", *_null_digest_exprs(digest_impl)
+        "*", *_null_digest_exprs()
     )
     # within-batch: keep the lowest id per digest (deterministic winner)
-    w = Window.partitionBy(*dcols).orderBy(F.asc(id_col))
+    w = Window.partitionBy(*DIGEST_COLS).orderBy(F.asc(id_col))
     fresh = (
         digested.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
@@ -241,12 +175,12 @@ def dedup_against_store(
     files = _store_files(digest_dir)
     if not files:
         return fresh.unionByName(passthrough)
-    seen = spark.read.schema(schema).parquet(*files)
+    seen = spark.read.schema(STORE_SCHEMA).parquet(*files)
     hits = seen.join(
-        F.broadcast(_to_store(fresh, digest_impl)), list(scols), "left_semi"
+        F.broadcast(_to_store(fresh)), list(STORE_KEYS), "left_semi"
     )
     cond = None
-    for d, s in zip(dcols, scols):
+    for d, s in zip(DIGEST_COLS, STORE_KEYS):
         eq = fresh[d] == hits[s]
         cond = eq if cond is None else (cond & eq)
     return fresh.join(F.broadcast(hits), cond, "left_anti").unionByName(
@@ -255,8 +189,7 @@ def dedup_against_store(
 
 
 def dedup_on_ingest(forward, digest_dir: str, text_col: str = "text",
-                    id_col: str = "doc_id", namespace: str = "q",
-                    digest_impl: str = DEFAULT_DIGEST_IMPL):
+                    id_col: str = "doc_id", namespace: str = "q"):
     """foreachBatch function factory: forward only never-seen-before rows
     downstream and remember their digests durably.
 
@@ -266,38 +199,20 @@ def dedup_on_ingest(forward, digest_dir: str, text_col: str = "text",
     ids when several streaming queries feed ONE shared digest store — the
     same lesson the logstore sink's commit markers learned (two queries
     both have a batch 0; an unqualified marker would read the other
-    query's progress as its own replay). ``digest_impl`` picks the store
-    digest (see DIGEST_IMPLS); ONE impl per store — the first batch pins
-    it in a ``_digest_impl`` meta file and later batches must match.
+    query's progress as its own replay).
     """
     _check_namespace(namespace)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         storefs.makedirs(digest_dir, exist_ok=True)
-        # one digest impl per store, pinned by the first writer: a store
-        # probed with a different hash than it was built with would
-        # silently forward every duplicate. A pre-pin store with files
-        # resolves to the legacy md5 (never the current default).
-        pinned = _pinned_impl(digest_dir)
-        if pinned is not None and pinned != digest_impl:
-            raise ValueError(
-                f"digest store {digest_dir} is pinned to {pinned!r}; "
-                f"got digest_impl={digest_impl!r}"
-            )
-        if pinned is None:
-            storefs.write_text(
-                os.path.join(digest_dir, "_digest_impl"), digest_impl
-            )
         # sweep THIS writer's staging orphans from crashed attempts (same
         # recovery rule as the logstore sink: anything not renamed to final
-        # never happened), plus unambiguous pre-namespace legacy orphans
+        # never happened)
         sweep_staging_orphans(digest_dir, namespace)
         marker = os.path.join(digest_dir, f"{namespace}-batch-{batch_id}.done")
         if storefs.exists(marker):
             return
-        novel = dedup_against_store(
-            batch_df, digest_dir, text_col, id_col, digest_impl
-        )
+        novel = dedup_against_store(batch_df, digest_dir, text_col, id_col)
         # one computation per batch: cache novel across the forward and the
         # digest append (the forward's first action materializes it), then
         # release. Crash ordering stays forward -> digests.
@@ -307,9 +222,8 @@ def dedup_on_ingest(forward, digest_dir: str, text_col: str = "text",
                 t0 = _t.perf_counter()
                 novel.count()  # materialize: attribute dedup vs forward
                 _span("dedup", t0)
-            dcols = DIGEST_IMPLS[digest_impl][1]
             t0 = _t.perf_counter()
-            forward(novel.drop(*dcols), batch_id)
+            forward(novel.drop(*DIGEST_COLS), batch_id)
             _span("forward", t0)
             final = os.path.join(
                 digest_dir, f"{namespace}-batch-{batch_id}.parquet"
@@ -323,7 +237,7 @@ def dedup_on_ingest(forward, digest_dir: str, text_col: str = "text",
                 # NULL-text pass-through rows carry NULL digests and must
                 # never enter the store (they are not dedup state)
                 _to_store(
-                    novel.where(F.col(dcols[0]).isNotNull()), digest_impl
+                    novel.where(F.col(DIGEST_COLS[0]).isNotNull())
                 ).coalesce(1).write.mode("overwrite").parquet(staging)
                 storefs.publish_rename(staging, final)
             _span("digests", t0)
@@ -355,13 +269,9 @@ def compact_digest_store(spark, digest_dir: str) -> int:
     for f in storefs.listdir(digest_dir):
         if f.startswith("_staging-compact-"):
             storefs.rmtree(os.path.join(digest_dir, f), ignore_errors=True)
-    # resolve the store's OWN impl (legacy md5 for pre-pin stores) —
-    # compacting md5 files through the wrong schema would read all-NULL
-    # keys and irreversibly destroy the dedup history
-    impl = _pinned_impl(digest_dir) or DEFAULT_DIGEST_IMPL
     staging = os.path.join(digest_dir, f"_staging-compact-{uuid.uuid4().hex}")
     (
-        spark.read.schema(DIGEST_IMPLS[impl][0])
+        spark.read.schema(STORE_SCHEMA)
         .parquet(*files)
         .distinct()
         .write.mode("overwrite")

@@ -36,7 +36,7 @@ style choice, it is a correctness property:
    trapdoor stage order exists to close).
 
 State layout under ``root``: ``vocab/`` (sharded profile), ``digests/``
-(pinned digest store), ``quarantine/batch-<id>/`` (durable staging),
+(xxhash128 digest store), ``quarantine/batch-<id>/`` (durable staging),
 ``_flags/batch-<id>.json`` (recorded admission decisions), ``_markers/``
 (pipeline batch markers).
 
@@ -55,11 +55,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_streaming_logservice_spark.streaming.dedup_store import (
-    DEFAULT_DIGEST_IMPL,
-    DIGEST_IMPLS,
+    DIGEST_COLS,
+    STORE_KEYS,
     _check_namespace,
     _digest_exprs,
-    _pinned_impl,
     _to_store,
     dedup_against_store,
     sweep_staging_orphans,
@@ -86,7 +85,6 @@ def ingest_pipeline(
     text_col: str = "text",
     source_col: str = "source",
     id_col: str = "doc_id",
-    digest_impl: str = DEFAULT_DIGEST_IMPL,
     namespace: str = "pipe",
     index_dir: str | None = None,
     on_vector_alert=None,
@@ -165,20 +163,6 @@ def ingest_pipeline(
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         storefs.makedirs(digest_dir, exist_ok=True)
-        # resolve the store's digest pin the way dedup_on_ingest does: a
-        # pre-pin store with files is committed to legacy md5 — writing the
-        # default pin over it would read md5 files with the xxhash schema
-        # (every historical duplicate reported novel, mixed-schema appends)
-        pinned = _pinned_impl(digest_dir)
-        if pinned is not None and pinned != digest_impl:
-            raise ValueError(
-                f"digest store {digest_dir} is pinned to {pinned!r}; "
-                f"got digest_impl={digest_impl!r}"
-            )
-        if pinned is None:
-            storefs.write_text(
-                storefs.join(digest_dir, "_digest_impl"), digest_impl
-            )
         # --- stage 1: score the RAW batch ONCE, record the decision
         # durably BEFORE any state mutation. A crash replay reuses the
         # record: re-scoring could see a profile that already merged this
@@ -314,14 +298,11 @@ def ingest_pipeline(
                     quarantined,
                 )
         # --- stage 2: dedup the clean remainder against history ---
-        novel = dedup_against_store(
-            clean, digest_dir, text_col, id_col, digest_impl
-        )
-        dcols = DIGEST_IMPLS[digest_impl][1]
+        novel = dedup_against_store(clean, digest_dir, text_col, id_col)
         novel.persist()
         try:
             # --- stage 3: forward novel clean rows downstream ---
-            forward(novel.drop(*dcols), batch_id)
+            forward(novel.drop(*DIGEST_COLS), batch_id)
             # --- stage 4: the profile learns from NOVEL rows only ---
             merge_additive(
                 vocab_dir,
@@ -361,19 +342,17 @@ def ingest_pipeline(
                     # is in the file, piling near-identical vectors into
                     # the index/quarantine (ADVICE r13, the p27 invariant).
                     own = spark.read.parquet(final_digest)
-                    bcols = DIGEST_IMPLS[digest_impl][1]
-                    scols = DIGEST_IMPLS[digest_impl][2]
                     keyed = (
                         clean.where(F.col(text_col).isNotNull())
                         .select(
                             F.col(id_col).cast("bigint").alias("vec_id"),
-                            *_digest_exprs(text_col, digest_impl),
+                            *_digest_exprs(text_col),
                         )
-                        .groupBy(*bcols)
+                        .groupBy(*DIGEST_COLS)
                         .agg(F.min("vec_id").alias("vec_id"))
                     )
                     cond = None
-                    for b, s in zip(bcols, scols):
+                    for b, s in zip(DIGEST_COLS, STORE_KEYS):
                         c = keyed[b] == own[s]
                         cond = c if cond is None else (cond & c)
                     recovered = keyed.join(own, cond, "left_semi").select(
@@ -396,11 +375,8 @@ def ingest_pipeline(
                     # staging dir from a crash is invisible (never renamed)
                     if not storefs.exists(stage_dir):
                         storefs.makedirs(vec_quarantine_dir, exist_ok=True)
-                        # letter-first 'vq-<bid>' prefix: the digit-first
-                        # shape is reserved for the legacy-orphan sweep's
-                        # "unambiguously dead" premise — no live writer may
-                        # produce it (r13 review); the shared sweep also
-                        # reclaims this dir's own pre-rename orphans
+                        # the shared sweep reclaims this dir's own
+                        # pre-rename orphans ('_staging-vq-<bid>-…')
                         sweep_staging_orphans(
                             vec_quarantine_dir, f"vq-{batch_id}"
                         )
@@ -443,8 +419,8 @@ def ingest_pipeline(
                 # the digest-file recovery and drop the vectors for good.
                 _persist_decision()
             # --- stage 5: remember the novel digests (final-file guarded,
-            # same layout dedup_on_ingest writes, so compaction and impl
-            # pinning apply unchanged) ---
+            # same layout dedup_on_ingest writes, so compaction applies
+            # unchanged) ---
             final = storefs.join(
                 digest_dir, f"{namespace}-batch-{batch_id}.parquet"
             )
@@ -458,7 +434,7 @@ def ingest_pipeline(
                     f"_staging-{namespace}-{batch_id}-{uuid.uuid4().hex}",
                 )
                 _to_store(
-                    novel.where(F.col(dcols[0]).isNotNull()), digest_impl
+                    novel.where(F.col(DIGEST_COLS[0]).isNotNull())
                 ).coalesce(1).write.mode("overwrite").parquet(staging)
                 storefs.publish_rename(staging, final)
         finally:

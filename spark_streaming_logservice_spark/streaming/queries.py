@@ -65,10 +65,23 @@ def dedup_stream(df: DataFrame, *key_cols: str, watermark_col: str | None = None
     return df.dropDuplicates(list(key_cols))
 
 
+def query_id(spark) -> str | None:
+    """Id of the streaming query whose micro-batch this thread runs, or None
+    outside a query (direct calls). Spark sets it as a local property on the
+    thread that runs foreachBatch; a restart from the same checkpoint keeps
+    it, a fresh checkpoint gets a new one. Batch ids restart at 0 per
+    query, so a replay guard keyed on the batch id alone reads another
+    query's batch N as its own replay."""
+    return spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+
+
 def idempotent_foreach_batch(write_fn, marker_dir: str):
     """Wrap a foreachBatch function with the reference sink's batchId guard
     (SINK/LoghubSink.scala:31-38), persisted to ``marker_dir`` so redelivery
-    after driver restart is also skipped (SURVEY.md §7.4.5)."""
+    after driver restart is also skipped (SURVEY.md §7.4.5). The marker
+    ``batch-<id>`` holds the query id (``ok`` outside a query) and skips
+    only that query's replay: a second query with a fresh checkpoint over
+    the same store runs its own batch ids."""
     import os
 
     from spark_streaming_logservice_spark.streaming import storefs
@@ -76,9 +89,10 @@ def idempotent_foreach_batch(write_fn, marker_dir: str):
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         storefs.makedirs(marker_dir, exist_ok=True)
         marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if storefs.exists(marker):
+        owner = query_id(batch_df.sparkSession) or "ok"
+        if storefs.exists(marker) and storefs.read_text(marker) == owner:
             return
         write_fn(batch_df, batch_id)
-        storefs.write_text(marker, "ok")
+        storefs.write_text(marker, owner)
 
     return apply

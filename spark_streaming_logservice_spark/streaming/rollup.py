@@ -17,7 +17,9 @@ Scale/correctness posture:
   retention (expire_rollup) drops whole shards as directory deletes.
   All dirty shards are written in ONE Spark job (partitionBy staging) and
   published per-shard atomically, each with its own batch marker — a
-  crash mid-publish converges shard-by-shard on replay.
+  crash mid-publish converges shard-by-shard on replay. A store has one
+  layout: a sharded merge over a single-dir store (``table/data``) raises
+  instead of folding it in.
 - The table swap is two-phase (write ``.tmp`` dir, atomic rename), with
   TWO explicit crash-window recoveries: (a) a crash between
   ``rename(data, old)`` and ``rename(tmp, data)`` leaves no data dir — the
@@ -25,8 +27,9 @@ Scale/correctness posture:
   this, the retry would compute merged=delta and then delete the only
   surviving copy of the history); (b) a crash after the swap but before the
   batchId marker replays the batch — the committed version records the
-  producing batch_id in ``_batch_meta.json``, so the replayed merge is a
-  no-op instead of a double count.
+  producing (query id, batch id) in ``_batch_meta.json``, so the replayed
+  merge is a no-op instead of a double count, while another query's batch
+  with the same id still merges.
 - State lives in the table, not the state store — the query itself is
   stateless (append mode), so there is no watermark requirement; late rows
   simply merge into their (old) buckets, exactly like the batch rollup.
@@ -40,6 +43,7 @@ store means swapping that backend, not editing this module.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import uuid
@@ -50,7 +54,10 @@ from pyspark.sql import functions as F
 from spark_streaming_logservice_spark.streaming import storefs
 from spark_streaming_logservice_spark.streaming.queries import (
     idempotent_foreach_batch,
+    query_id,
 )
+
+logger = logging.getLogger(__name__)
 
 _SCHEMA = "bucket TIMESTAMP_NTZ, n_events BIGINT, n_errors BIGINT"
 _PART = "__part"
@@ -132,15 +139,19 @@ def merge_additive(
     Crash recovery (see module docstring): an interrupted swap is healed by
     restoring ``.old`` when the data dir is missing, and with ``batch_id``
     set a replay of an already-committed batch returns without merging
-    (``_batch_meta.json`` inside the committed version names its producer;
-    the leading underscore keeps the parquet reader from touching it)."""
+    (``_batch_meta.json`` inside the committed version names its producer:
+    the streaming query's id, None outside a query, and the batch id; the
+    leading underscore keeps the parquet reader from touching it)."""
+    stamp = None if batch_id is None else {
+        "query_id": query_id(delta.sparkSession), "batch_id": batch_id,
+    }
     if partition_expr is not None:
         _merge_sharded(
-            table_dir, delta, key_cols, sum_cols, schema, batch_id, aggs,
+            table_dir, delta, key_cols, sum_cols, schema, stamp, aggs,
             partition_expr, combiner,
         )
         return
-    data, done = _recover_swap(table_dir, batch_id)
+    data, done = _recover_swap(table_dir, stamp)
     if done:
         return
     if storefs.exists(data):
@@ -157,7 +168,7 @@ def merge_additive(
         merged = combiner(delta)
     else:
         merged = delta
-    _commit_swap(table_dir, merged, batch_id)
+    _commit_swap(table_dir, merged, stamp)
 
 
 def _shard_root(table_dir: str) -> str:
@@ -183,39 +194,17 @@ def _check_part_value(pv) -> str:
     return str(pv)
 
 
-def _migrate_legacy(spark: SparkSession, table_dir: str, schema: str,
-                    partition_expr: Column) -> None:
-    """One-time fold of a pre-sharding single-dir store (``table_dir/data``)
-    into the shard layout (ADVICE r7: without this, the first sharded merge
-    would write only ``parts/<shard>`` and ``store_data_dirs`` would then
-    permanently hide the legacy dir — silent loss of all prior state).
-
-    Crash-safe and idempotent: the legacy dir is the source of truth until
-    the final rmtree, so a re-run after a partial publish re-derives
-    identical shard contents and skips the shards that already landed."""
-    data, _ = _recover_swap(table_dir, None)  # heal a torn legacy swap
-    if not storefs.exists(data):
-        return
-    root = _shard_root(table_dir)
-    base = (
-        spark.read.schema(schema)
-        .parquet(data)
-        .withColumn(_PART, partition_expr.cast("string"))
-    )
-    staging = os.path.join(root, f"_staging-migrate-{uuid.uuid4().hex}")
-    base.write.mode("overwrite").partitionBy(_PART).parquet(staging)
-    for d in storefs.listdir(staging):
-        if not d.startswith(f"{_PART}="):
-            continue
-        pv = _check_part_value(d.split("=", 1)[1])
-        dst = os.path.join(root, pv, "data")
-        if storefs.exists(dst):  # published by a crashed earlier migration
-            continue             # (legacy unchanged since → same content)
-        storefs.makedirs(os.path.join(root, pv), exist_ok=True)
-        storefs.publish_rename(os.path.join(staging, d), dst)
-    storefs.rmtree(staging, ignore_errors=True)
-    storefs.rmtree(data, ignore_errors=True)  # commit: legacy gone
-    storefs.rmtree(data + ".old", ignore_errors=True)
+def _reject_single_dir(table_dir: str, what: str) -> None:
+    """One layout per store: once a shard exists, store_data_dirs serves
+    only the shards, so sharded maintenance over a single-dir store would
+    silently hide its data dir."""
+    single = os.path.join(table_dir, "data")
+    if storefs.exists(single) or storefs.exists(single + ".old"):
+        raise ValueError(
+            f"{table_dir} is a single-dir store ({single}); {what} needs "
+            "the sharded layout — merge into this store without "
+            "partition_expr"
+        )
 
 
 def _shard_dirs(table_dir: str) -> list[str]:
@@ -236,9 +225,9 @@ def store_data_dirs(table_dir: str, buckets=None) -> list[str]:
     ``buckets`` (optional collection of partition-value strings) prunes the
     sharded layout at the DIRECTORY level: only the named shards are
     listed, so a reader that knows which buckets its keys hash into never
-    opens the others' files. A legacy single-dir store has no shard
-    structure to prune, so the filter is ignored there (correctness over
-    pruning — the caller's row-level predicate still applies)."""
+    opens the others' files. A single-dir store has no shard structure to
+    prune, so the filter is ignored there (correctness over pruning — the
+    caller's row-level predicate still applies)."""
     want = None if buckets is None else {str(b) for b in buckets}
     dirs = []
     for shard in _shard_dirs(table_dir):
@@ -273,11 +262,12 @@ def _merge_sharded(
     key_cols: list[str],
     sum_cols: list[str],
     schema: str,
-    batch_id: int | None,
+    stamp: dict | None,
     aggs: dict[str, str] | None,
     partition_expr: Column,
     combiner=None,
 ) -> None:
+    _reject_single_dir(table_dir, "a sharded merge")
     spark = delta.sparkSession
     root = _shard_root(table_dir)
     storefs.makedirs(root, exist_ok=True)
@@ -286,12 +276,6 @@ def _merge_sharded(
     for d in storefs.listdir(root):
         if d.startswith("_staging"):
             storefs.rmtree(os.path.join(root, d), ignore_errors=True)
-    # fold a pre-sharding single-dir store into the shard layout before the
-    # first sharded merge can shadow it (ADVICE r7)
-    if storefs.exists(os.path.join(table_dir, "data")) or storefs.exists(
-        os.path.join(table_dir, "data.old")
-    ):
-        _migrate_legacy(spark, table_dir, schema, partition_expr)
 
     import time as _t
 
@@ -310,7 +294,7 @@ def _merge_sharded(
         # publish and the foreachBatch marker) — skip their re-merge
         todo = []
         for pv in dirty:
-            data, done = _recover_swap(os.path.join(root, pv), batch_id)
+            data, done = _recover_swap(os.path.join(root, pv), stamp)
             if not done:
                 todo.append(pv)
         if not todo:
@@ -390,27 +374,14 @@ def _merge_sharded(
                 ).parquet(srcs[pv])
         # publish shard-by-shard: two-phase rename, commit point per shard
         for pv in todo:
-            src = srcs[pv]
-            if batch_id is not None:
-                storefs.write_text(
-                    os.path.join(src, "_batch_meta.json"),
-                    json.dumps({"batch_id": batch_id}),
-                )
-            data = os.path.join(root, pv, "data")
-            old = data + ".old"
-            storefs.makedirs(os.path.join(root, pv), exist_ok=True)
-            storefs.rmtree(old, ignore_errors=True)
-            if storefs.exists(data):
-                storefs.publish_rename(data, old)
-            storefs.publish_rename(src, data)
-            storefs.rmtree(old, ignore_errors=True)
+            _publish(os.path.join(root, pv), srcs[pv], stamp)
         storefs.rmtree(staging, ignore_errors=True)
         _span("publish", t0)
     finally:
         tagged.unpersist()
 
 
-def _recover_swap(table_dir: str, batch_id: int | None) -> tuple[str, bool]:
+def _recover_swap(table_dir: str, stamp: dict | None) -> tuple[str, bool]:
     """Heal an interrupted two-phase swap and detect an already-committed
     batch. Returns (data_dir, already_committed)."""
     data = os.path.join(table_dir, "data")
@@ -420,36 +391,46 @@ def _recover_swap(table_dir: str, batch_id: int | None) -> tuple[str, bool]:
         # .old IS the base table — restore it before reading/deleting
         storefs.publish_rename(old, data)
     meta = os.path.join(data, "_batch_meta.json")
-    if batch_id is not None and storefs.exists(meta):
+    if stamp is not None and storefs.exists(meta):
         try:
-            if json.loads(storefs.read_text(meta)).get("batch_id") == batch_id:
-                    # crash landed between swap and marker: this batch is
-                    # already in the committed version — merging again
-                    # would double-count it
-                    storefs.rmtree(old, ignore_errors=True)
-                    return data, True
-        except (OSError, ValueError):
-            pass
+            if json.loads(storefs.read_text(meta)) == stamp:
+                # crash landed between swap and marker: this batch is
+                # already in the committed version — merging again
+                # would double-count it
+                storefs.rmtree(old, ignore_errors=True)
+                return data, True
+        except (OSError, ValueError) as e:
+            logger.warning(
+                "unreadable %s (%s): merging batch %s again", meta, e,
+                stamp["batch_id"],
+            )
     return data, False
 
 
-def _commit_swap(table_dir: str, merged: DataFrame, batch_id: int | None) -> None:
-    """Write the merged version to ``.tmp`` and atomically publish it;
-    ``rename(tmp, data)`` is the commit point."""
+def _publish(table_dir: str, src: str, stamp: dict | None) -> None:
+    """Make ``src`` the store's data dir: write the producer meta into it,
+    move the current version aside, ``rename(src, data)`` (the commit
+    point), drop the old version."""
     data = os.path.join(table_dir, "data")
-    old, tmp = data + ".old", data + ".tmp"
-    storefs.rmtree(tmp, ignore_errors=True)
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
+    old = data + ".old"
+    if stamp is not None:
         storefs.write_text(
-            os.path.join(tmp, "_batch_meta.json"),
-            json.dumps({"batch_id": batch_id}),
+            os.path.join(src, "_batch_meta.json"), json.dumps(stamp)
         )
+    storefs.makedirs(table_dir, exist_ok=True)
     storefs.rmtree(old, ignore_errors=True)
     if storefs.exists(data):
         storefs.publish_rename(data, old)
-    storefs.publish_rename(tmp, data)
+    storefs.publish_rename(src, data)
     storefs.rmtree(old, ignore_errors=True)
+
+
+def _commit_swap(table_dir: str, merged: DataFrame, stamp: dict | None) -> None:
+    """Write the merged version to ``.tmp`` and atomically publish it."""
+    tmp = os.path.join(table_dir, "data.tmp")
+    storefs.rmtree(tmp, ignore_errors=True)
+    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+    _publish(table_dir, tmp, stamp)
 
 
 def merge_partials(
@@ -580,37 +561,26 @@ def expire_rollup(table_dir: str, older_than, spark: SparkSession) -> int:
     rows read or rewritten, which is the point of calendar sharding for
     retention); only the boundary shard is row-filtered through the same
     two-phase swap as a merge, so retention keeps full bucket precision at
-    any shard granularity. Returns the number of buckets dropped. Legacy
-    single-dir stores fall back to the whole-table filter+swap."""
+    any shard granularity. Returns the number of buckets dropped."""
+    _reject_single_dir(table_dir, "shard retention")
     cut = str(older_than)[:10]  # yyyy-MM-dd of the retention boundary
-    shards = _shard_dirs(table_dir)
-    if shards:
-        dropped = 0
-        for shard in shards:
-            name = os.path.basename(shard)  # yyyy-MM or yyyy-MM-dd
-            edge = cut[: len(name)]
-            data, _ = _recover_swap(shard, None)
-            if not storefs.exists(data):
-                continue
-            if name < edge:
-                dropped += _footer_num_rows(data)
-                storefs.rmtree(shard, ignore_errors=True)
-            elif name == edge:
-                base = spark.read.schema(_SCHEMA).parquet(data)
-                kept = base.where(F.col("bucket") >= F.lit(older_than))
-                n = base.count() - kept.count()
-                if n:
-                    _commit_swap(shard, kept, None)
-                    dropped += n
-        return dropped
-    data, _ = _recover_swap(table_dir, None)
-    if not storefs.exists(data):
-        return 0
-    base = spark.read.schema(_SCHEMA).parquet(data)
-    kept = base.where(F.col("bucket") >= F.lit(older_than))
-    dropped = base.count() - kept.count()
-    if dropped:
-        _commit_swap(table_dir, kept, None)
+    dropped = 0
+    for shard in _shard_dirs(table_dir):
+        name = os.path.basename(shard)  # yyyy-MM or yyyy-MM-dd
+        edge = cut[: len(name)]
+        data, _ = _recover_swap(shard, None)
+        if not storefs.exists(data):
+            continue
+        if name < edge:
+            dropped += _footer_num_rows(data)
+            storefs.rmtree(shard, ignore_errors=True)
+        elif name == edge:
+            base = spark.read.schema(_SCHEMA).parquet(data)
+            kept = base.where(F.col("bucket") >= F.lit(older_than))
+            n = base.count() - kept.count()
+            if n:
+                _commit_swap(shard, kept, None)
+                dropped += n
     return dropped
 
 

@@ -164,86 +164,15 @@ def test_compaction_preserves_dedup_and_replay(spark, tmp_path):
     assert seen[-1] == [6], "replayed batch must not re-forward"
 
 
-def test_digest_impls_agree_and_store_is_pinned(spark, tmp_path):
-    """md5 and xxhash128 stores forward the identical novel sets (the
-    digest never crosses engines, so the impl is a pure cost knob), and a
-    store probed with the wrong impl is rejected instead of silently
-    forwarding every duplicate."""
-    batches = [
-        [(5, "aa"), (3, "aa"), (7, "bb")],
-        [(9, "aa"), (10, "cc"), (11, "cc")],
-        [(12, "bb"), (13, "dd")],
-    ]
-    results = {}
-    for impl in ("md5", "xxhash128"):
-        forwarded, forward = _collector()
-        apply = dedup_on_ingest(
-            forward, str(tmp_path / impl), digest_impl=impl
-        )
-        for i, rows in enumerate(batches):
-            apply(_batch(spark, rows), i)
-        results[impl] = forwarded
-    assert results["md5"] == results["xxhash128"]
-    assert results["md5"] == [
-        (0, [(3, "aa"), (7, "bb")]),
-        (1, [(10, "cc")]),
-        (2, [(13, "dd")]),
-    ]
-    # impl pin: reusing the xxhash128 store with md5 must raise
-    other = dedup_on_ingest(
-        lambda df, bid: None, str(tmp_path / "xxhash128"), digest_impl="md5"
-    )
-    with pytest.raises(ValueError, match="pinned"):
-        other(_batch(spark, [(1, "zz")]), 99)
-
-
-def test_legacy_unpinned_store_resolves_md5_not_default(spark, tmp_path):
-    """A store from before the impl pin existed (md5 files, no _digest_impl)
-    must resolve to md5 everywhere: the default-impl ingest path raises
-    loudly instead of silently re-forwarding all history, direct
-    dedup_against_store probes with md5, and compaction preserves the
-    digests rather than reading NULL keys through the wrong schema."""
-    from spark_streaming_logservice_spark.streaming.dedup_store import (
-        compact_digest_store,
-        dedup_against_store,
-    )
-
-    store = str(tmp_path / "legacy")
-    forwarded, forward = _collector()
-    apply = dedup_on_ingest(forward, store, digest_impl="md5")
-    apply(_batch(spark, [(1, "aa"), (2, "bb")]), 0)
-    apply(_batch(spark, [(3, "cc")]), 1)
-    os.remove(os.path.join(store, "_digest_impl"))  # simulate pre-pin store
-
-    # (a) default-impl ingest raises instead of destroying history
-    other = dedup_on_ingest(forward, store)  # default xxhash128
-    with pytest.raises(ValueError, match="pinned"):
-        other(_batch(spark, [(4, "dd")]), 2)
-
-    # (b) direct probe with no impl resolves md5: 'aa' is suppressed
-    novel = dedup_against_store(
-        _batch(spark, [(5, "aa"), (6, "ee")]), store, "text", "doc_id"
-    )
-    assert sorted(r.doc_id for r in novel.collect()) == [6]
-
-    # (c) compaction through the resolved impl keeps all 3 digests
-    assert compact_digest_store(spark, store) == 2
-    novel2 = dedup_against_store(
-        _batch(spark, [(7, "aa"), (8, "bb"), (9, "cc"), (10, "ff")]),
-        store, "text", "doc_id",
-    )
-    assert sorted(r.doc_id for r in novel2.collect()) == [10]
-
-
 def test_null_text_passes_through_identically_on_both_impls(spark, tmp_path):
-    """NULL-text semantics are explicit and impl-independent (ADVICE r10):
-    without the pass-through, md5(NULL)=NULL re-forwards NULL rows per
-    batch while xxhash64 skips NULL inputs and collapses ALL NULL-text
-    history to one salt-only digest. The contract: NULL-text rows are
-    always forwarded (no content to compare), never deduplicated, and
-    never written to the digest store."""
+    """NULL-text semantics are explicit (ADVICE r10): without the
+    pass-through, xxhash64 skips NULL inputs and would collapse ALL
+    NULL-text history to one salt-only digest. The contract: NULL-text
+    rows are always forwarded (no content to compare), never
+    deduplicated, and never written to the digest store."""
     from spark_streaming_logservice_spark.streaming.dedup_store import (
-        DIGEST_IMPLS,
+        STORE_KEYS,
+        STORE_SCHEMA,
         _store_files,
     )
 
@@ -251,33 +180,27 @@ def test_null_text_passes_through_identically_on_both_impls(spark, tmp_path):
         [(1, None), (2, "aa"), (3, None)],
         [(4, None), (5, "aa"), (6, "bb")],
     ]
-    for impl in ("md5", "xxhash128"):
-        forwarded, forward = _collector()
-        apply = dedup_on_ingest(
-            forward, str(tmp_path / impl), digest_impl=impl
-        )
-        for i, rows in enumerate(batches):
-            apply(_batch(spark, rows), i)
-        # every NULL row forwarded (both within-batch ones), dups on real
-        # text still suppressed across batches
-        assert forwarded == [
-            (0, [(1, None), (2, "aa"), (3, None)]),
-            (1, [(4, None), (6, "bb")]),
-        ], impl
-        # the store holds only the 2 real digests — no NULL rows
-        schema = DIGEST_IMPLS[impl][0]
-        first_col = DIGEST_IMPLS[impl][2][0]
-        stored = spark.read.schema(schema).parquet(
-            *_store_files(str(tmp_path / impl))
-        )
-        assert stored.count() == 2, impl
-        assert stored.where(F.col(first_col).isNull()).count() == 0, impl
+    store = str(tmp_path / "dg")
+    forwarded, forward = _collector()
+    apply = dedup_on_ingest(forward, store)
+    for i, rows in enumerate(batches):
+        apply(_batch(spark, rows), i)
+    # every NULL row forwarded (both within-batch ones), dups on real
+    # text still suppressed across batches
+    assert forwarded == [
+        (0, [(1, None), (2, "aa"), (3, None)]),
+        (1, [(4, None), (6, "bb")]),
+    ]
+    # the store holds only the 2 real digests — no NULL rows
+    stored = spark.read.schema(STORE_SCHEMA).parquet(*_store_files(store))
+    assert stored.count() == 2
+    assert stored.where(F.col(STORE_KEYS[0]).isNull()).count() == 0
 
 
 def test_compaction_under_continuous_ingest_many_batches(spark, tmp_path):
     """VERDICT r10 item 7: a long-running ingest appends one dir per batch;
-    compaction must keep working at high file counts on the PINNED
-    xxhash128 path — dedup history intact, replays still no-ops, and a
+    compaction must keep working at high file counts — dedup history
+    intact, replays still no-ops, and a
     second compaction cycle after further ingest stays correct."""
     from spark_streaming_logservice_spark.streaming.dedup_store import (
         _store_files,
@@ -291,7 +214,6 @@ def test_compaction_under_continuous_ingest_many_batches(spark, tmp_path):
             sorted(r["doc_id"] for r in df.select("doc_id").collect())
         ),
         digest_dir,
-        digest_impl="xxhash128",
     )
     # 120 batches, 2 rows each: one always-novel doc + one dup of the
     # previous batch's novel doc (so every batch exercises the store probe)
@@ -330,32 +252,10 @@ def test_compaction_under_continuous_ingest_many_batches(spark, tmp_path):
     assert seen[-1] == [99_998]
 
 
-def test_legacy_prenamespace_staging_swept(spark, store):
-    """Staging dirs from before sweeps were namespace-scoped
-    ('_staging-<bid>-<hex>', digit-first second segment) matched neither
-    the scoped sweep nor '_staging-compact-' and leaked forever (r12
-    ADVICE). They are unambiguous — namespaces must start with a letter —
-    so any writer's sweep reclaims them; live namespaced staging and
-    compaction staging still survive."""
-    forwarded, forward = _collector()
-    apply = dedup_on_ingest(forward, store)
-    apply(_batch(spark, [(1, "aa")]), 0)
-    legacy = os.path.join(store, "_staging-7-deadbeefdeadbeef")
-    foreign = os.path.join(store, "_staging-pipe-0-inflight")
-    compacting = os.path.join(store, "_staging-compact-abc123")
-    for d in (legacy, foreign, compacting):
-        os.makedirs(d)
-    apply(_batch(spark, [(2, "bb")]), 1)
-    assert not os.path.exists(legacy), "legacy orphan leaked"
-    assert os.path.exists(foreign), "concurrent writer's staging deleted"
-    assert os.path.exists(compacting), "compactor's staging deleted"
-    assert forwarded[-1] == (1, [(2, "bb")])
-
-
 def test_digit_first_namespace_rejected(spark, store):
-    """A digit-first namespace would be indistinguishable from legacy
-    pre-namespace staging names, so the legacy orphan sweep could delete
-    its in-flight staging: rejected at factory construction."""
+    """A namespace prefixes the writer's batch files and staging dirs, so
+    it must be identifier-shaped (letter first, no '-'): anything else is
+    rejected at factory construction."""
     import pytest as _pytest
 
     from spark_streaming_logservice_spark.streaming.ingest_pipeline import (

@@ -188,28 +188,6 @@ def test_replay_reuses_recorded_decision_never_rescores(spark, pipe, monkeypatch
     assert alerts[-1] == (1, ["srcB"])  # decision replayed from the record
 
 
-def test_legacy_prepin_store_mismatch_raises(spark, tmp_path):
-    """A pre-pin-era digest store (files, no _digest_impl) resolves to
-    legacy md5; pointing the pipeline at it with the xxhash default must
-    raise, not silently re-pin and read md5 files with the xxhash schema."""
-    import pytest as _pytest
-
-    from spark_streaming_logservice_spark.streaming.dedup_store import (
-        dedup_on_ingest,
-    )
-
-    root = str(tmp_path / "legacy")
-    digest_dir = os.path.join(root, "digests")
-    ingest = dedup_on_ingest(
-        lambda df, bid: df.count(), digest_dir, digest_impl="md5"
-    )
-    ingest(_df(spark, A0), 0)
-    os.remove(os.path.join(digest_dir, "_digest_impl"))  # pre-pin era
-    pipe = ingest_pipeline(root, lambda df, bid: df.count())
-    with _pytest.raises(ValueError, match="pinned to 'md5'"):
-        pipe(_df(spark, B0), 0)
-
-
 def test_shared_digest_store_namespaces_do_not_collide(spark, tmp_path):
     """The pipeline's digest appends are namespaced ('pipe') so a
     dedup_on_ingest stream (default namespace 'q') sharing the store on

@@ -75,10 +75,10 @@ def test_dedup_store_routes_through_seam(spark, tmp_path):
     finally:
         storefs.set_backend(prev)
     assert out == [1]
-    # staging publish + digest-impl pin + batch marker + orphan sweep all
-    # observed by the backend
+    # staging publish + batch marker + orphan sweep all observed by the
+    # backend
     assert rec.calls["publish_rename"] >= 1  # _staging -> final parquet
-    assert rec.calls["write_text"] >= 2      # _digest_impl + batch marker
+    assert rec.calls["write_text"] >= 1      # batch marker
     assert rec.calls["listdir"] >= 1         # namespace-scoped sweep
     assert os.path.exists(os.path.join(store, "q-batch-0.parquet"))
 

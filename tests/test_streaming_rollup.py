@@ -268,69 +268,120 @@ def test_partial_multi_shard_publish_converges_on_replay(spark, tmp_path):
     assert total == 8
 
 
-def test_legacy_single_dir_store_migrates_into_shards(spark, tmp_path):
-    """A store created by the pre-sharding layout (table/data) must be
-    folded into the shard layout by the first sharded merge — not silently
-    shadowed (ADVICE r7: store_data_dirs hides table/data as soon as any
-    shard exists)."""
+def test_sharded_merge_over_single_dir_store_raises(spark, tmp_path):
+    """A store has one layout: a sharded merge (or shard retention) over a
+    single-dir store (table/data) raises instead of writing shards that
+    store_data_dirs would serve in place of table/data — and leaves
+    table/data intact."""
+    import pytest
+
     table = str(tmp_path / "rollup")
     jan = _batch(spark, [("2024-01-05 10:00:10", "click")])
-    # legacy layout: merge without partition_expr writes table/data
+    # single-dir layout: merge without partition_expr writes table/data
     R.merge_additive(
         table, R.minute_partials(jan), key_cols=["bucket"],
         sum_cols=["n_events", "n_errors"], schema=R._SCHEMA, batch_id=0,
     )
-    assert os.path.isdir(os.path.join(table, "data"))
-
     feb = _batch(spark, [("2024-02-06 10:00:10", "error")])
-    R.merge_partials(table, R.minute_partials(feb), batch_id=1)
-    # legacy dir consumed, January's history now lives in its month shard
-    assert not os.path.exists(os.path.join(table, "data"))
-    assert os.path.isdir(os.path.join(table, "parts", "2024-01", "data"))
+    with pytest.raises(ValueError, match="single-dir store"):
+        R.merge_partials(table, R.minute_partials(feb), batch_id=1)
+    with pytest.raises(ValueError, match="single-dir store"):
+        R.expire_rollup(table, "2024-02-01", spark)
+    assert not os.path.exists(os.path.join(table, "parts"))
+    assert R.store_data_dirs(table) == [os.path.join(table, "data")]
     total = R.read_rollup(spark, table).agg(F.sum("n_events")).collect()[0][0]
-    assert total == 4  # 2 events x (hour+day), nothing lost
-
-    # and a further merge keeps compounding on the migrated state
-    R.merge_partials(
-        table,
-        R.minute_partials(_batch(spark, [("2024-01-05 10:00:40", "click")])),
-        batch_id=2,
-    )
-    total = R.read_rollup(spark, table).agg(F.sum("n_events")).collect()[0][0]
-    assert total == 6
+    assert total == 2  # January's 1 event x (hour+day), untouched
 
 
-def test_legacy_migration_is_idempotent_after_partial_crash(spark, tmp_path):
-    """Crash after the migration published one shard but before the legacy
-    dir was removed: the re-run must not double-count the published shard."""
+def _as_query(spark, qid):
+    """Run the next merges as if inside streaming query ``qid``'s
+    foreachBatch (None: outside any query)."""
+    spark.sparkContext.setLocalProperty("sql.streaming.queryId", qid)
+
+
+def test_batch_meta_guard_is_scoped_by_query(spark, tmp_path):
+    """The committed shard's _batch_meta.json names (query id, batch id):
+    another query's batch with the same id merges, the same query's
+    replay is a no-op."""
     table = str(tmp_path / "rollup")
-    rows = [("2024-01-05 10:00:10", "click"), ("2024-02-06 10:00:10", "click")]
-    R.merge_additive(
-        table, R.minute_partials(_batch(spark, rows)), key_cols=["bucket"],
-        sum_cols=["n_events", "n_errors"], schema=R._SCHEMA, batch_id=0,
-    )
-    # simulate the partial crash: January already landed as a shard while
-    # table/data still exists
-    R._migrate_legacy(
-        spark, table, R._SCHEMA, F.date_format("bucket", "yyyy-MM")
-    )
-    import shutil as _sh
+    rows = _batch(spark, [("2024-01-05 10:00:10", "click")])
+    try:
+        _as_query(spark, "query-a")
+        R.merge_partials(table, R.minute_partials(rows), batch_id=0)
+        _as_query(spark, "query-b")
+        R.merge_partials(table, R.minute_partials(rows), batch_id=0)
+        R.merge_partials(table, R.minute_partials(rows), batch_id=0)  # replay
+    finally:
+        _as_query(spark, None)
+    got = R.read_store(spark, table, R._SCHEMA).agg(F.sum("n_events"))
+    assert got.collect()[0][0] == 2
 
-    jan = os.path.join(table, "parts", "2024-01")
-    _sh.rmtree(os.path.join(table, "parts", "2024-02"))
-    assert os.path.isdir(jan)
-    # resurrect the legacy dir (as if rmtree never ran)
-    R.merge_additive(  # rebuild legacy data dir verbatim
-        table, R.minute_partials(_batch(spark, rows)), key_cols=["bucket"],
-        sum_cols=["n_events", "n_errors"], schema=R._SCHEMA, batch_id=0,
-    )
-    R.merge_partials(
-        table,
-        R.minute_partials(_batch(spark, [("2024-03-01 00:00:10", "click")])),
-        batch_id=1,
-    )
-    total = R.read_rollup(spark, table).agg(F.sum("n_events")).collect()[0][0]
-    assert total == 6  # 3 events x (hour+day): January NOT double-counted
+
+def test_unreadable_batch_meta_is_logged(spark, tmp_path, caplog):
+    """A committed version whose _batch_meta.json cannot be parsed cannot
+    prove the replayed batch is in it: the merge runs again, and says so."""
+    import logging
+
+    table = str(tmp_path / "rollup")
+    rows = _batch(spark, [("2024-01-05 10:00:10", "click")])
+    R.merge_partials(table, R.minute_partials(rows), batch_id=0)
+    meta = os.path.join(table, "parts", "2024-01", "data", "_batch_meta.json")
+    with open(meta, "w") as f:
+        f.write("{torn")
+    with caplog.at_level(logging.WARNING, logger=R.__name__):
+        R.merge_partials(table, R.minute_partials(rows), batch_id=0)
+    warned = [r for r in caplog.records if r.name == R.__name__]
+    assert len(warned) == 1 and "_batch_meta.json" in warned[0].getMessage()
+    got = R.read_store(spark, table, R._SCHEMA).agg(F.sum("n_events"))
+    assert got.collect()[0][0] == 2
+
+
+def test_fresh_checkpoint_query_keeps_every_batch(spark, tmp_path):
+    """A second query with a fresh checkpoint into an existing rollup
+    starts its batch ids at 0 again: neither the first query's markers nor
+    its shard's _batch_meta.json may make it skip those batches."""
+    import json
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    table = str(tmp_path / "rollup")
+
+    def add_files(sizes, start):
+        for i, n in enumerate(sizes, start):
+            path = os.path.join(src, f"part-{i:02d}.json")
+            with open(path, "w") as f:
+                for j in range(n):
+                    f.write(json.dumps({
+                        "ts": f"2024-01-05T10:{i:02d}:{j:02d}",
+                        "event_type": "click",
+                    }) + "\n")
+            os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    def run(ck):
+        q = (
+            spark.readStream.schema("ts TIMESTAMP_NTZ, event_type STRING")
+            .option("maxFilesPerTrigger", "1")
+            .json(src)
+            .writeStream.foreachBatch(R.incremental_rollup_writer(table))
+            .option("checkpointLocation", str(tmp_path / ck))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        progress = [p for p in q.recentProgress if p.numInputRows]
+        return (len({p.batchId for p in progress}),
+                sum(p.numInputRows for p in progress))
+
+    def total():
+        got = R.read_store(spark, table, R._SCHEMA).agg(F.sum("n_events"))
+        return got.collect()[0][0]
+
+    add_files([1, 2, 1, 2], 0)
+    assert run("ck-a") == (4, 6)
+    assert total() == 6
+    add_files([2, 3], 4)
+    assert run("ck-b") == (6, 11)  # every file again, batch ids 0..5
+    assert total() == 17
 
 
 def test_unsafe_partition_value_rejected(spark, tmp_path):
