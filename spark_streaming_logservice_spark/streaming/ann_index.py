@@ -70,7 +70,9 @@ from spark_streaming_logservice_spark.operators.ann_pq import (
 )
 from spark_streaming_logservice_spark.streaming import storefs
 from spark_streaming_logservice_spark.streaming.queries import (
+    batch_record,
     idempotent_foreach_batch,
+    parse_batch_record,
 )
 from spark_streaming_logservice_spark.streaming.rollup import (
     _commit_swap,
@@ -84,6 +86,7 @@ VEC_SCHEMA = (
     "vec_id BIGINT, cell INT, c0 INT, c1 INT, c2 INT, c3 INT, "
     "emb ARRAY<DOUBLE>"
 )
+QUARANTINE_SCHEMA = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
 VEC_SHARD = 1024  # vectors shard = vec_id DIV 1024: append-mostly tail
 
 
@@ -1175,9 +1178,9 @@ def _l1_cell_drift(bc: dict, pc: dict) -> dict:
 # index cell histogram per (app, store): read ONCE from the store, then
 # maintained incrementally by the gate (+= each admitted batch's cell
 # counts) — the per-batch gate cost stays O(batch + K_CELLS), never a
-# corpus rescan. Single-writer per store (the batch-marker namespace's
-# own assumption); a restart simply re-reads. "last_batch" guards the
-# increment against a same-process retry of a crashed batch whose merge
+# corpus rescan. One gate writer per store (a second writer's admissions
+# never reach this cache); a restart simply re-reads. "last_record" guards
+# the increment against a same-process retry of a crashed batch whose merge
 # already landed (the merge itself dedups on vec_id; the cached counts
 # must not double-add).
 _CELL_HIST_CACHE: dict[tuple, dict] = {}
@@ -1217,7 +1220,7 @@ def cached_index_hist(spark: SparkSession, table_dir: str) -> dict:
                 r["cell"]: r["n"]
                 for r in index_cell_histogram(spark, table_dir).collect()
             },
-            "last_batch": None,
+            "last_record": None,
         }
         _CELL_HIST_CACHE[key] = cached
     return cached
@@ -1228,12 +1231,13 @@ def admit_encoded(
 ) -> None:
     """Merge an admitted encoded batch into the vectors store (replay-
     guarded by merge_additive's batch meta) and advance the cached
-    histogram exactly once per batch id."""
+    histogram exactly once per batch record."""
     _merge_vectors(table_dir, enc, batch_id=batch_id)
-    if cached["last_batch"] != batch_id:
+    record = batch_record(enc.sparkSession, batch_id)
+    if cached["last_record"] != record:
         for cell, n in bc.items():
             cached["hist"][cell] = cached["hist"].get(cell, 0) + n
-        cached["last_batch"] = batch_id
+        cached["last_record"] = record
 
 
 def gated_ann_writer(
@@ -1266,8 +1270,8 @@ def gated_ann_writer(
 
     Per-batch cost is O(batch encode + K_CELLS): the index histogram is
     read from the store once per application and maintained
-    incrementally as batches are admitted (single gate-writer per store —
-    the same assumption the batch-marker namespace already makes).
+    incrementally as batches are admitted (one gate writer per store: no
+    other writer's admissions reach the cached histogram).
 
     Crash contract (the dedup store's, NOT stronger): the batch marker
     makes replay of a COMPLETED batch a no-op; a crash after
@@ -1312,29 +1316,31 @@ def gated_ann_writer(
 
 def quarantine_stager(quarantine_dir: str):
     """``on_alert`` callback for :func:`gated_ann_writer` that stages each
-    rejected batch durably: ``quarantine_dir/batch-<id>/`` parquet,
+    rejected batch durably: ``quarantine_dir/<batch_record>/`` parquet,
     overwrite mode — alert redelivery (crash after alert, before the
     batch marker) restages the same rows onto themselves, idempotent."""
 
     def stage(batch_id: int, report: dict, batch_df: DataFrame) -> None:
+        record = batch_record(batch_df.sparkSession, batch_id)
         (
             batch_df.select("vec_id", "embedding")
             .write.mode("overwrite")
-            .parquet(os.path.join(quarantine_dir, f"batch-{batch_id}"))
+            .parquet(os.path.join(quarantine_dir, record))
         )
 
     return stage
 
 
-def read_quarantine(spark: SparkSession, quarantine_dir: str) -> DataFrame:
-    """All staged (vec_id, embedding) rows, empty frame if none staged."""
-    schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+def read_quarantine(spark: SparkSession, quarantine_dir: str,
+                    schema: str = QUARANTINE_SCHEMA) -> DataFrame:
+    """All rows staged under ``quarantine_dir``, one parquet dir per batch
+    record of any query; empty frame if none staged."""
     if not storefs.isdir(quarantine_dir):
         return spark.createDataFrame([], schema)
     dirs = sorted(
         os.path.join(quarantine_dir, d)
         for d in storefs.listdir(quarantine_dir)
-        if d.startswith("batch-")
+        if parse_batch_record(d) is not None
     )
     if not dirs:
         return spark.createDataFrame([], schema)

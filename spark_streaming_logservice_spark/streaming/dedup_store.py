@@ -33,6 +33,9 @@ write to the logstore sink). Ordering is forward → digests → marker:
 - crash between digests and marker → replay sees its own digests in the
   store, forwards nothing new, and completes the marker — rows were already
   forwarded by the failed attempt, so nothing is lost or doubled.
+Per-batch names (digest file ``q-<record>.parquet``, its staging dir,
+marker ``_markers/<record>``) use the ``queries.batch_record`` key, so
+queries with their own checkpoints share one store safely.
 
 Durability primitives (rename/list/markers) route through the single
 filesystem seam ``streaming/storefs.py`` — its module docstring states
@@ -43,7 +46,6 @@ store means swapping that backend, not editing this module.
 from __future__ import annotations
 
 import os
-import re
 import uuid
 
 import time as _t
@@ -52,6 +54,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_streaming_logservice_spark.streaming import storefs
+from spark_streaming_logservice_spark.streaming.queries import (
+    batch_record,
+    idempotent_foreach_batch,
+    parse_batch_record,
+)
 
 # The store digest: two independently-seeded xxhash64 passes packed into
 # two BIGINTs — 128 bits (a SINGLE 64-bit hash would expect real
@@ -62,6 +69,7 @@ from spark_streaming_logservice_spark.streaming import storefs
 STORE_SCHEMA = "d0 BIGINT, d1 BIGINT"
 DIGEST_COLS = ("__d0", "__d1")
 STORE_KEYS = ("d0", "d1")
+DIGEST_PREFIX = "q"  # this writer's digest files; ingest_pipeline's: "pipe"
 
 
 def _digest_exprs(text_col: str) -> list:
@@ -110,30 +118,41 @@ def _store_files(digest_dir: str) -> list[str]:
     ]
 
 
-_NAMESPACE_OK = re.compile(r"^[A-Za-z][A-Za-z0-9_]*$")
-
-
-def _check_namespace(namespace: str) -> str:
-    if not _NAMESPACE_OK.match(namespace):
-        raise ValueError(
-            f"digest-store namespace {namespace!r} must start with a letter "
-            "(letters/digits/underscore): it prefixes the writer's batch "
-            "files and staging dirs, and the sweep matches "
-            "'_staging-<namespace>-'"
+def publish_once(df: DataFrame, directory: str, prefix: str, record: str,
+                 name: str) -> None:
+    """Publish ``df`` as ``directory/name`` unless a replay already did:
+    staged to ``_staging-<prefix>-<record>-<hex>``, then renamed. Sweeps
+    only the orphans of ``record``'s own query (never renamed = never
+    happened): a shared store hosts concurrent writers, and an unscoped
+    sweep would delete another's in-flight staging dir."""
+    final = os.path.join(directory, name)
+    if storefs.exists(final):
+        return
+    storefs.makedirs(directory, exist_ok=True)
+    owner = parse_batch_record(record)[0]
+    head = f"_staging-{prefix}-"
+    for f in storefs.listdir(directory):
+        staged = f.startswith(head) and parse_batch_record(
+            f[len(head):].rpartition("-")[0]
         )
-    return namespace
+        if staged and staged[0] == owner:
+            storefs.rmtree(os.path.join(directory, f), ignore_errors=True)
+    staging = os.path.join(
+        directory, f"_staging-{prefix}-{record}-{uuid.uuid4().hex}"
+    )
+    df.write.mode("overwrite").parquet(staging)
+    storefs.publish_rename(staging, final)
 
 
-def sweep_staging_orphans(digest_dir: str, namespace: str) -> None:
-    """Remove THIS writer's staging orphans from crashed attempts (anything
-    not renamed to final never happened). Scoped to the namespace prefix:
-    a shared store legitimately hosts concurrent writers (dedup_on_ingest
-    + ingest_pipeline), and an unscoped sweep would delete another
-    writer's in-flight staging dir mid-write."""
-    own = f"_staging-{namespace}-"
-    for f in storefs.listdir(digest_dir):
-        if f.startswith(own):
-            storefs.rmtree(os.path.join(digest_dir, f), ignore_errors=True)
+def publish_digests(novel: DataFrame, digest_dir: str, prefix: str,
+                    record: str) -> None:
+    """Append a batch's novel digests as ``<prefix>-<record>.parquet``.
+    NULL-text pass-through rows carry NULL digests and never enter the
+    store (they are not dedup state)."""
+    publish_once(
+        _to_store(novel.where(F.col(DIGEST_COLS[0]).isNotNull())).coalesce(1),
+        digest_dir, prefix, record, f"{prefix}-{record}.parquet",
+    )
 
 
 def dedup_against_store(
@@ -189,29 +208,19 @@ def dedup_against_store(
 
 
 def dedup_on_ingest(forward, digest_dir: str, text_col: str = "text",
-                    id_col: str = "doc_id", namespace: str = "q"):
+                    id_col: str = "doc_id"):
     """foreachBatch function factory: forward only never-seen-before rows
     downstream and remember their digests durably.
 
     ``forward(novel_df, batch_id)`` receives the novel rows WITHOUT the
     internal digest column(s) and must be replay-idempotent (see module
-    docstring for the crash contract). ``namespace`` disambiguates batch
-    ids when several streaming queries feed ONE shared digest store — the
-    same lesson the logstore sink's commit markers learned (two queries
-    both have a batch 0; an unqualified marker would read the other
-    query's progress as its own replay).
+    docstring for the crash contract). Several streaming queries may feed
+    ONE shared digest store: the digest files and the batch markers
+    (``digest_dir/_markers``) are named by ``queries.batch_record``, so
+    one query's batch 0 is never read as another's replay.
     """
-    _check_namespace(namespace)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        storefs.makedirs(digest_dir, exist_ok=True)
-        # sweep THIS writer's staging orphans from crashed attempts (same
-        # recovery rule as the logstore sink: anything not renamed to final
-        # never happened)
-        sweep_staging_orphans(digest_dir, namespace)
-        marker = os.path.join(digest_dir, f"{namespace}-batch-{batch_id}.done")
-        if storefs.exists(marker):
-            return
         novel = dedup_against_store(batch_df, digest_dir, text_col, id_col)
         # one computation per batch: cache novel across the forward and the
         # digest append (the forward's first action materializes it), then
@@ -225,27 +234,16 @@ def dedup_on_ingest(forward, digest_dir: str, text_col: str = "text",
             t0 = _t.perf_counter()
             forward(novel.drop(*DIGEST_COLS), batch_id)
             _span("forward", t0)
-            final = os.path.join(
-                digest_dir, f"{namespace}-batch-{batch_id}.parquet"
-            )
             t0 = _t.perf_counter()
-            if not storefs.exists(final):
-                staging = os.path.join(
-                    digest_dir,
-                    f"_staging-{namespace}-{batch_id}-{uuid.uuid4().hex}",
-                )
-                # NULL-text pass-through rows carry NULL digests and must
-                # never enter the store (they are not dedup state)
-                _to_store(
-                    novel.where(F.col(DIGEST_COLS[0]).isNotNull())
-                ).coalesce(1).write.mode("overwrite").parquet(staging)
-                storefs.publish_rename(staging, final)
+            publish_digests(
+                novel, digest_dir, DIGEST_PREFIX,
+                batch_record(batch_df.sparkSession, batch_id),
+            )
             _span("digests", t0)
-            storefs.write_text(marker, "ok")
         finally:
             novel.unpersist()
 
-    return apply
+    return idempotent_foreach_batch(apply, os.path.join(digest_dir, "_markers"))
 
 
 def compact_digest_store(spark, digest_dir: str) -> int:
@@ -258,13 +256,13 @@ def compact_digest_store(spark, digest_dir: str) -> int:
     covered dirs are deleted, so a crash mid-cleanup leaves some digests
     present twice — harmless for dedup (an anti-join is idempotent in the
     probe side; duplicate store digests change nothing) and healed by the
-    next compaction. Batch ``.done`` markers are untouched, so replays of
-    compacted batches still short-circuit."""
+    next compaction. Batch markers are untouched, so replays of compacted
+    batches still short-circuit."""
     files = _store_files(digest_dir)
     if len(files) <= 1:
         return 0
     # sweep compaction's OWN crashed staging only — writer sweeps are
-    # namespace-scoped for the same reason (concurrent writers on a
+    # query-scoped for the same reason (concurrent writers on a
     # shared store must not delete each other's in-flight staging)
     for f in storefs.listdir(digest_dir):
         if f.startswith("_staging-compact-"):

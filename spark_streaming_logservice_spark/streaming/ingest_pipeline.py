@@ -28,7 +28,7 @@ style choice, it is a correctness property:
    dedup_on_ingest already imposes. The flag set is stable across replays
    because it is RECORDED, not re-derived: each batch is scored once and
    the decision (scores + flagged sources) is written to
-   ``_flags/batch-<id>.json`` before any state mutation; a crash replay
+   ``_flags/<record>.json`` before any state mutation; a crash replay
    reuses the record. Re-scoring on replay would be wrong — the profile
    may already have merged the batch's novel rows, which shifts it toward
    the batch's own distribution and can flip a clean source to flagged
@@ -36,9 +36,11 @@ style choice, it is a correctness property:
    trapdoor stage order exists to close).
 
 State layout under ``root``: ``vocab/`` (sharded profile), ``digests/``
-(xxhash128 digest store), ``quarantine/batch-<id>/`` (durable staging),
-``_flags/batch-<id>.json`` (recorded admission decisions), ``_markers/``
-(pipeline batch markers).
+(xxhash128 digest store, this writer's files ``pipe-<record>.parquet``),
+``quarantine/<record>/`` (durable staging), ``_flags/<record>.json``
+(recorded admission decisions), ``_markers/<record>`` (pipeline batch
+markers), ``<record>`` being the ``queries.batch_record`` key: a second
+query with a fresh checkpoint scores and stages its own batch 0.
 
 Durability primitives (rename/list/markers) route through the single
 filesystem seam ``streaming/storefs.py`` — its module docstring states
@@ -49,7 +51,6 @@ store means swapping that backend, not editing this module.
 from __future__ import annotations
 
 import json
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,14 +58,15 @@ from pyspark.sql import functions as F
 from spark_streaming_logservice_spark.streaming.dedup_store import (
     DIGEST_COLS,
     STORE_KEYS,
-    _check_namespace,
     _digest_exprs,
-    _to_store,
     dedup_against_store,
-    sweep_staging_orphans,
+    publish_digests,
+    publish_once,
 )
 from spark_streaming_logservice_spark.streaming.queries import (
+    batch_record,
     idempotent_foreach_batch,
+    parse_batch_record,
 )
 from spark_streaming_logservice_spark.streaming import storefs
 from spark_streaming_logservice_spark.streaming.rollup import merge_additive
@@ -74,6 +76,8 @@ from spark_streaming_logservice_spark.streaming.vocab_drift import (
     score_and_split,
     vocab_partials,
 )
+
+DIGEST_PREFIX = "pipe"  # this writer's digest files; dedup_on_ingest's: "q"
 
 
 def ingest_pipeline(
@@ -85,7 +89,6 @@ def ingest_pipeline(
     text_col: str = "text",
     source_col: str = "source",
     id_col: str = "doc_id",
-    namespace: str = "pipe",
     index_dir: str | None = None,
     on_vector_alert=None,
     vec_threshold: float = 0.5,
@@ -103,11 +106,9 @@ def ingest_pipeline(
     digests → write the batch marker. See module docstring for why this
     order is load-bearing.
 
-    ``namespace`` disambiguates digest-append batch ids when the digest
-    store is SHARED with other writers (``dedup_on_ingest`` defaults to
-    ``"q"``; two queries both have a batch 0 — an unqualified name would
-    make one writer read the other's append as its own and silently skip
-    recording its digests).
+    Every per-batch record is named by ``queries.batch_record`` (see
+    module docstring), so several queries, and a ``dedup_on_ingest``
+    writer, may share ``root`` or its digest store.
 
     NULL-source rows are unscoreable (no profile bucket) and NULL-text rows
     are undedupable (no content digest): both pass through to ``forward``
@@ -130,7 +131,7 @@ def ingest_pipeline(
       (embedding included) sit in the TEXT quarantine and re-ingest
       through both legs under a new batch id.
     - A vec-flagged batch stages its NOVEL (vec_id, embedding) rows to
-      ``root/vec_quarantine/batch-<id>`` by staging-dir + atomic rename
+      ``root/vec_quarantine/<record>`` by staging-dir + atomic rename
       (skip-if-published — replay after the digest append sees an empty
       novel set and must NOT clobber the staged rows), then calls
       ``on_vector_alert(batch_id, report, vec_df)`` where ``vec_df`` reads
@@ -145,7 +146,7 @@ def ingest_pipeline(
       crash between the two would make the replay's novel set empty and
       silently drop the batch's vectors. Every vector-side mutation has
       its own replay guard (vector merge via merge_additive batch meta,
-      histogram increment via last_batch + store-rebuild, staging via
+      histogram increment via last_record + store-rebuild, staging via
       publish-rename), so the composed replay converges from any crash
       point. NULL-embedding rows skip the vector leg entirely.
 
@@ -154,7 +155,6 @@ def ingest_pipeline(
     bootstrap clamp in cell form.
     """
 
-    _check_namespace(namespace)
     vocab_dir = storefs.join(root, "vocab")
     digest_dir = storefs.join(root, "digests")
     quarantine_dir = storefs.join(root, "quarantine")
@@ -162,14 +162,14 @@ def ingest_pipeline(
     flags_dir = storefs.join(root, "_flags")
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        storefs.makedirs(digest_dir, exist_ok=True)
+        record = batch_record(batch_df.sparkSession, batch_id)
         # --- stage 1: score the RAW batch ONCE, record the decision
         # durably BEFORE any state mutation. A crash replay reuses the
         # record: re-scoring could see a profile that already merged this
         # batch's novel rows and flip a clean source to flagged (see
         # module docstring). The record is also what makes the alert
         # payload replay-identical.
-        flag_file = storefs.join(flags_dir, f"batch-{batch_id}.json")
+        flag_file = storefs.join(flags_dir, f"{record}.json")
         recorded = storefs.exists(flag_file)
         if recorded:
             decision = json.loads(storefs.read_text(flag_file))
@@ -289,7 +289,7 @@ def ingest_pipeline(
             # durable, overwrite-idempotent staging: alert redelivery
             # restages the same rows onto themselves
             quarantined.write.mode("overwrite").parquet(
-                storefs.join(quarantine_dir, f"batch-{batch_id}")
+                storefs.join(quarantine_dir, record)
             )
             if on_alert is not None:
                 on_alert(
@@ -323,7 +323,7 @@ def ingest_pipeline(
                     F.col(id_col).cast("bigint").alias("vec_id")
                 )
                 final_digest = storefs.join(
-                    digest_dir, f"{namespace}-batch-{batch_id}.parquet"
+                    digest_dir, f"{DIGEST_PREFIX}-{record}.parquet"
                 )
                 if vec_rescored and storefs.exists(final_digest):
                     # legacy-record replay AFTER this batch's digest
@@ -365,27 +365,14 @@ def ingest_pipeline(
                     # disjoint: recovery covers only non-NULL-text rows)
                     novel_ids = recovered.unionByName(novel_ids)
                 if vec["flagged"]:
-                    stage_dir = storefs.join(
-                        vec_quarantine_dir, f"batch-{batch_id}"
-                    )
-                    nvdf = vdf.join(novel_ids, "vec_id", "left_semi")
                     # publish by staging + atomic rename, skip-if-published:
                     # a replay AFTER the digest append sees an empty novel
                     # set and must not clobber the staged rows; a torn
                     # staging dir from a crash is invisible (never renamed)
-                    if not storefs.exists(stage_dir):
-                        storefs.makedirs(vec_quarantine_dir, exist_ok=True)
-                        # the shared sweep reclaims this dir's own
-                        # pre-rename orphans ('_staging-vq-<bid>-…')
-                        sweep_staging_orphans(
-                            vec_quarantine_dir, f"vq-{batch_id}"
-                        )
-                        staging = storefs.join(
-                            vec_quarantine_dir,
-                            f"_staging-vq-{batch_id}-{uuid.uuid4().hex}",
-                        )
-                        nvdf.write.mode("overwrite").parquet(staging)
-                        storefs.publish_rename(staging, stage_dir)
+                    publish_once(
+                        vdf.join(novel_ids, "vec_id", "left_semi"),
+                        vec_quarantine_dir, "vq", record, record,
+                    )
                     if on_vector_alert is not None:
                         # the alert payload is the PUBLISHED staging dir,
                         # not the in-flight novel frame: on a redelivery
@@ -397,7 +384,9 @@ def ingest_pipeline(
                         on_vector_alert(
                             batch_id,
                             vec["report"],
-                            spark.read.parquet(stage_dir),
+                            spark.read.parquet(
+                                storefs.join(vec_quarantine_dir, record)
+                            ),
                         )
                 else:
                     enc_novel = enc.join(novel_ids, "vec_id", "left_semi")
@@ -421,22 +410,7 @@ def ingest_pipeline(
             # --- stage 5: remember the novel digests (final-file guarded,
             # same layout dedup_on_ingest writes, so compaction applies
             # unchanged) ---
-            final = storefs.join(
-                digest_dir, f"{namespace}-batch-{batch_id}.parquet"
-            )
-            if not storefs.exists(final):
-                # namespace-scoped sweep (shared with dedup_on_ingest): the
-                # store legitimately hosts concurrent writers — neither
-                # deletes the other's in-flight staging dir
-                sweep_staging_orphans(digest_dir, namespace)
-                staging = storefs.join(
-                    digest_dir,
-                    f"_staging-{namespace}-{batch_id}-{uuid.uuid4().hex}",
-                )
-                _to_store(
-                    novel.where(F.col(DIGEST_COLS[0]).isNotNull())
-                ).coalesce(1).write.mode("overwrite").parquet(staging)
-                storefs.publish_rename(staging, final)
+            publish_digests(novel, digest_dir, DIGEST_PREFIX, record)
         finally:
             novel.unpersist()
             if enc is not None:
@@ -453,11 +427,11 @@ def read_vec_quarantine(spark: SparkSession, root: str) -> DataFrame:
     atomic rename, so a torn stage is never visible here). These rows'
     TEXT side was already forwarded and learned — they must NOT re-enter
     the pipeline."""
-    from spark_streaming_logservice_spark.streaming.ann_index import (
-        read_quarantine as _read_vec_q,
-    )
+    from spark_streaming_logservice_spark.streaming import ann_index
 
-    return _read_vec_q(spark, storefs.join(root, "vec_quarantine"))
+    return ann_index.read_quarantine(
+        spark, storefs.join(root, "vec_quarantine")
+    )
 
 
 def read_quarantine(spark: SparkSession, root: str, schema: str) -> DataFrame:
@@ -465,43 +439,34 @@ def read_quarantine(spark: SparkSession, root: str, schema: str) -> DataFrame:
     after recovery MUST flow through the pipeline again under a NEW batch
     id — stage order guarantees the digest store never saw them, so they
     are admitted, deduplicated and learned like any fresh data."""
-    quarantine_dir = storefs.join(root, "quarantine")
-    if not storefs.isdir(quarantine_dir):
-        return spark.createDataFrame([], schema)
-    dirs = sorted(
-        storefs.join(quarantine_dir, d)
-        for d in storefs.listdir(quarantine_dir)
-        if d.startswith("batch-")
+    from spark_streaming_logservice_spark.streaming import ann_index
+
+    return ann_index.read_quarantine(
+        spark, storefs.join(root, "quarantine"), schema
     )
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
 
 
 def clear_quarantine(root: str, batch_ids=None) -> int:
     """Drop staged batches (all, or just ``batch_ids``) after recovery has
-    re-ingested or discarded them; returns the number of batches cleared."""
+    re-ingested or discarded them; returns the number of staged dirs
+    cleared. A batch id names that batch of EVERY query that staged one,
+    so it may clear more than one dir."""
     quarantine_dir = storefs.join(root, "quarantine")
     if not storefs.isdir(quarantine_dir):
         return 0
-    names = (
-        [f"batch-{b}" for b in batch_ids]
-        if batch_ids is not None
-        else [d for d in storefs.listdir(quarantine_dir) if d.startswith("batch-")]
-    )
     n = 0
-    for name in names:
-        path = storefs.join(quarantine_dir, name)
-        if storefs.isdir(path):
-            storefs.rmtree(path)
+    for name in storefs.listdir(quarantine_dir):
+        rec = parse_batch_record(name)
+        if rec is not None and (batch_ids is None or rec[1] in batch_ids):
+            storefs.rmtree(storefs.join(quarantine_dir, name))
             n += 1
     return n
 
 
 def expire_pipeline_records(root: str, keep_last: int = 1000) -> int:
-    """Prune per-batch bookkeeping (``_markers/batch-N``,
-    ``_flags/batch-N.json``) older than the newest ``keep_last`` batch
-    ids; returns the number of files removed.
+    """Prune per-batch bookkeeping (``_markers/<record>``,
+    ``_flags/<record>.json``) older than the newest ``keep_last`` batch
+    ids of each query; returns the number of files removed.
 
     Safety argument: replay only ever redelivers batches at or after the
     streaming checkpoint's frontier — once the source commits past a
@@ -518,16 +483,16 @@ def expire_pipeline_records(root: str, keep_last: int = 1000) -> int:
         d = storefs.join(root, sub)
         if not storefs.isdir(d):
             continue
-        ids = []
+        per_query: dict = {}
         for f in storefs.listdir(d):
-            if f.startswith("batch-") and f.endswith(suffix):
-                stem = f[len("batch-"):]
-                if suffix:
-                    stem = stem[: -len(suffix)]
-                if stem.isdigit():
-                    ids.append((int(stem), f))
-        ids.sort()
-        for _, f in ids[:-keep_last] if keep_last > 0 else ids:
-            storefs.remove(storefs.join(d, f))
-            removed += 1
+            rec = f.endswith(suffix) and parse_batch_record(
+                f[: len(f) - len(suffix)]
+            )
+            if rec:
+                per_query.setdefault(rec[0], []).append((rec[1], f))
+        for ids in per_query.values():
+            ids.sort()
+            for _, f in ids[:-keep_last] if keep_last > 0 else ids:
+                storefs.remove(storefs.join(d, f))
+                removed += 1
     return removed

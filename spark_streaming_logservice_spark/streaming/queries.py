@@ -14,6 +14,8 @@ bound state size (late data dropped, windows evicted)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -75,24 +77,40 @@ def query_id(spark) -> str | None:
     return spark.sparkContext.getLocalProperty("sql.streaming.queryId")
 
 
+_RECORD = re.compile(r"^(?:(?P<owner>.+)-)?batch-(?P<batch_id>\d+)$")
+
+
+def batch_record(spark, batch_id: int) -> str:
+    """A micro-batch's replay key as the name of its per-batch records
+    (markers, flags, staged data): ``<query id>-batch-<id>`` inside a
+    streaming query, ``batch-<id>`` outside one."""
+    qid = query_id(spark)
+    return f"batch-{batch_id}" if qid is None else f"{qid}-batch-{batch_id}"
+
+
+def parse_batch_record(name: str) -> tuple[str | None, int] | None:
+    """(query id or None, batch id) of a :func:`batch_record` name, or None
+    for any other name."""
+    m = _RECORD.match(name)
+    return None if m is None else (m["owner"], int(m["batch_id"]))
+
+
 def idempotent_foreach_batch(write_fn, marker_dir: str):
     """Wrap a foreachBatch function with the reference sink's batchId guard
     (SINK/LoghubSink.scala:31-38), persisted to ``marker_dir`` so redelivery
-    after driver restart is also skipped (SURVEY.md §7.4.5). The marker
-    ``batch-<id>`` holds the query id (``ok`` outside a query) and skips
-    only that query's replay: a second query with a fresh checkpoint over
-    the same store runs its own batch ids."""
-    import os
-
+    after driver restart is also skipped (SURVEY.md §7.4.5). The marker is
+    named by :func:`batch_record`, so it skips only its own query's replay:
+    a second query with a fresh checkpoint over the same store runs its own
+    batch ids."""
     from spark_streaming_logservice_spark.streaming import storefs
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         storefs.makedirs(marker_dir, exist_ok=True)
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        owner = query_id(batch_df.sparkSession) or "ok"
-        if storefs.exists(marker) and storefs.read_text(marker) == owner:
+        record = batch_record(batch_df.sparkSession, batch_id)
+        marker = storefs.join(marker_dir, record)
+        if storefs.exists(marker):
             return
         write_fn(batch_df, batch_id)
-        storefs.write_text(marker, owner)
+        storefs.write_text(marker, "ok")
 
     return apply

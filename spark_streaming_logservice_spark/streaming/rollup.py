@@ -26,10 +26,10 @@ Scale/correctness posture:
   next merge restores the base from ``.old`` before reading it (without
   this, the retry would compute merged=delta and then delete the only
   surviving copy of the history); (b) a crash after the swap but before the
-  batchId marker replays the batch — the committed version records the
-  producing (query id, batch id) in ``_batch_meta.json``, so the replayed
-  merge is a no-op instead of a double count, while another query's batch
-  with the same id still merges.
+  batchId marker replays the batch — ``_batch_meta.json`` in each version
+  carries forward the last batch id of every query that published into
+  it, so the replayed merge is a no-op instead of a double count, while
+  another query's batch with the same id still merges.
 - State lives in the table, not the state store — the query itself is
   stateless (append mode), so there is no watermark requirement; late rows
   simply merge into their (old) buckets, exactly like the batch rollup.
@@ -139,20 +139,20 @@ def merge_additive(
     Crash recovery (see module docstring): an interrupted swap is healed by
     restoring ``.old`` when the data dir is missing, and with ``batch_id``
     set a replay of an already-committed batch returns without merging
-    (``_batch_meta.json`` inside the committed version names its producer:
-    the streaming query's id, None outside a query, and the batch id; the
-    leading underscore keeps the parquet reader from touching it)."""
-    stamp = None if batch_id is None else {
-        "query_id": query_id(delta.sparkSession), "batch_id": batch_id,
-    }
+    (``_batch_meta.json`` inside the committed version maps each query id
+    that published into it, ``""`` outside a query, to its last batch id;
+    the leading underscore keeps the parquet reader from touching it)."""
+    stamp = None if batch_id is None else (
+        query_id(delta.sparkSession) or "", batch_id
+    )
     if partition_expr is not None:
         _merge_sharded(
             table_dir, delta, key_cols, sum_cols, schema, stamp, aggs,
             partition_expr, combiner,
         )
         return
-    data, done = _recover_swap(table_dir, stamp)
-    if done:
+    data, meta = _recover_swap(table_dir, stamp)
+    if meta is None:
         return
     if storefs.exists(data):
         base = delta.sparkSession.read.schema(schema).parquet(data)
@@ -168,7 +168,7 @@ def merge_additive(
         merged = combiner(delta)
     else:
         merged = delta
-    _commit_swap(table_dir, merged, stamp)
+    _commit_swap(table_dir, merged, meta)
 
 
 def _shard_root(table_dir: str) -> str:
@@ -262,7 +262,7 @@ def _merge_sharded(
     key_cols: list[str],
     sum_cols: list[str],
     schema: str,
-    stamp: dict | None,
+    stamp: tuple[str, int] | None,
     aggs: dict[str, str] | None,
     partition_expr: Column,
     combiner=None,
@@ -292,11 +292,12 @@ def _merge_sharded(
             return
         # shards this batch already committed to (crash between shard
         # publish and the foreachBatch marker) — skip their re-merge
-        todo = []
+        metas = {}
         for pv in dirty:
-            data, done = _recover_swap(os.path.join(root, pv), stamp)
-            if not done:
-                todo.append(pv)
+            _, meta = _recover_swap(os.path.join(root, pv), stamp)
+            if meta is not None:
+                metas[pv] = meta
+        todo = sorted(metas)
         if not todo:
             return
         bases = [
@@ -374,48 +375,56 @@ def _merge_sharded(
                 ).parquet(srcs[pv])
         # publish shard-by-shard: two-phase rename, commit point per shard
         for pv in todo:
-            _publish(os.path.join(root, pv), srcs[pv], stamp)
+            _publish(os.path.join(root, pv), srcs[pv], metas[pv])
         storefs.rmtree(staging, ignore_errors=True)
         _span("publish", t0)
     finally:
         tagged.unpersist()
 
 
-def _recover_swap(table_dir: str, stamp: dict | None) -> tuple[str, bool]:
-    """Heal an interrupted two-phase swap and detect an already-committed
-    batch. Returns (data_dir, already_committed)."""
+def _recover_swap(
+    table_dir: str, stamp: tuple[str, int] | None
+) -> tuple[str, dict | None]:
+    """Heal an interrupted two-phase swap. Returns (data_dir, meta): the
+    committed ``{query id: last batch id}`` with ``stamp``'s batch set, or
+    None when the committed version already holds that batch."""
     data = os.path.join(table_dir, "data")
     old = data + ".old"
     if not storefs.exists(data) and storefs.exists(old):
         # crash landed between rename(data, old) and rename(tmp, data):
         # .old IS the base table — restore it before reading/deleting
         storefs.publish_rename(old, data)
-    meta = os.path.join(data, "_batch_meta.json")
-    if stamp is not None and storefs.exists(meta):
+    meta = {}
+    path = os.path.join(data, "_batch_meta.json")
+    if storefs.exists(path):
         try:
-            if json.loads(storefs.read_text(meta)) == stamp:
-                # crash landed between swap and marker: this batch is
-                # already in the committed version — merging again
-                # would double-count it
-                storefs.rmtree(old, ignore_errors=True)
-                return data, True
+            meta = json.loads(storefs.read_text(path))
         except (OSError, ValueError) as e:
             logger.warning(
-                "unreadable %s (%s): merging batch %s again", meta, e,
-                stamp["batch_id"],
+                "unreadable %s (%s): its batches merge again on replay",
+                path, e,
             )
-    return data, False
+    if stamp is not None:
+        owner, batch_id = stamp
+        if meta.get(owner) == batch_id:
+            # crash landed between swap and marker: this batch is
+            # already in the committed version — merging again
+            # would double-count it
+            storefs.rmtree(old, ignore_errors=True)
+            return data, None
+        meta[owner] = batch_id
+    return data, meta
 
 
-def _publish(table_dir: str, src: str, stamp: dict | None) -> None:
-    """Make ``src`` the store's data dir: write the producer meta into it,
-    move the current version aside, ``rename(src, data)`` (the commit
-    point), drop the old version."""
+def _publish(table_dir: str, src: str, meta: dict | None) -> None:
+    """Make ``src`` the store's data dir: write the producer meta (if any)
+    into it, move the current version aside, ``rename(src, data)`` (the
+    commit point), drop the old version."""
     data = os.path.join(table_dir, "data")
     old = data + ".old"
-    if stamp is not None:
+    if meta:
         storefs.write_text(
-            os.path.join(src, "_batch_meta.json"), json.dumps(stamp)
+            os.path.join(src, "_batch_meta.json"), json.dumps(meta)
         )
     storefs.makedirs(table_dir, exist_ok=True)
     storefs.rmtree(old, ignore_errors=True)
@@ -425,12 +434,12 @@ def _publish(table_dir: str, src: str, stamp: dict | None) -> None:
     storefs.rmtree(old, ignore_errors=True)
 
 
-def _commit_swap(table_dir: str, merged: DataFrame, stamp: dict | None) -> None:
+def _commit_swap(table_dir: str, merged: DataFrame, meta: dict | None) -> None:
     """Write the merged version to ``.tmp`` and atomically publish it."""
     tmp = os.path.join(table_dir, "data.tmp")
     storefs.rmtree(tmp, ignore_errors=True)
     merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _publish(table_dir, tmp, stamp)
+    _publish(table_dir, tmp, meta)
 
 
 def merge_partials(
@@ -568,7 +577,7 @@ def expire_rollup(table_dir: str, older_than, spark: SparkSession) -> int:
     for shard in _shard_dirs(table_dir):
         name = os.path.basename(shard)  # yyyy-MM or yyyy-MM-dd
         edge = cut[: len(name)]
-        data, _ = _recover_swap(shard, None)
+        data, meta = _recover_swap(shard, None)
         if not storefs.exists(data):
             continue
         if name < edge:
@@ -579,7 +588,7 @@ def expire_rollup(table_dir: str, older_than, spark: SparkSession) -> int:
             kept = base.where(F.col("bucket") >= F.lit(older_than))
             n = base.count() - kept.count()
             if n:
-                _commit_swap(shard, kept, None)
+                _commit_swap(shard, kept, meta)
                 dropped += n
     return dropped
 

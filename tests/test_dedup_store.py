@@ -66,27 +66,41 @@ def test_crash_between_digests_and_marker_replays_clean(spark, store):
     apply = dedup_on_ingest(forward, store)
     apply(_batch(spark, [(1, "aa")]), 0)
     # simulate the crash window: digests landed, marker lost
-    os.remove(os.path.join(store, "q-batch-0.done"))
+    os.remove(os.path.join(store, "_markers", "batch-0"))
     apply(_batch(spark, [(1, "aa")]), 0)
     # replay forwards nothing new (its own digests are in the store) and
     # completes the marker; later batches still dedup correctly
     assert forwarded == [(0, [(1, "aa")]), (0, [])]
-    assert os.path.exists(os.path.join(store, "q-batch-0.done"))
+    assert os.path.exists(os.path.join(store, "_markers", "batch-0"))
     apply(_batch(spark, [(2, "aa"), (9, "zz")]), 1)
     assert forwarded[-1] == (1, [(9, "zz")])
 
 
-def test_two_namespaced_queries_share_one_store(spark, store):
+def _as_query(spark, qid):
+    """Run the next batches as if inside streaming query ``qid``'s
+    foreachBatch (None: outside any query)."""
+    spark.sparkContext.setLocalProperty("sql.streaming.queryId", qid)
+
+
+def test_two_queries_share_one_store(spark, store):
     fa, forward_a = _collector()
     fb, forward_b = _collector()
-    qa = dedup_on_ingest(forward_a, store, namespace="qa")
-    qb = dedup_on_ingest(forward_b, store, namespace="qb")
-    qa(_batch(spark, [(1, "aa")]), 0)
-    # qb's batch 0 must NOT be mistaken for qa's replay, and must see qa's
-    # digests (shared corpus memory)
-    qb(_batch(spark, [(2, "aa"), (3, "bb")]), 0)
+    try:
+        _as_query(spark, "query-a")
+        dedup_on_ingest(forward_a, store)(_batch(spark, [(1, "aa")]), 0)
+        # query-b's batch 0 must NOT be mistaken for query-a's replay, and
+        # must see query-a's digests (shared corpus memory)
+        _as_query(spark, "query-b")
+        dedup_on_ingest(forward_b, store)(
+            _batch(spark, [(2, "aa"), (3, "bb")]), 0
+        )
+    finally:
+        _as_query(spark, None)
     assert fa == [(0, [(1, "aa")])]
     assert fb == [(0, [(3, "bb")])]
+    assert sorted(f for f in os.listdir(store) if f.endswith(".parquet")) == [
+        "q-query-a-batch-0.parquet", "q-query-b-batch-0.parquet",
+    ]
 
 
 def test_end_to_end_streaming_dedup(spark, store, tmp_path):
@@ -114,15 +128,20 @@ def test_orphaned_staging_swept_on_next_apply(spark, store):
     forwarded, forward = _collector()
     apply = dedup_on_ingest(forward, store)
     apply(_batch(spark, [(1, "aa")]), 0)
-    orphan = os.path.join(store, "_staging-q-99-dead")
+    orphan = os.path.join(store, "_staging-q-batch-99-dead")
     os.makedirs(orphan)
-    # a CONCURRENT writer's in-flight staging (different namespace) must
-    # survive the sweep — the store explicitly supports shared writers
-    foreign = os.path.join(store, "_staging-pipe-0-inflight")
-    os.makedirs(foreign)
+    # a CONCURRENT writer's in-flight staging (another writer's prefix, or
+    # another query's record) must survive the sweep — the store
+    # explicitly supports shared writers
+    foreign = [
+        os.path.join(store, "_staging-pipe-batch-0-inflight"),
+        os.path.join(store, "_staging-q-query-b-batch-0-inflight"),
+    ]
+    for d in foreign:
+        os.makedirs(d)
     apply(_batch(spark, [(2, "bb")]), 1)
     assert not os.path.exists(orphan)
-    assert os.path.exists(foreign)
+    assert all(os.path.exists(d) for d in foreign)
     assert forwarded[-1] == (1, [(2, "bb")])
 
 
@@ -251,19 +270,3 @@ def test_compaction_under_continuous_ingest_many_batches(spark, tmp_path):
            n_batches + 20)
     assert seen[-1] == [99_998]
 
-
-def test_digit_first_namespace_rejected(spark, store):
-    """A namespace prefixes the writer's batch files and staging dirs, so
-    it must be identifier-shaped (letter first, no '-'): anything else is
-    rejected at factory construction."""
-    import pytest as _pytest
-
-    from spark_streaming_logservice_spark.streaming.ingest_pipeline import (
-        ingest_pipeline,
-    )
-
-    for bad in ("0", "9pipe", "0-q", ""):
-        with _pytest.raises(ValueError, match="namespace"):
-            dedup_on_ingest(lambda df, bid: None, store, namespace=bad)
-        with _pytest.raises(ValueError, match="namespace"):
-            ingest_pipeline(store, lambda df, bid: None, namespace=bad)

@@ -189,9 +189,9 @@ def test_replay_reuses_recorded_decision_never_rescores(spark, pipe, monkeypatch
 
 
 def test_shared_digest_store_namespaces_do_not_collide(spark, tmp_path):
-    """The pipeline's digest appends are namespaced ('pipe') so a
-    dedup_on_ingest stream (default namespace 'q') sharing the store on
-    the same batch ids never makes either writer skip its append."""
+    """The pipeline's digest appends carry their own file prefix ('pipe')
+    so a dedup_on_ingest stream (prefix 'q') sharing the store on the
+    same batch ids never makes either writer skip its append."""
     from spark_streaming_logservice_spark.streaming.dedup_store import (
         dedup_on_ingest,
     )
@@ -208,6 +208,64 @@ def test_shared_digest_store_namespaces_do_not_collide(spark, tmp_path):
     assert files == ["pipe-batch-0.parquet", "q-batch-0.parquet"]
     dig = spark.read.parquet(*[os.path.join(digest_dir, f) for f in files])
     assert dig.count() == len(A0) + len(B0)
+
+
+def _as_query(spark, qid):
+    """Run the next batches as if inside streaming query ``qid``'s
+    foreachBatch (None: outside any query)."""
+    spark.sparkContext.setLocalProperty("sql.streaming.queryId", qid)
+
+
+def test_second_query_scores_fresh_and_keeps_first_quarantine(spark, pipe):
+    """A second query with a fresh checkpoint over the same root starts at
+    batch 0 again. Its batch 0 is scored, not answered from the first
+    query's recorded decision; its quarantined batch 1 stages beside the
+    first query's instead of overwriting it; and per-batch bookkeeping
+    retention and quarantine clearing see both queries' records."""
+    from spark_streaming_logservice_spark.streaming.ingest_pipeline import (
+        expire_pipeline_records,
+    )
+
+    root, apply, sink, alerts = pipe
+    drift_b0 = [(31, "zzz qqq www ttt", "srcB"), (32, "zzz qqq www uuu", "srcB")]
+    drift_b1 = [(41, "zzz qqq www xxx", "srcB"), (42, "zzz qqq www yyy", "srcB")]
+    try:
+        _as_query(spark, "query-a")
+        apply(_df(spark, A0 + B0), 0)
+        apply(_df(spark, A1 + B1_DRIFT), 1)
+        _as_query(spark, "query-b")
+        second = ingest_pipeline(
+            root,
+            lambda df, bid: sink.append(
+                (bid, sorted(r["doc_id"] for r in df.collect()))
+            ),
+            on_alert=lambda bid, scores, qdf: alerts.append(
+                (bid, sorted(s["source"] for s in scores))
+            ),
+            threshold=1.0,
+        )
+        second(_df(spark, drift_b0), 0)
+        second(_df(spark, drift_b1), 1)
+    finally:
+        _as_query(spark, None)
+    # query A's batch 0 recorded "no source flagged"; query B's drifted
+    # batch 0 must be scored on its own and quarantined, not forwarded
+    assert alerts == [(1, ["srcB"]), (0, ["srcB"]), (1, ["srcB"])]
+    assert sink[2:] == [(0, []), (1, [])]
+    staged = read_quarantine(spark, root, SCHEMA)
+    assert sorted(r["doc_id"] for r in staged.collect()) == [
+        13, 14, 15, 31, 32, 41, 42,
+    ]
+    # retention keeps the newest batch of EACH query
+    assert expire_pipeline_records(root, keep_last=1) == 4
+    assert sorted(os.listdir(os.path.join(root, "_markers"))) == [
+        "query-a-batch-1", "query-b-batch-1",
+    ]
+    # a batch id clears that batch of every query
+    assert clear_quarantine(root, [1]) == 2
+    assert sorted(r["doc_id"] for r in read_quarantine(
+        spark, root, SCHEMA
+    ).collect()) == [31, 32]
 
 
 def test_pipeline_through_real_stream_with_restart(spark, tmp_path):
@@ -279,11 +337,11 @@ def test_expire_pipeline_records_keeps_replay_horizon(spark, pipe):
 
 
 def test_pipeline_digest_compaction_many_batches(spark, tmp_path):
-    """VERDICT r11 item 6: the pipeline writes namespaced digest files into
+    """VERDICT r11 item 6: the pipeline writes prefixed digest files into
     the same store layout dedup_on_ingest uses, so compact_digest_store
     must apply unchanged over a MANY-batch pipeline store — dedup history
     intact afterwards, completed-batch replay still a marker no-op, and a
-    concurrent q-namespace writer's appends survive the same compaction."""
+    concurrent q-prefix writer's appends survive the same compaction."""
     from spark_streaming_logservice_spark.streaming.dedup_store import (
         _store_files,
         compact_digest_store,
@@ -300,7 +358,7 @@ def test_pipeline_digest_compaction_many_batches(spark, tmp_path):
         ),
         threshold=2.1,  # above the L1 max: every batch takes the clean path
     )
-    # share the store with a q-namespace writer, interleaved with the
+    # share the store with a q-prefix writer, interleaved with the
     # pipeline's own appends
     qseen: list[list] = []
     qingest = dedup_on_ingest(
@@ -316,7 +374,7 @@ def test_pipeline_digest_compaction_many_batches(spark, tmp_path):
         apply(_df(spark, rows), i)
     qingest(_df(spark, [(500, "q-doc", "srcQ"), (501, "pipe-doc-3", "srcQ")]), 0)
     assert all(fwd == [2 * i] for i, (_, fwd) in enumerate(sink))
-    # the store's HISTORY is shared across namespaces: the q writer's probe
+    # the store's HISTORY is shared across writers: the q writer's probe
     # already sees the pipeline's "pipe-doc-3" digest and suppresses 501
     assert qseen == [[500]]
     # pipe-batch-N files + q-batch-0
@@ -326,7 +384,7 @@ def test_pipeline_digest_compaction_many_batches(spark, tmp_path):
     assert retired == n_batches + 1
     assert len(_store_files(digest_dir)) == 1
 
-    # full cross-namespace dedup history survives compaction: every past
+    # full cross-writer dedup history survives compaction: every past
     # pipeline doc AND the q writer's doc are still suppressed
     apply(
         _df(

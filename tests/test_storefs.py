@@ -79,7 +79,7 @@ def test_dedup_store_routes_through_seam(spark, tmp_path):
     # backend
     assert rec.calls["publish_rename"] >= 1  # _staging -> final parquet
     assert rec.calls["write_text"] >= 1      # batch marker
-    assert rec.calls["listdir"] >= 1         # namespace-scoped sweep
+    assert rec.calls["listdir"] >= 1         # query-scoped staging sweep
     assert os.path.exists(os.path.join(store, "q-batch-0.parquet"))
 
 

@@ -90,7 +90,7 @@ def test_dedup_store_ingest_crash_replay_cycle(spark, env):
     # crash window: digests committed, marker lost -> replay forwards the
     # empty novel set and completes the marker (the seam is the ONLY view
     # of the marker: on hybrid it never touches the physical filesystem)
-    marker = storefs.join(store, "q-batch-0.done")
+    marker = storefs.join(store, "_markers", "batch-0")
     assert storefs.exists(marker)
     if env.name == "hybrid":
         assert not os.path.exists(marker), (
@@ -183,7 +183,7 @@ def test_rollup_merge_additive_replay_guard(spark, env):
         assert storefs.exists(meta) and not os.path.exists(meta)
         import json
 
-        assert json.loads(storefs.read_text(meta))["batch_id"] == 1
+        assert json.loads(storefs.read_text(meta)) == {"": 1}
 
 
 def test_ingest_pipeline_composed_gate_on_both_backends(spark, env):

@@ -185,7 +185,7 @@ def test_merge_touches_only_dirty_shards(spark, tmp_path):
         for f in sorted(os.listdir(jan))
     }
     with open(os.path.join(jan, "_batch_meta.json")) as f:
-        assert json.load(f)["batch_id"] == 0
+        assert json.load(f) == {"": 0}
 
     R.merge_partials(
         table, R.minute_partials(_batch(spark, [("2024-03-09 11:00:10", "error")])),
@@ -213,7 +213,7 @@ def test_multi_shard_batch_publishes_each_shard_atomically(spark, tmp_path):
     for month in ("2024-01", "2024-02"):
         meta = os.path.join(table, "parts", month, "data", "_batch_meta.json")
         with open(meta) as f:
-            assert json.load(f)["batch_id"] == 3
+            assert json.load(f) == {"": 3}
     once = R.read_rollup(spark, table).agg(F.sum("n_events")).collect()[0][0]
     R.merge_partials(table, R.minute_partials(_batch(spark, rows)), batch_id=3)
     again = R.read_rollup(spark, table).agg(F.sum("n_events")).collect()[0][0]
@@ -315,6 +315,35 @@ def test_batch_meta_guard_is_scoped_by_query(spark, tmp_path):
         _as_query(spark, None)
     got = R.read_store(spark, table, R._SCHEMA).agg(F.sum("n_events"))
     assert got.collect()[0][0] == 2
+
+
+def test_batch_meta_keeps_every_query_across_interleaved_commits(
+    spark, tmp_path
+):
+    """Query A crashes after its swap (no marker), query B then commits the
+    same batch id to the same shard, and A's replay arrives last: the
+    shard's _batch_meta.json still holds A's batch, so A's rows count
+    once — the meta carries every publishing query forward, not just the
+    last one."""
+    import json
+
+    table = str(tmp_path / "rollup")
+    a = _batch(spark, [("2024-01-05 10:00:10", "click")])
+    b = _batch(spark, [("2024-01-05 10:00:20", "error")] * 2)
+    try:
+        _as_query(spark, "query-a")
+        R.merge_partials(table, R.minute_partials(a), batch_id=5)
+        _as_query(spark, "query-b")
+        R.merge_partials(table, R.minute_partials(b), batch_id=5)
+        _as_query(spark, "query-a")
+        R.merge_partials(table, R.minute_partials(a), batch_id=5)  # replay
+    finally:
+        _as_query(spark, None)
+    got = R.read_store(spark, table, R._SCHEMA).collect()
+    assert [(r["n_events"], r["n_errors"]) for r in got] == [(3, 2)]
+    meta = os.path.join(table, "parts", "2024-01", "data", "_batch_meta.json")
+    with open(meta) as f:
+        assert json.load(f) == {"query-a": 5, "query-b": 5}
 
 
 def test_unreadable_batch_meta_is_logged(spark, tmp_path, caplog):
